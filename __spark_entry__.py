@@ -296,13 +296,9 @@ def j5(spark, sf):
         F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("u"),
         F.concat(F.lit("e"), F.col("event_type")).alias("v"),
     ).distinct()
-    # assume_dedup: the distinct above already dedups; skipping the
-    # operator's defensive re-distinct drops one shuffle (labels unchanged).
-    # assume_no_self_loops: the "u"/"e" prefixes make u == v impossible, so
-    # the roll-up's self-loop recovery pass (a second read of the events
-    # scan) is skipped too.
+    # assume_no_self_loops: the "u"/"e" prefixes make u == v impossible
     return (
-        connected_components(edges, assume_dedup=True, assume_no_self_loops=True)
+        connected_components(edges, assume_no_self_loops=True)
         .select("node", "cluster_id")
         .orderBy("node")
     )
@@ -340,7 +336,7 @@ def j6(spark, sf):
         F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("u"),
         F.concat(F.lit("e"), F.col("event_type")).alias("v"),
     ).distinct()
-    cc = connected_components(edges, assume_dedup=True, assume_no_self_loops=True)
+    cc = connected_components(edges, assume_no_self_loops=True)
     sizes = cc.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     return (
         sizes.groupBy("cluster_size").agg(F.count("*").alias("n_clusters"))

@@ -165,7 +165,9 @@ def _flagship_stages(spark, sf_dir: str) -> dict[str, float]:
     cand = _timed("candidates", pairs.candidate_pairs(keys, max_block_size=500))
     scored = _timed("scoring", scoring.score_pairs(cand, records))
     t0 = time.perf_counter()
-    cluster.connected_components(scoring.matched_edges(scored)).count()
+    cluster.connected_components(
+        scoring.matched_edges(scored), assume_no_self_loops=True
+    ).count()
     stages["cc"] = round(time.perf_counter() - t0, 3)
     for df in (records, keys, cand, scored):
         df.unpersist()

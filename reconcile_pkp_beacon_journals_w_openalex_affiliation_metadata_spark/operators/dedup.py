@@ -428,14 +428,14 @@ def near_dup_groups_from_edges(
 ) -> DataFrame:
     """Cluster roll-up over an explicit near-dup edge set (u, v).
 
-    Alternating-star connected components -> per-cluster roll-up: keeper =
+    Connected components -> per-cluster roll-up: keeper =
     min doc id (== the CC cluster_id invariant), true member count, sorted
     member list. Factored out of :func:`near_dup_groups` so the roll-up is
     testable (and reusable) independent of which blocking family produced
     the edges. ``assume_no_self_loops`` passes through to
     :func:`cluster.connected_components`; the pair-generator callers set it
-    (``left_id < right_id`` by construction) so CC never re-evaluates the
-    expensive LSH pair DAG for its roll-up.
+    (``left_id < right_id`` by construction) so CC's large-star/small-star
+    path skips its self-loop pass.
     """
     from .cluster import connected_components
 
@@ -487,8 +487,7 @@ def near_dup_groups(
     """
     pairs = minhash_lsh_pairs(df, id_col, text_col, **lsh_kwargs)
     edges = pairs.select(F.col("left_id").alias("u"), F.col("right_id").alias("v"))
-    # left_id < right_id by construction -> CC's roll-up never needs the
-    # self-loop pass (which would re-evaluate this whole LSH pair DAG)
+    # left_id < right_id by construction -> no u == v rows for CC to keep
     return near_dup_groups_from_edges(
         edges, members_cap=members_cap, assume_no_self_loops=True
     )

@@ -12,8 +12,10 @@ is already committed. This plan recomputes exactly the delta:
 - connected components SEEDED with the previous assignment: the committed
   (node, cluster_id) rows are a star forest that already encodes the old
   transitive closure, so CC runs over [old stars + delta matched edges] —
-  same fixpoint as CC over all edges, reached in O(log n) rounds on a far
-  smaller edge set.
+  same fixpoint as CC over all edges. Below ``cluster.ONE_TASK_MAX_EDGES``
+  that edge set is labelled in one task (4-5 Spark jobs); above it, in
+  O(log n) large-star/small-star rounds on a far smaller edge set than a
+  rebuild's.
 
 Every stage commits through the catalog, so the incremental run is itself
 resumable; the merged tables it publishes are byte-compatible with a full

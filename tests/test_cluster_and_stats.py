@@ -3,11 +3,15 @@
 from __future__ import annotations
 
 import statistics
+from unittest import mock
 
-from hypothesis import given, settings
+import numpy as np
+import pytest
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators import cluster
 from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators.cluster import (
     connected_components,
 )
@@ -44,12 +48,21 @@ def _cc_oracle(edges):
     return out
 
 
-def _run_cc(spark, edges):
+def _run_cc(spark, edges, **kw):
     df = spark.createDataFrame(edges, schema="u string, v string")
-    return {r["node"]: r["cluster_id"] for r in connected_components(df).collect()}
+    return {r["node"]: r["cluster_id"] for r in connected_components(df, **kw).collect()}
 
 
-def test_cc_chain(spark):
+@pytest.fixture(params=["one_task", "star"])
+def cc_path(request, monkeypatch):
+    """Run the test on either CC path; a bound of 0 edges forces the
+    large-star/small-star rounds."""
+    if request.param == "star":
+        monkeypatch.setattr(cluster, "ONE_TASK_MAX_EDGES", 0)
+    return request.param
+
+
+def test_cc_chain(spark, cc_path):
     # a long chain stresses the log-round convergence
     edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(40)]
     got = _run_cc(spark, edges)
@@ -57,29 +70,83 @@ def test_cc_chain(spark):
     assert len(got) == 41
 
 
-def test_cc_two_components_and_star(spark):
+def test_cc_two_components_and_star(spark, cc_path):
     edges = [("b", "a"), ("c", "a"), ("x", "y"), ("z", "y")]
     got = _run_cc(spark, edges)
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "x"}
 
 
+def test_cc_star_path_raises_when_not_converged(spark, monkeypatch):
+    monkeypatch.setattr(cluster, "ONE_TASK_MAX_EDGES", 0)
+    edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(39)]
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _run_cc(spark, edges, max_iter=1)
+
+
+def test_cc_small_graph_runs_few_jobs(spark):
+    """The one-task path: checkpoint, count and the labelling collect —
+    not several jobs per star round (63 on this chain before it existed)."""
+    sc = spark.sparkContext
+    group = "test_cc_small_graph_runs_few_jobs"
+    edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(40)]
+    df = spark.createDataFrame(edges, schema="u string, v string")
+    sc.setJobGroup(group, group)
+    try:
+        got = connected_components(df).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(got) == 41
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+
+
+def test_cc_keeps_id_type(spark, cc_path):
+    df = spark.createDataFrame([(3, 1), (2, 3), (10, 11), (7, 7)], schema="u bigint, v bigint")
+    out = connected_components(df)
+    assert [f.dataType.simpleString() for f in out.schema.fields] == ["bigint", "bigint"]
+    got = {r["node"]: r["cluster_id"] for r in out.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 10: 10, 11: 10}
+
+
+# Ids that sort differently by UTF-16 code unit (Java String order) than by
+# code point (Spark's UTF-8 byte order): U+FF5E vs the astral U+1F600.
+_IDS = ["a", "b", "B", "v00", "v01", "é", "ß", "日本", "\uff5e", "\U0001f600"]
+
+
 @given(
     st.lists(
-        st.tuples(st.integers(0, 25), st.integers(0, 25)).map(
-            lambda t: (f"v{t[0]:02d}", f"v{t[1]:02d}")
-        ),
-        min_size=1,
+        st.tuples(st.sampled_from(_IDS + [None]), st.sampled_from(_IDS + [None])),
         max_size=30,
     )
 )
-@settings(max_examples=8, deadline=None)
+@example([])
+@example([("a", None), ("a", "a"), ("a", "a"), ("\uff5e", "\U0001f600")])
+@settings(max_examples=10, deadline=None)
 def test_cc_matches_union_find(spark, edges):
-    edges = [e for e in edges if e[0] != e[1]]
-    if not edges:
-        return
-    got = _run_cc(spark, edges)
-    want = _cc_oracle(edges)
-    assert got == want
+    """Both paths equal the union-find oracle, over self-loops, duplicate
+    rows, null endpoints (ignored), non-ASCII ids and the empty edge set."""
+    want = _cc_oracle([(u, v) for u, v in edges if u is not None and v is not None])
+    one_task = _run_cc(spark, edges)
+    with mock.patch.object(cluster, "ONE_TASK_MAX_EDGES", 0):
+        star = _run_cc(spark, edges)
+    assert one_task == want
+    assert star == want
+
+
+def test_min_roots_matches_union_find():
+    """The one-task path's numpy kernel alone, on 3,000 seeded random
+    graphs (sparse to dense, many hook/jump passes) and a long permuted
+    path — far more shapes than the Spark examples can afford."""
+    rng = np.random.default_rng(7)
+    graphs = [
+        (n, rng.integers(0, n, (int(rng.integers(0, 2 * n)), 2)))
+        for n in rng.integers(1, 40, 3000).tolist()
+    ]
+    perm = rng.permutation(2000)
+    graphs.append((2000, np.stack([perm[:-1], perm[1:]], axis=1)))
+    for n, e in graphs:
+        root = cluster._min_roots(e[:, 0], e[:, 1], n)
+        want = _cc_oracle([tuple(r) for r in e.tolist()] + [(i, i) for i in range(n)])
+        assert root.tolist() == [want[i] for i in range(n)], e.tolist()
 
 
 def _scored_fixture(spark):

@@ -1,6 +1,6 @@
 """Focused tests for the r6 optimization internals: the per-bucket ANN
 top-k kernel, the Arrow-batched norm, the one-shuffle LSH cap, and the
-CC assume_dedup fast path — each asserting equivalence with the (slower)
+CC roll-up and self-loop flag — each asserting equivalence with the (slower)
 formulation it replaced, on adversarial inputs the driver data does not
 exercise (rounding-boundary ties, sub-k buckets, null embeddings)."""
 
@@ -236,29 +236,26 @@ def test_lsh_window_cap_equals_antijoin_cap(spark):
     assert len(new) > 0
 
 
-def test_cc_assume_dedup_labels_identical(spark):
-    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators.cluster import (
-        connected_components,
+def _cc_both_paths(edges, monkeypatch, **kw):
+    """CC labels as a row set, asserting the one-task path and the
+    large-star/small-star path (forced by a bound of 0 edges) agree."""
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators import (
+        cluster,
     )
 
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f")], ["u", "v"]
-    ).distinct()
-    base = {tuple(r) for r in connected_components(edges).collect()}
-    fast = {tuple(r) for r in connected_components(edges, assume_dedup=True).collect()}
-    assert base == fast
-    assert ("f", "f") in fast  # self-loop-only node kept as singleton
+    one_task = {tuple(r) for r in cluster.connected_components(edges, **kw).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(cluster, "ONE_TASK_MAX_EDGES", 0)
+        star = {tuple(r) for r in cluster.connected_components(edges, **kw).collect()}
+    assert one_task == star
+    return one_task
 
 
-def test_cc_rollup_selfloops_mixed_with_real_edges(spark):
+def test_cc_rollup_selfloops_mixed_with_real_edges(spark, monkeypatch):
     """r6 roll-up rewrite: roots come from distinct cluster_ids of the
     converged star graph and self-loop singletons from a filtered input
     pass — a self-loop on a MEMBER, on a ROOT, and on an isolated node
     must all resolve exactly as the all_nodes formulation did."""
-    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators.cluster import (
-        connected_components,
-    )
-
     edges = spark.createDataFrame(
         [
             ("b", "a"), ("c", "b"),      # chain: component min = a
@@ -269,7 +266,7 @@ def test_cc_rollup_selfloops_mixed_with_real_edges(spark):
         ],
         ["u", "v"],
     )
-    got = {tuple(r) for r in connected_components(edges).collect()}
+    got = _cc_both_paths(edges, monkeypatch)
     assert got == {
         ("a", "a"), ("b", "a"), ("c", "a"),
         ("x", "x"), ("y", "x"),
@@ -277,35 +274,33 @@ def test_cc_rollup_selfloops_mixed_with_real_edges(spark):
     }
 
 
-def test_cc_assume_no_self_loops_identical_when_none(spark):
+def test_cc_assume_no_self_loops_identical_when_none(spark, monkeypatch):
     """On a self-loop-free edge set the flag changes the plan (no second
     input pass), never the assignment."""
-    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators.cluster import (
-        connected_components,
-    )
-
     edges = spark.createDataFrame(
         [("b", "a"), ("c", "a"), ("q", "p"), ("r", "q"), ("m", "n")],
         ["u", "v"],
     ).distinct()
-    base = {tuple(r) for r in connected_components(edges).collect()}
-    fast = {
-        tuple(r)
-        for r in connected_components(
-            edges, assume_dedup=True, assume_no_self_loops=True
-        ).collect()
-    }
+    base = _cc_both_paths(edges, monkeypatch)
+    fast = _cc_both_paths(edges, monkeypatch, assume_no_self_loops=True)
     assert base == fast
 
 
-def test_cc_assume_no_self_loops_contract_drops_selfloop_only(spark):
+def test_cc_assume_no_self_loops_contract_drops_selfloop_only(spark, monkeypatch):
     """The documented flag contract: a node seen ONLY in u == v rows is
-    dropped when the caller promises there are none. (Callers with real
-    self-loop rows — the incremental seed edges — must keep the default.)"""
-    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators.cluster import (
-        connected_components,
-    )
-
+    dropped when the caller promises there are none, and kept as a
+    singleton by default. (Callers with real self-loop rows — the
+    incremental seed edges — must keep the default.)"""
     edges = spark.createDataFrame([("b", "a"), ("f", "f")], ["u", "v"])
-    got = {tuple(r) for r in connected_components(edges, assume_no_self_loops=True).collect()}
+    got = _cc_both_paths(edges, monkeypatch, assume_no_self_loops=True)
     assert got == {("a", "a"), ("b", "a")}
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f")], ["u", "v"]
+    ).distinct()
+    assert _cc_both_paths(edges, monkeypatch) == {
+        ("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d"), ("f", "f"),
+    }
+    assert _cc_both_paths(edges, monkeypatch, assume_no_self_loops=True) == {
+        ("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d"),
+    }

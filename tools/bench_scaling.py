@@ -177,7 +177,9 @@ def leg_layer2_staged(cores: int) -> dict:
     stages["scoring"] = round(time.perf_counter() - t0, 2)
 
     t0 = time.perf_counter()
-    clusters = cluster.connected_components(scoring.matched_edges(scored))
+    clusters = cluster.connected_components(
+        scoring.matched_edges(scored), assume_no_self_loops=True
+    )
     n_clusters = clusters.select("cluster_id").distinct().count()
     stages["cc"] = round(time.perf_counter() - t0, 2)
 
