@@ -1671,56 +1671,17 @@ SELECT left_id, right_id, cos_sim FROM (
 @_q("x4_ann_lsh_topk", _x4_oracle())
 def x4(spark, sf):
     # LSH-bucketed ANN: random-hyperplane signs -> per-bucket exact cosine
-    # -> top-3 (the scale path; t6 is the brute-force baseline).
-    # r6 shape: the bucket SELF-JOIN + per-pair Arrow dot (which serialized
-    # both embeddings across the Python boundary once per PAIR — O(pairs x
-    # dim) bytes) is replaced by ONE groupBy(bucket).applyInPandas kernel
-    # that sees each bucket's vectors once (O(n x dim) bytes, one shuffle)
-    # and emits only the pairs that can still reach the rounded top-3 (a
-    # provable superset — see make_bucket_topk_pairs_kernel); the unrounded
-    # cosine it emits is bit-exact with the join formulation (same
-    # sequential dot fold, same per-row norms, same division), and the
-    # round + window + final sort below are unchanged.
-    import numpy as np
-
-    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.functions.udfs import (
-        make_bucket_topk_pairs_kernel,
-        make_hyperplane_bucket_norm_udf,
+    # -> top-3 (the scale path; t6 is the brute-force baseline). Same
+    # 8 planes (seed 7) as x7; one per-bucket kernel scores each bucket.
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators.dedup import (
+        embedding_bucket_keys,
     )
-    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.partitioning import (
-        spread,
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators.similarity_search import (
+        hyperplane_bucket_pairs,
     )
 
-    emb = spread(_t(spark, sf, "embeddings"))
-    rng = np.random.RandomState(7)
-    planes = rng.randn(8, 64).tolist()  # 8 hyperplanes -> 256 buckets
-    bn = make_hyperplane_bucket_norm_udf(planes)
-    withb = emb.select("vec_id", "embedding", bn(F.col("embedding")).alias("_bn")).select(
-        "vec_id",
-        F.col("embedding").alias("v"),
-        F.col("_bn.bucket").alias("bucket"),
-        F.col("_bn.nrm").alias("nrm"),
-    )
-    pairs = withb.groupBy("bucket").applyInPandas(
-        make_bucket_topk_pairs_kernel(k=3, round_decimals=3),
-        schema="left_id long, right_id long, dot double, lnrm double, rnrm double",
-    ).select(
-        "left_id", "right_id",
-        # the division runs in the JVM — identical expression (and NaN/inf
-        # semantics) to the join formulation; + 0.0 folds -0.0
-        # (bit-sensitive driver hash; see oracle)
-        (F.round(F.col("dot") / (F.col("lnrm") * F.col("rnrm")), 3)
-         + F.lit(0.0)).alias("cos_sim"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("left_id").orderBy(F.col("cos_sim").desc(), F.col("right_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .select("left_id", "right_id", "cos_sim")
-        .orderBy("left_id", "right_id")
-    )
+    keyed = embedding_bucket_keys(_t(spark, sf, "embeddings"), dim=64)
+    return hyperplane_bucket_pairs(keyed, decimals=3, k=3).orderBy("left_id", "right_id")
 
 
 # Independent DuckDB re-implementation of the corpus filter (main.rs:216-315):
@@ -3136,7 +3097,8 @@ def _x16_oracle() -> str:
 def x16(spark, sf):
     # incremental embedding near-dup: the corpus is hyperplane-bucketed ONCE
     # (committed embedding_bucket_keys); each batch buckets only itself and
-    # joins new x all — the 5th dedup family's delta, driver-checked
+    # the per-bucket kernel scores only pairs with a new endpoint — the 5th
+    # dedup family's delta, driver-checked
     from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators.dedup import (
         delta_embedding_near_dup,
         embedding_bucket_keys,

@@ -277,33 +277,26 @@ def make_minhash_signature_udf(num_perm: int = 64, shingle_k: int = 3, seed: int
     return _udf
 
 
-def make_hyperplane_bucket_norm_udf(planes):
-    """Arrow-batched (bucket, norm) pass for hyperplane LSH.
+def make_hyperplane_bucket_udf(planes):
+    """Arrow-batched sign-bit bucket pass for hyperplane LSH.
 
     BIT-EXACT with the higher-order-function formulation it replaces
-    (``aggregate(zip_with(...))`` left fold from 0.0): each plane dot and
-    the squared norm accumulate with the SAME left-to-right IEEE double
-    additions — ``acc = acc + float64(v_j) * p_j`` one dimension at a time,
-    vectorized across the batch rows, never ``np.dot`` (whose pairwise
-    summation order could flip a value at a round() boundary; the driver
-    hash is bit-sensitive). Null embedding rows keep the old semantics:
-    bucket '' (concat_ws over all-null bits), norm NULL.
+    (``aggregate(zip_with(...))`` left fold from 0.0): each plane dot
+    accumulates with the SAME left-to-right IEEE double additions —
+    ``acc = acc + float64(v_j) * p_j`` one dimension at a time, vectorized
+    across the batch rows, never ``np.dot`` (whose pairwise summation order
+    could flip a sign bit; the driver hash is bit-sensitive). Null
+    embedding rows keep the old semantics: bucket '' (concat_ws over
+    all-null bits).
     """
     import numpy as np
 
     P = np.asarray(planes, dtype=np.float64)  # (n_planes, dim)
-    out_t = T.StructType(
-        [T.StructField("bucket", T.StringType()), T.StructField("nrm", T.DoubleType())]
-    )
 
-    @F.pandas_udf(out_t)
-    def _udf(vs: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
+    @F.pandas_udf(T.StringType())
+    def _udf(vs: pd.Series) -> pd.Series:
         mask = vs.notna().to_numpy()
-        n = len(vs)
-        buckets = np.full(n, "", dtype=object)
-        norms = np.full(n, np.nan)
+        buckets = np.full(len(vs), "", dtype=object)
         if mask.any():
             V = np.stack(vs[mask].to_numpy()).astype(np.float64)  # (m, dim)
             if V.shape[1] != P.shape[1]:
@@ -315,149 +308,16 @@ def make_hyperplane_bucket_norm_udf(planes):
                 )
             m = V.shape[0]
             bits = np.empty((P.shape[0], m), dtype=bool)
-            nacc = np.zeros(m)
             for i in range(P.shape[0]):
                 acc = np.zeros(m)
                 for j in range(P.shape[1]):
                     acc += V[:, j] * P[i, j]  # sequential fold, HOF order
                 bits[i] = acc > 0
-            for j in range(P.shape[1]):
-                nacc += V[:, j] * V[:, j]
             chars = np.where(bits, "1", "0")
             buckets[mask] = ["".join(row) for row in chars.T]
-            norms[mask] = np.sqrt(nacc)
-        return pd.DataFrame(
-            {"bucket": buckets, "nrm": pd.Series(norms).where(pd.Series(mask))}
-        )
+        return pd.Series(buckets, index=vs.index)
 
     return _udf
-
-
-def make_bucket_topk_pairs_kernel(k: int, round_decimals: int):
-    """Per-bucket candidate generator for hyperplane-LSH top-k (x4 family).
-
-    Replaces the bucket SELF-JOIN + per-pair Arrow dot: the join shipped
-    BOTH 64-float embeddings across the Python boundary once per PAIR
-    (O(pairs x dim) serialization — the x4 wall at scale), where this
-    ``applyInPandas`` kernel receives each bucket's rows ONCE (O(n x dim))
-    and emits only the pairs that can still reach the top-k after rounding.
-
-    Exactness: the kernel emits ``(dot, lnrm, rnrm)`` — NOT the cosine —
-    and the caller applies the identical ``round(dot/(lnrm*rnrm), d)``
-    expression the join formulation used, so the division happens in the
-    JVM with JVM semantics (0.0/0.0 = NaN, x/0.0 = ±Infinity — a
-    pandas-emitted NaN would be silently converted to NULL at the Arrow
-    boundary and rank LAST where the JVM NaN ranks FIRST). The dot is the
-    same left-to-right sequential fold (vectorized across pairs, one
-    dimension at a time) and the norms are the same per-row values, so
-    every surviving pair's doubles are bit-equal to the join's. Pruning is
-    a superset filter: per left id, every pair whose cosine is within
-    ``2 * 10^-round_decimals`` of the k-th best is kept (rounding moves a
-    value by at most half an ulp of the decimal grid, so anything below
-    that margin can neither tie nor beat the kept k after rounding; ties
-    ON the rounded grid are all retained for the window's right_id
-    tie-break). Rank mapping mirrors Spark's descending order: a NaN
-    cosine from a zero norm ranks first (mapped to +inf — collides with a
-    true +Infinity cosine, which only widens the kept superset, never
-    narrows it), a NaN DOT (NaN vector component) becomes NULL at the
-    boundary exactly as the old ``seq_dot_udf`` did and ranks last
-    (mapped to -inf); null-embedding rows (their bucket is '') emit null
-    dot/norms — null cosines, window-ordered last — and keep the k
-    smallest right ids per left.
-
-    One bucket is one pandas group: bucket population is corpus/2^n_planes
-    on average, so n_planes must scale with the corpus (it must anyway —
-    pair volume is quadratic per bucket; that is inherent to bucketed ANN,
-    not to this kernel).
-    """
-    import numpy as np
-
-    margin = 2.0 * (10.0 ** -round_decimals)
-    empty = pd.DataFrame(
-        {"left_id": pd.Series([], dtype="int64"),
-         "right_id": pd.Series([], dtype="int64"),
-         "dot": pd.Series([], dtype="float64"),
-         "lnrm": pd.Series([], dtype="float64"),
-         "rnrm": pd.Series([], dtype="float64")}
-    )
-
-    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        if m < 2:
-            return empty
-        order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
-        ids = pdf["vec_id"].to_numpy()[order]
-        vecs = pdf["v"].to_numpy()[order]
-        if vecs[0] is None:
-            # the all-null bucket: dot/norms are null, cosines null, the
-            # window orders them last and ties break by right_id asc —
-            # keep k smallest per left
-            lefts: list = []
-            rights: list = []
-            for i in range(m - 1):
-                for j in range(i + 1, min(i + 1 + k, m)):
-                    lefts.append(ids[i])
-                    rights.append(ids[j])
-            nan = np.full(len(lefts), np.nan)  # NaN -> NULL at the boundary
-            return pd.DataFrame(
-                {"left_id": np.asarray(lefts, dtype=np.int64),
-                 "right_id": np.asarray(rights, dtype=np.int64),
-                 "dot": nan, "lnrm": nan, "rnrm": nan}
-            )
-        X = np.stack(vecs).astype(np.float64)
-        nrm = pdf["nrm"].to_numpy(dtype=np.float64)[order]
-        dim = X.shape[1]
-        out_l: list = []
-        out_r: list = []
-        out_d: list = []
-        out_ln: list = []
-        out_rn: list = []
-        # chunk the left range so the pair workspace stays bounded
-        max_pairs = 4_000_000
-        i0 = 0
-        while i0 < m - 1:
-            i1 = i0
-            total = 0
-            while i1 < m - 1 and (total == 0 or total + (m - 1 - i1) <= max_pairs):
-                total += m - 1 - i1
-                i1 += 1
-            counts = np.arange(m - 1 - i0, m - 1 - i1, -1)
-            ii = np.repeat(np.arange(i0, i1), counts)
-            jj = np.concatenate([np.arange(i + 1, m) for i in range(i0, i1)])
-            acc = np.zeros(total)
-            for d in range(dim):
-                acc += X[ii, d] * X[jj, d]  # sequential fold, join-order
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / (nrm[ii] * nrm[jj])
-            # Spark's desc order: NaN cosine first, ±inf/finite by value,
-            # NULL (from a NaN dot) last — see docstring for the collisions
-            rankv = np.where(np.isnan(acc), -np.inf,
-                             np.where(np.isnan(cos), np.inf, cos))
-            starts = np.zeros(i1 - i0, dtype=np.intp)
-            np.cumsum(counts[:-1], out=starts[1:])
-            for b, i in enumerate(range(i0, i1)):
-                s, e = starts[b], starts[b] + counts[b]
-                blk = rankv[s:e]
-                if counts[b] <= k:
-                    keep = np.arange(s, e)
-                else:
-                    kth = np.partition(blk, len(blk) - k)[len(blk) - k]
-                    keep = s + np.nonzero(blk >= kth - margin)[0]
-                out_l.append(ids[ii[keep]])
-                out_r.append(ids[jj[keep]])
-                out_d.append(acc[keep])
-                out_ln.append(nrm[ii[keep]])
-                out_rn.append(nrm[jj[keep]])
-            i0 = i1
-        return pd.DataFrame(
-            {"left_id": np.concatenate(out_l),
-             "right_id": np.concatenate(out_r),
-             "dot": np.concatenate(out_d),
-             "lnrm": np.concatenate(out_ln),
-             "rnrm": np.concatenate(out_rn)}
-        )
-
-    return kern
 
 
 @F.pandas_udf(T.DoubleType())
@@ -483,7 +343,7 @@ def seq_norm_udf(a: pd.Series) -> pd.Series:
 @F.pandas_udf(T.DoubleType())
 def seq_dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """Pairwise dot product with the HOF fold's exact addition order (see
-    ``make_hyperplane_bucket_norm_udf``); one Arrow crossing per batch."""
+    ``make_hyperplane_bucket_udf``); one Arrow crossing per batch."""
     import numpy as np
 
     mask = (a.notna() & b.notna()).to_numpy()

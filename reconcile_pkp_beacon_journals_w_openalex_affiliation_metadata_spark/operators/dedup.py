@@ -2,15 +2,17 @@
 
 Five strategies over a (id, text) corpus — each returns a DataFrame of
 duplicate groups or near-dup pairs. At 100 TB the shape that matters is:
-keys computed locally (map-only), ONE shuffle per strategy (the groupBy or
-band self-join), hot band keys capped.
+keys computed locally (map-only), ONE shuffle per strategy (the groupBy,
+band self-join or bucket grouping), hot band keys capped.
 
 - exact:          hash-groupBy on the full normalized text
 - minhash_lsh:    shingle -> minhash -> band -> bucket self-join
 - simhash:        64-bit simhash, pairs within hamming radius via 4-way
                   block rotation (Manku et al., WWW'07 table approach)
 - ngram_jaccard:  character n-gram Jaccard verify on LSH candidates
-- embedding:      cosine near-dup over an embedding column
+- embedding:      cosine near-dup over an embedding column: hyperplane
+                  sign bits -> one per-bucket kernel
+                  (``similarity_search.hyperplane_bucket_pairs``)
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ from pyspark.sql import types as T
 
 from ..functions.udfs import make_minhash_bands_udf, simhash_udf
 from ..partitioning import spread
+from .similarity_search import hyperplane_bucket_pairs
 
 # RE2-exact ASCII whitespace run ('\s' under RE2 is exactly [\t\n\f\r ]).
 # Spelled out so Spark's Java regex engine matches the DuckDB oracles
@@ -585,7 +588,6 @@ def embedding_bucket_keys(
     vec_col: str = "embedding",
     n_planes: int = 8,
     seed: int = 7,
-    with_norm: bool = False,
 ) -> DataFrame:
     """(id, v, bucket) hyperplane-LSH rows — the committable representation
     for the embedding near-dup family (the full and delta passes both key on
@@ -595,66 +597,35 @@ def embedding_bucket_keys(
     ``first()`` action from inside an operator would trigger a hidden job
     on every call (and the array element count is not in the schema).
 
-    r6: the sign bits run through the Arrow-batched
-    ``make_hyperplane_bucket_norm_udf`` pass (one crossing per batch, the
-    same left-to-right fold order as the interpreted
-    ``aggregate(zip_with(...))`` HOF it replaces — bit-identical buckets,
-    the x4 lesson applied to the operator family; x7/x16 oracle parity
-    re-verified). The committed (id, v, bucket) contract is unchanged;
-    ``with_norm=True`` additionally emits ``_n`` from the SAME batched
-    pass (the norm rides the struct the bucket comes from — callers that
-    need both must not pay a second Arrow crossing of the vector
-    column)."""
+    The sign bits run through the Arrow-batched
+    ``make_hyperplane_bucket_udf`` pass (one crossing per batch, the same
+    left-to-right fold order as the interpreted ``aggregate(zip_with(...))``
+    HOF — bit-identical buckets). A null vector keeps its row, with bucket
+    ''; a vector whose length is not ``dim`` fails the query."""
     import numpy as np
 
-    from ..functions.udfs import make_hyperplane_bucket_norm_udf
+    from ..functions.udfs import make_hyperplane_bucket_udf
 
     rng = np.random.RandomState(seed)
     planes = rng.randn(n_planes, dim).tolist()
-    bn = make_hyperplane_bucket_norm_udf(planes)
     # fail fast on a dim/vector mismatch: sign bits against a wrong-length
     # vector would silently collapse buckets and turn the near-linear
-    # bucket join into an O(n^2) self-join. The check rides inside the
-    # value column so column pruning cannot drop it.
-    checked_vec = F.when(F.size(F.col(vec_col)) == dim, F.col(vec_col)).otherwise(
+    # bucket pass into an O(n^2) one. The check rides inside the value
+    # column so column pruning cannot drop it; a null vector passes
+    # (size(NULL) is NULL, which would otherwise raise a NULL message).
+    v = F.col(vec_col)
+    checked_vec = F.when(v.isNull() | (F.size(v) == dim), v).otherwise(
         F.raise_error(
             F.concat(F.lit(f"embedding length != dim={dim}: "),
-                     F.size(F.col(vec_col)).cast("string"))
+                     F.size(v).cast("string"))
         )
     )
-    # the batched pass still costs O(n_planes x dim) per row: spread the
-    # scan before paying it. Both struct fields come from ONE UDF
-    # evaluation (same expression — Catalyst batches it into a single
-    # ArrowEvalPython entry).
-    keyed = spread(df).select(
+    # the batched pass costs O(n_planes x dim) per row: spread the scan
+    # before paying it
+    return spread(df).select(
         F.col(id_col).alias("id"), checked_vec.alias("v"),
-        bn(F.col(vec_col)).alias("_bn"),
+        make_hyperplane_bucket_udf(planes)(v).alias("bucket"),
     )
-    cols = [F.col("id"), F.col("v"), F.col("_bn.bucket").alias("bucket")]
-    if with_norm:
-        cols.append(F.col("_bn.nrm").alias("_n"))
-    return keyed.select(*cols)
-
-
-def _vec_norm(c):
-    """Per-row vector norm — r6: the Arrow-batched sequential fold
-    (``seq_norm_udf``), bit-identical to the interpreted
-    ``sqrt(aggregate(...))`` HOF this wrapped before (same addition order;
-    unit-tested in test_r6_optimizations)."""
-    from ..functions.udfs import seq_norm_udf
-
-    return seq_norm_udf(c)
-
-
-def _pair_cosine(left_v, right_v, left_n, right_n):
-    """round(dot/(|a||b|), 6) + 0.0 with the dot through the Arrow-batched
-    sequential fold (``seq_dot_udf`` — bit-exact with the interpreted
-    ``aggregate(zip_with(...))`` it replaces) and the norms precomputed per
-    row. + 0.0 folds IEEE -0.0 from round() of a tiny negative cosine
-    (the driver's value hash is bit-sensitive)."""
-    from ..functions.udfs import seq_dot_udf
-
-    return F.round(seq_dot_udf(left_v, right_v) / (left_n * right_n), 6) + F.lit(0.0)
 
 
 def embedding_near_dup_pairs(
@@ -666,27 +637,17 @@ def embedding_near_dup_pairs(
     n_planes: int = 8,
     seed: int = 7,
 ) -> DataFrame:
-    """Cosine near-dups via random-hyperplane LSH buckets + exact verify.
-    Brute force is O(n^2); the bucket join keeps it near-linear for tight
-    thresholds (near-dup vectors almost always share all sign bits)."""
-    # persist: the bucket-bit pass feeds BOTH sides of the self-join; the
-    # per-row norm comes from the SAME Arrow pass as the bucket
-    # (with_norm=True) so the vector column crosses the Python boundary
-    # once, and the per-pair work is one vectorized dot
+    """Cosine near-dups via random-hyperplane LSH buckets + exact verify:
+    ``(left_id, right_id, cos_sim)`` with ``cos_sim = round(cosine, 6)``
+    ``>= threshold``. Brute force is O(n^2); bucketing keeps it near-linear
+    for tight thresholds (near-dup vectors almost always share all sign
+    bits). All pairs of a bucket are scored by one per-bucket kernel
+    (``similarity_search.hyperplane_bucket_pairs``). Null vectors pair with
+    nothing."""
     keyed = embedding_bucket_keys(
         df, dim, id_col=id_col, vec_col=vec_col, n_planes=n_planes, seed=seed,
-        with_norm=True,
-    ).persist()
-    a, b = keyed.alias("a"), keyed.alias("b")
-    return (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
-        .withColumn(
-            "cos_sim",
-            _pair_cosine(F.col("a.v"), F.col("b.v"), F.col("a._n"), F.col("b._n")),
-        )
-        .where(F.col("cos_sim") >= threshold)
-        .select(F.col("a.id").alias("left_id"), F.col("b.id").alias("right_id"), "cos_sim")
     )
+    return hyperplane_bucket_pairs(keyed, decimals=6, threshold=threshold)
 
 
 def delta_embedding_near_dup(
@@ -702,31 +663,18 @@ def delta_embedding_near_dup(
     """Embedding near-dup pairs with >= 1 NEW endpoint — the 5th and last
     dedup family's incremental variant. ``old_keys`` is a committed
     ``embedding_bucket_keys`` output: the corpus is bucketed once; each new
-    batch computes only its own sign bits, and the bucket join is
-    new x (old + new) — never old x old. Same hyperplanes (seed) as the
-    full pass, so old and new buckets are directly comparable.
+    batch computes only its own sign bits, and the per-bucket kernel scores
+    old + new rows but emits only pairs touching a new one — old x old is
+    never scored. Same hyperplanes (seed) as the full pass, so old and new
+    buckets are directly comparable; ids are unique across old + new (an
+    id is immutable once committed), and the result equals the full pass
+    restricted to pairs with a new endpoint.
     """
     new_keys = embedding_bucket_keys(
         new_vectors, dim, id_col=id_col, vec_col=vec_col,
-        n_planes=n_planes, seed=seed, with_norm=True,
-    ).persist()
-    # two consumers: the union and the 'n' join side. The committed old
-    # keys carry no norm column (their contract is (id, v, bucket)), so the
-    # norm is recomputed in one map pass — O(corpus) per batch but a single
-    # cheap column op, vs the per-PAIR norms the old cosine paid.
-    all_keys = old_keys.withColumn("_n", _vec_norm(F.col("v"))).unionByName(new_keys)
-    n, t = new_keys.alias("n"), all_keys.alias("t")
-    return (
-        n.join(t, (F.col("n.bucket") == F.col("t.bucket")) & (F.col("n.id") != F.col("t.id")))
-        .withColumn(
-            "cos_sim",
-            _pair_cosine(F.col("n.v"), F.col("t.v"), F.col("n._n"), F.col("t._n")),
-        )
-        .where(F.col("cos_sim") >= threshold)
-        .select(
-            F.least(F.col("n.id"), F.col("t.id")).alias("left_id"),
-            F.greatest(F.col("n.id"), F.col("t.id")).alias("right_id"),
-            "cos_sim",
-        )
-        .distinct()
+        n_planes=n_planes, seed=seed,
     )
+    keyed = old_keys.select("id", "v", "bucket", F.lit(False).alias("_new")).unionByName(
+        new_keys.withColumn("_new", F.lit(True))
+    )
+    return hyperplane_bucket_pairs(keyed, decimals=6, threshold=threshold, new_col="_new")

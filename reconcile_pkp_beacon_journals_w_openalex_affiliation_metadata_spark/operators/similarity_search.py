@@ -1,15 +1,23 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths, same results contract:
+Three paths:
 - ``brute_force_topk``: exact cosine top-k — the baseline, one pass, no
-  shuffle (query vectors broadcast as literals / small-side broadcast join).
+  shuffle (query vectors broadcast as a small-side broadcast join).
 - ``ivf_topk``: IVF-style scale path — k-means-ish coarse centroids picked
   deterministically from the corpus, every vector assigned to its nearest
   centroid (map-only), queries probe ``n_probe`` nearest centroid cells and
   score only those cells. Shuffle = one hash join on cell id.
+- ``hyperplane_bucket_pairs``: all-pairs cosine inside hyperplane-LSH
+  buckets (the x4 top-k and the x7/x16 near-dup threshold), one
+  ``groupBy(bucket).applyInPandas`` pass — each vector crosses the Python
+  boundary once, not once per candidate pair.
 
-Both use native higher-order functions for the dot product (zip_with +
-aggregate) — no Python in the scoring loop.
+The first two score each (vector, query) pair with Arrow-batched
+sequential folds (``seq_norm_udf`` once per row, ``seq_dot_udf`` per
+pair); the bucket kernel runs the same folds inside its group. All three
+keep the fold order of the interpreted ``aggregate(zip_with(...))`` HOF
+(``_dot``/``_norm`` below), so every double is bit-identical to it, and
+leave the division and rounding to the JVM.
 """
 
 from __future__ import annotations
@@ -269,6 +277,199 @@ def ivf_topk(
     w = Window.partitionBy(q_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
     return (
         scored.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= k)
+        .drop("rn")
+    )
+
+
+# pair bound of one kernel chunk (a run of left rows with all their
+# partners); the chunk's numpy workspace is about 100 bytes per pair
+MAX_KERNEL_PAIRS = 4_000_000
+
+
+def make_bucket_pairs_kernel(
+    decimals: int,
+    k: int | None = None,
+    threshold: float | None = None,
+    new_col: str | None = None,
+):
+    """The pandas function behind ``hyperplane_bucket_pairs``: one bucket's
+    ``(id, v[, new_col])`` rows in, candidate ``(left_id, right_id, dot,
+    lnrm, rnrm)`` rows out, ``left_id < right_id``.
+
+    Exactness: the kernel emits the dot and both norms, not the cosine.
+    Each is the left-to-right sequential fold of the interpreted HOF
+    (vectorized across pairs, one dimension at a time), and the caller
+    applies ``round(dot / (lnrm * rnrm), decimals)`` in the JVM — so the
+    surviving rows are bit-equal to a bucket self-join's, and the JVM keeps
+    its own NaN, NULL and ANSI division semantics (a NaN dot or norm turns
+    NULL at the Arrow boundary, as the per-pair ``seq_dot_udf`` did). A
+    null vector is folded as a NaN row: its dot and norms cross as NULL,
+    which is exactly what the join gave it.
+
+    Pruning keeps a provable superset of what the caller's filter keeps;
+    the kernel computes the same cosine the JVM will, and rounding to
+    ``decimals`` moves it by at most half a unit ``u = 10^-decimals`` (plus
+    an ulp):
+    - threshold mode keeps every pair with cosine ``>= threshold - u`` and
+      every non-finite cosine (a zero norm must still reach the JVM
+      division, where ANSI mode raises DIVIDE_BY_ZERO; Spark orders NaN
+      above every number, so a NaN cosine passes the filter);
+    - top-k mode keeps, per left id, every pair within ``2u`` of the k-th
+      best, ranked like Spark's descending order: NaN cosine first
+      (as +inf), NULL (a NaN dot or norm) last (as -inf) — and of the NULL
+      ties only the k smallest right ids, the window's tie-break. A zero
+      divisor ranks as NULL (what the division gives with ANSI mode off)
+      and is always kept (with ANSI mode on it must raise).
+
+    ``new_col`` (a boolean column) keeps only pairs with at least one new
+    endpoint — the delta pass. Ids compare with Python's ``<``; on
+    strings that is code-point order, which is the UTF-8 byte order Spark
+    uses. Rows sharing an id never pair (the join's ``a.id < b.id``).
+    """
+    if (k is None) == (threshold is None):
+        raise ValueError("give exactly one of k and threshold")
+    unit = 10.0 ** -decimals
+
+    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
+        order = np.argsort(pdf["id"].to_numpy(), kind="stable")
+        ids = pdf["id"].to_numpy()[order]
+        m = len(ids)
+        vecs = pdf["v"].to_numpy()[order]
+        width = next((len(x) for x in vecs if x is not None), 1)
+        X = np.stack(
+            [np.full(width, np.nan) if x is None else x for x in vecs]
+        ).astype(np.float64).T.copy()  # (dim, m): one row per dimension
+        sq = np.zeros(m)
+        for row in X:
+            sq += row * row
+        nrm = np.sqrt(sq)
+        # equal ids never pair: compare run numbers of the sorted ids
+        run = np.zeros(m, dtype=np.int64)
+        if m > 1:
+            np.cumsum(ids[1:] != ids[:-1], out=run[1:])
+        new = None if new_col is None else pdf[new_col].to_numpy(dtype=bool)[order]
+        out_i: list = []
+        out_j: list = []
+        out_d: list = []
+        i0 = 0
+        while i0 < m - 1:
+            # lefts [i0, i1) pair with every later row
+            i1, total = i0, 0
+            while i1 < m - 1 and (total == 0 or total + (m - 1 - i1) <= MAX_KERNEL_PAIRS):
+                total += m - 1 - i1
+                i1 += 1
+            counts = np.arange(m - 1 - i0, m - 1 - i1, -1)
+            starts = np.cumsum(counts) - counts
+            ii = np.repeat(np.arange(i0, i1), counts)
+            jj = ii + 1 + np.arange(total) - np.repeat(starts, counts)
+            ok = run[ii] != run[jj]
+            if new is not None:
+                ok &= new[ii] | new[jj]
+            ii, jj = ii[ok], jj[ok]
+            dot = np.zeros(len(ii))
+            for row in X:
+                dot += row[ii] * row[jj]
+            den = nrm[ii] * nrm[jj]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = dot / den
+            if threshold is not None:
+                keep = ~np.isfinite(cos) | (cos >= threshold - unit)
+            else:
+                keep = _topk_keep(ii, dot, den, cos, k, 2 * unit)
+            out_i.append(ii[keep])
+            out_j.append(jj[keep])
+            out_d.append(dot[keep])
+            i0 = i1
+        ii = np.concatenate(out_i) if out_i else np.zeros(0, dtype=np.intp)
+        jj = np.concatenate(out_j) if out_j else np.zeros(0, dtype=np.intp)
+        return pd.DataFrame({
+            "left_id": ids[ii], "right_id": ids[jj],
+            "dot": np.concatenate(out_d) if out_d else np.zeros(0),
+            "lnrm": nrm[ii], "rnrm": nrm[jj],
+        })
+
+    return kern
+
+
+def _topk_keep(ii, dot, den, cos, k, margin):
+    """Per left (``ii`` is sorted), the candidates that can still reach the
+    window's top k after rounding — see ``make_bucket_pairs_kernel``."""
+    null = np.isnan(dot) | np.isnan(den) | (den == 0)
+    rankv = np.where(null, -np.inf, np.where(np.isnan(cos), np.inf, cos))
+    keep = den == 0
+    bounds = np.flatnonzero(np.diff(ii)) + 1
+    for s, e in zip(np.r_[0, bounds], np.r_[bounds, len(ii)]):
+        blk = rankv[s:e]
+        if e - s <= k:
+            keep[s:e] = True
+            continue
+        kth = np.partition(blk, len(blk) - k)[len(blk) - k]
+        if kth == -np.inf:
+            # fewer than k non-NULL cosines: all of them, then the NULL
+            # ties in right-id (= position) order
+            nulls = blk == -np.inf
+            keep[s:e] |= ~nulls | (np.cumsum(nulls) <= k)
+        else:
+            keep[s:e] |= blk >= kth - margin
+    return keep
+
+
+def hyperplane_bucket_pairs(
+    keyed: DataFrame,
+    decimals: int,
+    k: int | None = None,
+    threshold: float | None = None,
+    new_col: str | None = None,
+) -> DataFrame:
+    """Cosine pairs inside hyperplane-LSH buckets: ``(left_id, right_id,
+    cos_sim)`` over the ``(id, v, bucket)`` rows of
+    ``dedup.embedding_bucket_keys``, ``left_id < right_id``, ``cos_sim =
+    round(dot / (|l| |r|), decimals) + 0.0`` (the ``+ 0.0`` folds the -0.0
+    that round() gives a tiny negative cosine; value hashes are
+    bit-sensitive).
+
+    Give exactly one prune mode:
+    - ``threshold``: every pair with ``cos_sim >= threshold`` (x7);
+    - ``k``: per left id, the k best by ``cos_sim`` desc, right id asc (x4).
+    ``new_col`` names a boolean column of ``keyed``; only pairs with at
+    least one true endpoint are produced (x16's delta).
+
+    Plan: one shuffle on bucket and one ``FlatMapGroupsInPandas``
+    (``make_bucket_pairs_kernel``) that sees each bucket's vectors once
+    and emits a provable superset of the result; the division, rounding
+    and filter or window run in the JVM on the kernel's doubles. A bucket
+    is one pandas group, so its population (about rows / 2^n_planes) is
+    what bounds the task — n_planes must grow with the corpus, as it must
+    for any bucketed all-pairs search.
+
+    Rows with a null id pair with nothing. In threshold mode rows with a
+    null vector are dropped before the shuffle (their cosine is NULL); in
+    top-k mode they stay, as NULL cosines that rank last.
+    """
+    id_type = keyed.schema["id"].dataType
+    cols = ["id", "v", "bucket"] + ([new_col] if new_col else [])
+    rows = keyed.where(F.col("id").isNotNull())
+    if threshold is not None:
+        rows = rows.where(F.col("v").isNotNull())
+    schema = T.StructType([
+        T.StructField("left_id", id_type), T.StructField("right_id", id_type),
+        T.StructField("dot", T.DoubleType()), T.StructField("lnrm", T.DoubleType()),
+        T.StructField("rnrm", T.DoubleType()),
+    ])
+    pairs = rows.select(*cols).groupBy("bucket").applyInPandas(
+        make_bucket_pairs_kernel(decimals, k=k, threshold=threshold, new_col=new_col),
+        schema=schema,
+    ).select(
+        "left_id", "right_id",
+        (F.round(F.col("dot") / (F.col("lnrm") * F.col("rnrm")), decimals)
+         + F.lit(0.0)).alias("cos_sim"),
+    )
+    if threshold is not None:
+        return pairs.where(F.col("cos_sim") >= threshold)
+    w = Window.partitionBy("left_id").orderBy(F.col("cos_sim").desc(), F.col("right_id"))
+    return (
+        pairs.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
         .drop("rn")
     )

@@ -3,6 +3,7 @@ multimodal span plumbing."""
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators import (
@@ -155,8 +156,60 @@ def test_simhash_near_pairs_radius_zero_and_dim_guard(spark):
     emb = spark.createDataFrame(
         [(1, [0.1] * 64), (2, [0.2] * 64)], "vec_id long, embedding array<float>"
     )
-    with _pytest.raises(Exception, match="embedding length != dim"):
+    with _pytest.raises(Exception, match="embedding length != dim=128: 64"):
         dedup.embedding_near_dup_pairs(emb, dim=128, threshold=0.5).count()
+
+
+def test_embedding_near_dup_null_vector_pairs_with_nothing(spark):
+    """A null embedding yields no pairs (the DuckDB oracle's cosine of NULL
+    is NULL) instead of failing the length guard with a NULL message; a
+    wrong-length vector next to it still fails, naming its length."""
+    import pytest as _pytest
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 0.001]), (3, None)],
+        "vec_id long, embedding array<float>",
+    )
+    got = [tuple(r) for r in dedup.embedding_near_dup_pairs(emb, dim=2).collect()]
+    assert got == [(1, 2, 1.0)]
+    old_keys = dedup.embedding_bucket_keys(emb.where("vec_id != 2"), dim=2)
+    new = emb.where("vec_id = 2")
+    got = [tuple(r) for r in dedup.delta_embedding_near_dup(old_keys, new, dim=2).collect()]
+    assert got == [(1, 2, 1.0)]
+    bad = emb.union(spark.createDataFrame([(4, [1.0, 0.0, 0.0])], emb.schema))
+    with _pytest.raises(Exception, match="embedding length != dim=2: 3"):
+        dedup.embedding_near_dup_pairs(bad, dim=2).collect()
+
+
+def test_embedding_near_dup_plan_is_one_kernel_pass(spark):
+    """x7 is one per-bucket kernel over one shuffle — no self-join — runs
+    in at most 2 Spark jobs, and neither it nor the x16 delta leaves a
+    persisted RDD behind (both used to persist with no handle to
+    release)."""
+    rng = np.random.RandomState(3)
+    rows = [(i, rng.randn(8).tolist()) for i in range(200)]
+    rows += [(1000 + i, (np.array(rows[i][1]) * 1.001).tolist()) for i in range(20)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    sc = spark.sparkContext
+    cached = {str(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+    pairs = dedup.embedding_near_dup_pairs(emb, dim=8)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert "Join" not in plan
+    group = "test_embedding_near_dup_plan_is_one_kernel_pass"
+    sc.setJobGroup(group, group)
+    try:
+        got = pairs.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert {(r["left_id"], r["right_id"]) for r in got} >= {(i, 1000 + i) for i in range(20)}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+    old_keys = dedup.embedding_bucket_keys(emb.where("vec_id < 1000"), dim=8)
+    delta = dedup.delta_embedding_near_dup(old_keys, emb.where("vec_id >= 1000"), dim=8)
+    assert len(delta.collect()) >= 20
+    assert {str(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()} == cached
 
 
 def test_tokenless_docs_emit_no_bands(spark):
@@ -529,9 +582,11 @@ def test_dedup_decisions_match_uncapped_groups(spark):
 
 
 def test_delta_embedding_near_dup_equals_full_pass(spark):
-    """The 5th family's delta: bucketing only the new batch and joining
+    """The 5th family's delta: bucketing only the new batch and scoring
     new x (old + new) reproduces the full pass's new-endpoint pairs exactly
-    (cos_sim values included); old x old never recomputed."""
+    (cos_sim values included); old x old never recomputed. Long ids on
+    tight clusters, then non-ASCII string ids (pair order is UTF-8 byte
+    order) on random vectors with NaN, inf, null and duplicate vectors."""
     import math
 
     rows = []
@@ -539,27 +594,40 @@ def test_delta_embedding_near_dup_equals_full_pass(spark):
         angle = (i % 6) * math.pi / 3 + (0.001 * (i // 6))  # 6 tight clusters
         rows.append((i, [math.cos(angle), math.sin(angle), 0.0, 0.0]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    old_df = df.where(F.col("vec_id") % 4 != 0)
-    new_df = df.where(F.col("vec_id") % 4 == 0)
+    _assert_delta_equals_full(df, F.col("vec_id") % 4 == 0, dim=4, threshold=0.9)
 
+    rng = np.random.RandomState(12)
+    names = ["a", "B", "é", "ß", "日本", "\uff5e", "\U0001f600", "z"]
+    rows = [(names[i % 8] * (1 + i // 8), rng.randn(3).tolist()) for i in range(80)]
+    rows += [("dup" + str(i), rows[i][1]) for i in range(10)]
+    rows += [("nan", [math.nan, 1.0, 0.0]), ("inf", [math.inf, 1.0, 0.0]), ("null", None)]
+    df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
+    _assert_delta_equals_full(df, F.crc32("vec_id") % 3 == 0, dim=3, threshold=0.5)
+
+
+def _assert_delta_equals_full(df, is_new, dim, threshold):
+    old_df, new_df = df.where(~is_new), df.where(is_new)
     full = {
         (r["left_id"], r["right_id"]): r["cos_sim"]
-        for r in dedup.embedding_near_dup_pairs(df, dim=4, threshold=0.9).collect()
+        for r in dedup.embedding_near_dup_pairs(df, dim=dim, threshold=threshold).collect()
     }
     old_ids = {r["vec_id"] for r in old_df.select("vec_id").collect()}
     expected = {
         k: v for k, v in full.items() if k[0] not in old_ids or k[1] not in old_ids
     }
-    old_keys = dedup.embedding_bucket_keys(old_df, dim=4)
-    delta = {
-        (r["left_id"], r["right_id"]): r["cos_sim"]
-        for r in dedup.delta_embedding_near_dup(
-            old_keys, new_df, dim=4, threshold=0.9
+    old_keys = dedup.embedding_bucket_keys(old_df, dim=dim)
+    delta = [
+        tuple(r) for r in dedup.delta_embedding_near_dup(
+            old_keys, new_df, dim=dim, threshold=threshold
         ).collect()
-    }
-    assert delta == expected
-    assert delta  # non-vacuous
-    assert all(l not in old_ids or r not in old_ids for l, r in delta)
+    ]
+    assert len(delta) == len(expected)
+    got = {(l, r): c for l, r, c in delta}
+    assert got.keys() == expected.keys()
+    assert all(np.float64(c).tobytes() == np.float64(expected[k]).tobytes() for k, c in got.items())
+    assert got  # non-vacuous
+    assert len(got) < len(full)  # some old x old pairs exist and are skipped
+    assert all(l < r for l, r in got)
 
 
 def test_ngram_contamination_flags_and_clean_anti_join(spark):

@@ -30,7 +30,9 @@ SHOW = [
                                # persists, no broadcast of the key table —
                                # at runtime AQE reuses the band exchange so
                                # the banding ArrowEvalPython runs once
-    "x7_embedding_near_dup",   # expect: fixed-size plan (no centroid literals)
+    "x7_embedding_near_dup",   # expect: bucket-bit ArrowEvalPython, one
+                               # Exchange(bucket) and one per-bucket kernel
+                               # (FlatMapGroupsInPandas); no join
     "f20_html_extract",        # expect: one ArrowEvalPython + one merge shuffle
     "x8_block_skew_profile",   # expect: one agg pair over the keys, no join
     "x9_ann_ivf_topk",         # expect: closure-matrix ArrowEvalPython pickers,
@@ -50,9 +52,10 @@ SHOW = [
                                # Generate (explode) — all codegen, no UDF
     "x15_ivf_insert_topk",     # expect: union of old assignments + the new
                                # batch's map-only picker; one cell hash join
-    "x16_delta_embedding_near_dup",  # expect: new side's bucket bits
-                               # computed once; bucket join new x all, no
-                               # old x old self-join
+    "x16_delta_embedding_near_dup",  # expect: bucket bits for the new
+                               # side only, union with the old keys, one
+                               # per-bucket kernel that emits only pairs
+                               # touching a new row; no join
     "t12_near_dup_groups",     # expect: LSH candidate shape feeding the CC
                                # rounds' checkpointed scans + one roll-up
                                # HashAggregate (r4-verdict item: in the list)
