@@ -137,41 +137,24 @@ def main() -> None:
 def _flagship_stages(spark, sf_dir: str) -> dict[str, float]:
     """Per-stage walls for the flagship pipeline (r4-verdict task #8): the
     2.9 s x1 headline hides WHERE time shifts round-over-round; this makes
-    extract/blocking/candidates/scoring/cc individually machine-diffable in
-    BENCH_r{N}.json. Materialization barriers (persist + count) sit exactly
-    at the plan's own persist points, so the split adds only the counts."""
-    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators import (
-        blocking,
-        cluster,
-        extract,
-        pairs,
-        scoring,
+    each stage of the flagship stage table individually machine-diffable in
+    BENCH_r{N}.json. Every stage is persisted and counted, so the split adds
+    only the counts and the final stage's cache."""
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.plans.reconcile import (
+        flagship_stages,
+        run_stages,
+        timed,
     )
+
     spark.catalog.clearCache()
     docs = entry_mod.wrap_documents_as_spans(
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     )
-    stages: dict[str, float] = {}
-
-    def _timed(name, df):
-        t0 = time.perf_counter()
-        out = df.persist()
-        out.count()
-        stages[name] = round(time.perf_counter() - t0, 3)
-        return out
-
-    records = _timed("extract", extract.extract_records(docs))
-    keys = _timed("blocking", blocking.blocking_keys(records))
-    cand = _timed("candidates", pairs.candidate_pairs(keys, max_block_size=500))
-    scored = _timed("scoring", scoring.score_pairs(cand, records))
-    t0 = time.perf_counter()
-    cluster.connected_components(
-        scoring.matched_edges(scored), assume_no_self_loops=True
-    ).count()
-    stages["cc"] = round(time.perf_counter() - t0, 3)
-    for df in (records, keys, cand, scored):
+    walls: dict[str, float] = {}
+    out = run_stages(flagship_stages(docs, max_block_size=500), timed(walls))
+    for df in out.values():
         df.unpersist()
-    return stages
+    return {name: round(wall, 3) for name, wall in walls.items()}
 
 
 if __name__ == "__main__":

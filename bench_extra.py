@@ -19,28 +19,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from bench import HEADLINE  # noqa: E402
 from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.session import (  # noqa: E402
     get_spark,
 )
-
-HEADLINE = [
-    "x1_reconcile_flagship",
-    "j3_top1_per_group",
-    "j5_connected_components",
-    "a2_grouped_dedup_sources",
-    "a10_grouping_sets_rollup",
-    "w2_last_nonnull_carry",
-    "t1_text_quality",
-    "t6_embedding_topk",
-    "x2_minhash_lsh_pairs",
-    "x4_ann_lsh_topk",
-    "x9_ann_ivf_topk",
-    "t11_sequence_packing_slices",
-    "x13_delta_ngram_jaccard",
-    "t14_pack_materialize",
-    "t16_decontamination",
-]
-
 
 def noop(df):
     df.write.format("noop").mode("overwrite").save()

@@ -1,12 +1,11 @@
 """Numpy-vectorized similarity kernels: the whole Arrow batch in lock-step.
 
 The scalar kernels in ``kernels.py`` are bit-parallel over CHARACTERS but
-still loop per PAIR in Python — at 10^12-candidate scale that loop is the
-flagship's dominant cost when the optional rapidfuzz C path is absent
-(SURVEY §2.10). These kernels run the same recurrences with the BATCH as
-the vector lane: every pair advances one character per step, all pairs at
-once, in numpy uint64 ops. Cost per Arrow batch = O(max_len) vector ops
-instead of O(sum_len) Python bytecode.
+still loop per PAIR in Python — at 10^12-candidate scale that loop would
+be the flagship's dominant cost. These kernels run the same recurrences
+with the BATCH as the vector lane: every pair advances one character per
+step, all pairs at once, in numpy uint64 ops. Cost per Arrow batch =
+O(max_len) vector ops instead of O(sum_len) Python bytecode.
 
 Semantics are BIT-EXACT with kernels.py (differential-tested in
 tests/test_batch_kernels.py): Allison-Dix/Hyyro bit-parallel LCS for the

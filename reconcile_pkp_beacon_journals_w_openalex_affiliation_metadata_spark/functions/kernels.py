@@ -251,42 +251,6 @@ def jaro_winkler(a: str | None, b: str | None, prefix_weight: float = 0.1) -> fl
 # token_set_ratio (fuzzywuzzy/rapidfuzz published algorithm)
 # ---------------------------------------------------------------------------
 
-# ---------------------------------------------------------------------------
-# optional rapidfuzz C fast path (SURVEY §2.10)
-# ---------------------------------------------------------------------------
-# The pure-Python kernels above are the ORACLE (bit-exact vs the published
-# algorithms, property-tested); when rapidfuzz is installed its C++ scorers
-# replace them in the hot path — at 10^12-pair scale the per-pair Python
-# loop is the flagship's dominant cost. Not installed in this sandbox; the
-# parity test (test_kernels.py) runs wherever it is.
-try:  # pragma: no cover - exercised only where rapidfuzz is installed
-    from rapidfuzz import fuzz as _rf_fuzz
-    from rapidfuzz.distance import JaroWinkler as _rf_JaroWinkler
-
-    HAVE_RAPIDFUZZ = True
-except ImportError:
-    HAVE_RAPIDFUZZ = False
-
-
-def sim_triple_py(a: str | None, b: str | None) -> tuple[float, float, float]:
-    """(indel, jw, tsr) via the pure-Python kernels — the parity oracle."""
-    return (indel_ratio(a, b), jaro_winkler(a, b), token_set_ratio(a, b))
-
-
-if HAVE_RAPIDFUZZ:  # pragma: no cover
-
-    def sim_triple(a: str | None, b: str | None) -> tuple[float, float, float]:
-        a = a or ""
-        b = b or ""
-        return (
-            _rf_fuzz.ratio(a, b),
-            100.0 * _rf_JaroWinkler.similarity(a, b),
-            _rf_fuzz.token_set_ratio(a, b),
-        )
-
-else:
-    sim_triple = sim_triple_py
-
 
 def token_set_ratio(a: str | None, b: str | None) -> float:
     ta = set((a or "").split())
@@ -308,3 +272,8 @@ def token_set_ratio(a: str | None, b: str | None) -> float:
     r1 = 100.0 * (2.0 * li) / (li + l1) if (li + l1) else 100.0
     r2 = 100.0 * (2.0 * li) / (li + l2) if (li + l2) else 100.0
     return max(r1, r2, indel_ratio(s1, s2))
+
+
+def sim_triple_py(a: str | None, b: str | None) -> tuple[float, float, float]:
+    """(indel, jw, tsr) via the pure-Python kernels — the parity oracle."""
+    return (indel_ratio(a, b), jaro_winkler(a, b), token_set_ratio(a, b))

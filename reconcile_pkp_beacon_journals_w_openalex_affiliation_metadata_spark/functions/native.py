@@ -86,20 +86,6 @@ def epoch_ms_to_compact_utc(ms: Column) -> Column:
     return F.when(ok, F.date_format(ts, "yyyyMMddHHmmss"))
 
 
-# F11 — author display-name coalesce (check_landing_page...py:155-158,184-190)
-def author_name(raw: Column, display: Column) -> Column:
-    return F.coalesce(F.nullif(F.trim(raw), F.lit("")), display, F.lit(""))
-
-
-# F16 — tolerant bool / float parse (utils/get_stats.py:28-36)
-def parse_bool(v: Column) -> Column:
-    return F.lower(F.trim(v)) == "true"
-
-
-def parse_float_default0(v: Column) -> Column:
-    return F.coalesce(F.try_cast(v, "double"), F.lit(0.0))
-
-
 # P8 — content-type predicate (retrieve_landing_pages.py:56-63,
 # retrieve_pkp_work_url_download_pdf.py:40-44): substring match on the
 # lowercased header, so 'text/html; charset=utf-8' passes 'text/html'.

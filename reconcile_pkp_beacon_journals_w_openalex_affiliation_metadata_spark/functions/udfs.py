@@ -4,11 +4,10 @@ Per ``input_hint``: "vectorized pandas/Arrow UDFs (no per-row Python)
 throughout". Each UDF receives whole Arrow batches as pandas Series; the
 similarity scorers run the batch through the numpy lock-step kernels
 (``batch_kernels.py`` — every pair advances one character per step, all
-pairs at once, bit-exact with the scalar oracles in ``kernels.py``), or
-through rapidfuzz C++ when installed (SURVEY.md §2.10). Everything that
-CAN stay native (regex normalize steps, url parsing, array ops) is native
-in ``native.py`` — these UDFs cover only ascii-fold transliteration and
-the similarity scorers.
+pairs at once, bit-exact with the scalar oracles in ``kernels.py``).
+Everything that CAN stay native (regex normalize steps, url parsing, array
+ops) is native in ``native.py`` — these UDFs cover only ascii-fold
+transliteration and the similarity scorers.
 """
 
 from __future__ import annotations
@@ -131,18 +130,6 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(T.DoubleType())
-def token_set_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    from . import batch_kernels
-
-    return pd.Series(
-        batch_kernels.token_set_ratio_batch(
-            [x or "" for x in a], [y or "" for y in b]
-        ),
-        index=a.index, dtype="float64",
-    )
-
-
 _SIM_STRUCT = T.StructType(
     [
         T.StructField("indel", T.DoubleType()),
@@ -161,31 +148,7 @@ def sim_features_udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
     - equal-string fast path (identical normalized titles are the most
       common case inside ISSN/band blocks),
     - per-batch memo: band families repeat the same (a, b) title pair many
-      times across different doc pairs — score each distinct pair once.
-
-    When rapidfuzz is installed (optional; SURVEY §2.10), the whole Arrow
-    batch is scored by its C++ ``process.cpdist`` instead — the pure-Python
-    kernels stay as the tested oracle. workers=1: each Spark python worker
-    is already one of many; letting rapidfuzz fan out to all cores would
-    oversubscribe the executor."""
-    if kernels.HAVE_RAPIDFUZZ:  # pragma: no cover - not installed in sandbox
-        from rapidfuzz import fuzz as rf_fuzz
-        from rapidfuzz import process as rf_process
-        from rapidfuzz.distance import JaroWinkler as rf_JW
-
-        av = [x or "" for x in a]
-        bv = [y or "" for y in b]
-        return pd.DataFrame(
-            {
-                "indel": rf_process.cpdist(av, bv, scorer=rf_fuzz.ratio, workers=1),
-                "jw": rf_process.cpdist(av, bv, scorer=rf_JW.similarity, workers=1)
-                * 100.0,
-                "tsr": rf_process.cpdist(
-                    av, bv, scorer=rf_fuzz.token_set_ratio, workers=1
-                ),
-            },
-            index=a.index,
-        ).astype("float64")
+      times across different doc pairs — score each distinct pair once."""
     import numpy as np
 
     from . import batch_kernels
@@ -412,8 +375,3 @@ def simhash_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda x: hashing.simhash64(hashing.ascii_split(x)) if x else 0).astype(
         "int64"
     )
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def char_trigrams_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: hashing.char_ngrams(x, 3) if x else [])

@@ -18,28 +18,56 @@ Usage (sandbox smoke):
     python -m reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.jobs.reconcile_job \
         --synth 2000 --output /tmp/reconcile_out
 
-Every stage commits through the catalog (atomic marker) and is skipped on
-restart (--resume), satisfying north_rule's "resumable from the last
-committed checkpoint"; per-partition lineage + match-rate metrics are
-appended to the ``lineage`` table.
+The job runs the flagship stage table of ``plans/reconcile.py`` with a
+catalog materializer: every stage commits through the catalog (atomic
+marker) and is skipped on restart (--resume), satisfying north_rule's
+"resumable from the last committed checkpoint"; per-partition lineage +
+match-rate metrics are appended to the ``lineage`` table. With a labeled
+table the fit runs on the committed records, and ``scored``/``clusters``
+are recomputed even under --resume.
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
 import sys
 import uuid
 
+# the lineage table's label for each committed stage
+LINEAGE_STAGE = {
+    "records": "extract", "blocking_keys": "blocking", "candidate_pairs": "pairs",
+    "scored": "scoring", "clusters": "clustering",
+}
+
+
+def _fit_calibration(labeled, records):
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators import calibrate
+
+    cal = calibrate.fit_calibration(records, labeled)
+    print(
+        f"calibration: n_train={cal.n_train} train_f1={cal.train_f1:.4f} "
+        f"threshold={cal.threshold:.4f} weights={ {k: round(v, 4) for k, v in cal.weights.items()} }"
+    )
+    return cal
+
 
 def main(argv=None):
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators.pairs import DEFAULT_N_SALTS
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.plans.reconcile import (
+        HOT_PAIR_THRESHOLD,
+        flagship_stages,
+        run_stages,
+    )
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--documents", help="path to the interleaved-span documents table")
     ap.add_argument("--synth", type=int, default=0, help="generate a seeded corpus of N journals instead")
     ap.add_argument("--output", required=True)
     ap.add_argument("--resume", action="store_true", help="skip committed stages")
-    ap.add_argument("--n-salts", type=int, default=8)
+    ap.add_argument("--n-salts", type=int, default=DEFAULT_N_SALTS)
     ap.add_argument("--max-block-size", type=int, default=None)
-    ap.add_argument("--hot-pair-threshold", type=int, default=1_000_000)
+    ap.add_argument("--hot-pair-threshold", type=int, default=HOT_PAIR_THRESHOLD)
     ap.add_argument("--run-id", default=None)
     ap.add_argument(
         "--labeled",
@@ -67,7 +95,7 @@ def main(argv=None):
     from pyspark.sql import SparkSession
 
     from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark import schemas, synth
-    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators import blocking, cluster, extract, lineage, pairs, scoring
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators import lineage
     from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.sources.catalog import Catalog, run_stage
 
     # on a cluster the session comes from spark-submit; local fallback for smoke
@@ -79,8 +107,11 @@ def main(argv=None):
         ap.error("--bucket-tables needs --catalog-backend table or iceberg")
     # bucket the two sides of the scoring join on their join keys: the
     # heaviest recurring shuffle becomes a one-time write-side cost
-    rec_bucket = (["doc_id"], args.bucket_tables) if args.bucket_tables else None
-    cand_bucket = (["left_id"], args.bucket_tables) if args.bucket_tables else None
+    bucket_by = (
+        {"records": (["doc_id"], args.bucket_tables),
+         "candidate_pairs": (["left_id"], args.bucket_tables)}
+        if args.bucket_tables else {}
+    )
 
     labeled = None
     if args.synth:
@@ -96,64 +127,33 @@ def main(argv=None):
         docs = spark.read.parquet(args.documents)
     schemas.assert_schema(docs, schemas.DOCUMENTS, "documents")
 
-    lineage_rows = []
-
-    records = run_stage(
-        cat, spark, "records", lambda: extract.extract_records(docs),
-        force=force, bucket_by=rec_bucket,
-    )
-    lineage_rows.append(lineage.partition_metrics(records, run_id, "extract"))
-
-    keys = run_stage(cat, spark, "blocking_keys", lambda: blocking.blocking_keys(records), force=force)
-    lineage_rows.append(lineage.partition_metrics(keys, run_id, "blocking"))
-
-    cand = run_stage(
-        cat, spark, "candidate_pairs",
-        lambda: pairs.candidate_pairs(
-            keys, n_salts=args.n_salts,
-            hot_pair_threshold=args.hot_pair_threshold,
-            max_block_size=args.max_block_size,
-        ),
-        force=force, bucket_by=cand_bucket,
-    )
-    lineage_rows.append(lineage.partition_metrics(cand, run_id, "pairs"))
-
     if args.labeled:
         labeled = spark.read.parquet(args.labeled)
-    cal = None
-    if labeled is not None:
-        from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators import calibrate
+    fit = functools.partial(_fit_calibration, labeled) if labeled is not None else None
+    lineage_rows = []
 
-        cal = calibrate.fit_calibration(records, labeled)
-        print(
-            f"calibration: n_train={cal.n_train} train_f1={cal.train_f1:.4f} "
-            f"threshold={cal.threshold:.4f} weights={ {k: round(v, 4) for k, v in cal.weights.items()} }"
+    def commit(name, build):
+        # a fresh calibration invalidates any committed scored/clusters
+        # tables: force those stages even under --resume, else the fitted
+        # weights would be silently discarded in favor of stale decisions
+        df = run_stage(
+            cat, spark, name, build,
+            force=force or (fit is not None and name in ("scored", "clusters")),
+            bucket_by=bucket_by.get(name),
         )
+        lineage_rows.append(lineage.partition_metrics(df, run_id, LINEAGE_STAGE[name]))
+        if name == "scored":
+            lineage_rows.append(lineage.match_rate_metrics(df, run_id))
+        return df
 
-    # a fresh calibration invalidates any committed scored/clusters tables:
-    # force those stages even under --resume, else the fitted weights would
-    # be silently discarded in favor of the stale decisions
-    force_scoring = force or cal is not None
-    scored = run_stage(
-        cat, spark, "scored",
-        lambda: scoring.score_pairs(
-            cand, records,
-            weights=cal.weights if cal else None,
-            threshold=cal.threshold if cal else None,
+    out = run_stages(
+        flagship_stages(
+            docs, n_salts=args.n_salts, hot_pair_threshold=args.hot_pair_threshold,
+            max_block_size=args.max_block_size, calibrate=fit,
         ),
-        force=force_scoring,
+        commit,
     )
-    lineage_rows.append(lineage.partition_metrics(scored, run_id, "scoring"))
-    lineage_rows.append(lineage.match_rate_metrics(scored, run_id))
-
-    clusters = run_stage(
-        cat, spark, "clusters",
-        lambda: cluster.connected_components(
-            scoring.matched_edges(scored), assume_no_self_loops=True
-        ),
-        force=force_scoring,
-    )
-    lineage_rows.append(lineage.partition_metrics(clusters, run_id, "clustering"))
+    scored, clusters = out["scored"], out["clusters"]
 
     lin = lineage_rows[0]
     for extra in lineage_rows[1:]:

@@ -20,18 +20,6 @@ from ..partitioning import spread
 _FIELDS = ["TITLE", "ISSN", "PUBLISHER", "COUNTRY", "URL"]
 
 
-def text_of(doc_spans_col) -> "F.Column":
-    """Concatenate text spans in offset order (spans are stored ordered; we
-    re-assert order with array_sort on offset to survive any upstream shuffle)."""
-    ordered = F.array_sort(
-        doc_spans_col, lambda a, b: a["offset"].cast("int") - b["offset"].cast("int")
-    )
-    texts = F.transform(
-        F.filter(ordered, lambda s: s["kind"] == F.lit("text")), lambda s: s["text"]
-    )
-    return F.array_join(texts, "\n")
-
-
 def _field(key: str) -> "F.Column":
     """Value of the first text span 'KEY: ...', in offset order.
 

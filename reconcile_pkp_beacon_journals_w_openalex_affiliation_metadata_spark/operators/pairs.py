@@ -11,8 +11,10 @@ scale a hot publisher/ISSN key would put an entire block in one task, so:
    the right side is replicated over all salts, and the join key becomes
    (key, salt) — same output pairs, ~n_salts× the parallelism,
 3. degenerate keys whose block exceeds ``max_block_size`` members (stopword
-   title-bands, mega-domains) are dropped with a logged metric — they carry
-   no discriminating signal and would produce quadratic garbage pairs.
+   title-bands, mega-domains) are dropped — they carry no discriminating
+   signal and would produce quadratic garbage pairs. Nothing is logged; the
+   dropped and hot keys are visible through ``blocking.block_size_metrics``
+   (query x8_block_skew_profile).
 
 The final pair set is deduped across key families with a groupBy that also
 records provenance (how many and which keys paired the two docs).

@@ -18,9 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_FLAG_CONDS: dict[str, "F.Column"] = {}
-
-
 def _conds():
     ea = F.col("exact_author_match")
     na = F.col("normalized_author_match")

@@ -55,11 +55,6 @@ def read_whole_files(spark: SparkSession, path: str, glob: str | None = None) ->
     return reader.option("recursiveFileLookup", "true").load(path)
 
 
-def read_whole_text(spark: SparkSession, path: str) -> DataFrame:
-    """S7 (text flavor): one row per file, full content in ``value``."""
-    return spark.read.option("wholetext", True).text(path)
-
-
 def with_deterministic_file_order(df: DataFrame, col: str = "_input_file") -> DataFrame:
     """O2: stable per-file processing order (vlm_text_extractor.py:608 sorts
     the file list before iterating). Spark's scan order is nondeterministic

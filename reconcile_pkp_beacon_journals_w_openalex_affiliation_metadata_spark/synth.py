@@ -403,21 +403,3 @@ def generate(
         )
 
     return out
-
-
-def write_parquet(spark, corpus: Corpus, out_dir: str) -> None:
-    """Materialize the corpus as parquet (the catalog layer makes it a
-    committed table; Iceberg in production)."""
-    from . import schemas
-
-    pairs = [
-        ("documents", corpus.documents, schemas.DOCUMENTS),
-        ("pkp_journals", corpus.pkp_journals, schemas.PKP_JOURNALS),
-        ("openalex_works", corpus.openalex_works, schemas.OPENALEX_WORKS),
-        ("landing_pairs", corpus.landing_pairs, schemas.LANDING_PAIRS),
-        ("labeled_pairs", corpus.labeled_pairs, schemas.LABELED_PAIRS),
-    ]
-    for name, rows, schema in pairs:
-        spark.createDataFrame(rows, schema=schema).write.mode("overwrite").parquet(
-            f"{out_dir}/{name}.parquet"
-        )

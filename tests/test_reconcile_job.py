@@ -1,12 +1,28 @@
-"""spark-submit job entrypoint: end-to-end + resume identity (north_rule)."""
+"""spark-submit job entrypoint: end-to-end + resume identity (north_rule),
+and the job's committed tables against ``plans.reconcile.reconcile``.
+
+``python tests/test_reconcile_job.py`` rewrites the golden plan files under
+``tests/golden/`` from the current tree; do that only for a change that
+means to alter ``reconcile()``'s plan or persists.
+"""
 
 from __future__ import annotations
 
 import os
+import re
+import sys
+from collections import Counter
 
-from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.jobs.reconcile_job import (
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+import __spark_entry__ as entry_mod  # noqa: E402
+from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.jobs.reconcile_job import (  # noqa: E402
     main,
 )
+
+GOLDEN = os.path.join(ROOT, "tests", "golden")
+STAGES = ("records", "blocking_keys", "candidate_pairs", "scored", "clusters")
 
 
 def test_job_runs_and_resumes_identically(spark, tmp_path):
@@ -93,3 +109,102 @@ def test_job_bucketed_table_backend_matches_marker(spark, tmp_path):
     assert "doc_id" in as_text and "8" in as_text and "Bucket" in as_text
     for t in ("records", "blocking_keys", "candidate_pairs", "scored", "clusters"):
         cat_b.drop(t, spark)
+
+
+def _mask(plan: str) -> str:
+    """Expression, plan, lambda-variable and common-subexpression ids and
+    the input dir vary between sessions and hosts."""
+    plan = re.sub(r"#\d+L?", "#_", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=_", plan)
+    plan = re.sub(r"(lambda \w+?|_common_expr)_\d+\b", r"\1_", plan)
+    return plan.replace(entry_mod.SF_DEFAULT, "<sf>")
+
+
+def _x1_plan(spark) -> str:
+    """x1's formatted physical plan (x1 is ``reconcile`` up to ``scored``)."""
+    df = entry_mod.queries()["x1_reconcile_flagship"](spark, entry_mod.SF_DEFAULT)
+    return _mask(
+        spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    )
+
+
+def _cached_plans(spark) -> list[str]:
+    """Every logical plan the session's CacheManager holds, sorted."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    seq = field.get(cm)
+    return sorted(_mask(seq.apply(i).plan().toString()) for i in range(seq.size()))
+
+
+def _reconcile_cache_report(spark, docs) -> str:
+    """The plans ``reconcile()`` leaves persisted, with and without CC."""
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.plans.reconcile import (
+        reconcile,
+    )
+
+    out = []
+    for with_clusters in (False, True):
+        spark.catalog.clearCache()
+        reconcile(docs, with_clusters=with_clusters)
+        plans = _cached_plans(spark)
+        out.append(f"== with_clusters={with_clusters}: {len(plans)} persisted plans")
+        out += plans
+    spark.catalog.clearCache()
+    return "\n".join(out) + "\n"
+
+
+def _synth_docs(spark, n_journals: int):
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark import (
+        schemas,
+        synth,
+    )
+
+    corpus = synth.generate(seed=42, n_journals=n_journals)
+    return spark.createDataFrame(corpus.documents, schema=schemas.DOCUMENTS)
+
+
+def _read_golden(name: str) -> str:
+    with open(os.path.join(GOLDEN, name)) as f:
+        return f.read()
+
+
+def test_job_tables_equal_reconcile(spark, tmp_path):
+    """The job's catalog commits and ``reconcile()``'s persists run the same
+    stage table: all five committed tables equal reconcile()'s outputs as
+    multisets. x1's physical plan and the plans reconcile() persists are
+    pinned to the golden files."""
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.plans.reconcile import (
+        reconcile,
+    )
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.sources.catalog import (
+        Catalog,
+    )
+
+    out = str(tmp_path / "job_diff")
+    main(["--synth", "300", "--output", out])
+    docs = _synth_docs(spark, 300)
+    res = reconcile(docs)
+    cat = Catalog(out)
+    got = (res.records, res.keys, res.candidate_pairs, res.scored, res.clusters)
+    for name, df in zip(STAGES, got):
+        committed = cat.read_committed(spark, name)
+        assert Counter(map(repr, committed.collect())) == Counter(map(repr, df.collect())), name
+    res.unpersist()
+
+    spark.catalog.clearCache()
+    assert _x1_plan(spark) == _read_golden("x1_plan.txt")
+    assert _reconcile_cache_report(spark, docs) == _read_golden("reconcile_persisted_plans.txt")
+
+
+if __name__ == "__main__":
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.session import (
+        get_spark,
+    )
+
+    session = get_spark(app_name="golden", cores=4, shuffle_partitions=8)
+    os.makedirs(GOLDEN, exist_ok=True)
+    with open(os.path.join(GOLDEN, "x1_plan.txt"), "w") as f:
+        f.write(_x1_plan(session))
+    with open(os.path.join(GOLDEN, "reconcile_persisted_plans.txt"), "w") as f:
+        f.write(_reconcile_cache_report(session, _synth_docs(session, 300)))

@@ -48,6 +48,9 @@ LEG_N = int(os.environ.get("SCALING_LEG_N", "4"))
 LEG_4N = 4 * LEG_N
 ROUNDS = int(os.environ.get("SCALING_ROUNDS", "3"))  # interleaved rounds, min kept
 PREP_DIR = os.environ.get("SCALING_PREP_DIR", "/tmp/spark_graft_scaling")
+# block caps of every leg: hot keys above 100k pairs are salted, blocks
+# above 2000 members dropped
+STAGE_KW = dict(hot_pair_threshold=100_000, max_block_size=2000)
 
 
 def _spark(cores: int):
@@ -81,10 +84,8 @@ def prep() -> None:
         schemas,
         synth,
     )
-    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators import (
-        blocking,
-        extract,
-        pairs as P,
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.plans.reconcile import (
+        reconcile,
     )
 
     spark = _spark(LEG_4N)
@@ -96,11 +97,9 @@ def prep() -> None:
     )
     docs.write.mode("overwrite").parquet(f"{PREP_DIR}/documents.parquet")
     docs = spark.read.parquet(f"{PREP_DIR}/documents.parquet")
-    recs = extract.extract_records(docs).persist()
-    keys = blocking.blocking_keys(recs).persist()
-    cand = P.candidate_pairs(keys, hot_pair_threshold=100_000, max_block_size=2000)
-    cand.write.mode("overwrite").parquet(f"{PREP_DIR}/candidates.parquet")
-    recs.write.mode("overwrite").parquet(f"{PREP_DIR}/records.parquet")
+    res = reconcile(docs, with_clusters=False, **STAGE_KW)
+    res.candidate_pairs.write.mode("overwrite").parquet(f"{PREP_DIR}/candidates.parquet")
+    res.records.write.mode("overwrite").parquet(f"{PREP_DIR}/records.parquet")
     n_docs = docs.count()
     n_cand = spark.read.parquet(f"{PREP_DIR}/candidates.parquet").count()
     # pairs-per-record is the blocking-precision canary: a jump here means a
@@ -139,54 +138,28 @@ def leg_layer1(cores: int) -> dict:
 
 def leg_layer2_staged(cores: int) -> dict:
     """Layer-2 with per-stage walls: attributes the pipeline's scaling gap
-    to a stage (VERDICT r2 #6). Materialization barriers (persist + count)
-    match the plan's own persist points, so the stage split adds only the
-    count actions."""
-    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators import (
-        blocking,
-        cluster,
-        extract,
-        pairs as P,
-        scoring,
+    to a stage (VERDICT r2 #6). Every stage of the flagship stage table is
+    persisted and counted, so the split adds only the counts and the final
+    stage's cache."""
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.plans.reconcile import (
+        flagship_stages,
+        run_stages,
+        timed,
     )
 
     spark = _spark(cores)
     docs = spark.read.parquet(f"{PREP_DIR}/documents.parquet")
     _warm(spark, cores)
-    stages: dict[str, float] = {}
+    walls: dict[str, float] = {}
     t_all = time.perf_counter()
-
-    t0 = time.perf_counter()
-    records = extract.extract_records(docs).persist()
-    records.count()
-    stages["extract"] = round(time.perf_counter() - t0, 2)
-
-    t0 = time.perf_counter()
-    keys = blocking.blocking_keys(records).persist()
-    keys.count()
-    stages["blocking"] = round(time.perf_counter() - t0, 2)
-
-    t0 = time.perf_counter()
-    cand = P.candidate_pairs(keys, hot_pair_threshold=100_000, max_block_size=2000).persist()
-    n_pairs = cand.count()
-    stages["candidates"] = round(time.perf_counter() - t0, 2)
-
-    t0 = time.perf_counter()
-    scored = scoring.score_pairs(cand, records).persist()
-    scored.count()
-    stages["scoring"] = round(time.perf_counter() - t0, 2)
-
-    t0 = time.perf_counter()
-    clusters = cluster.connected_components(
-        scoring.matched_edges(scored), assume_no_self_loops=True
-    )
-    n_clusters = clusters.select("cluster_id").distinct().count()
-    stages["cc"] = round(time.perf_counter() - t0, 2)
-
+    out = run_stages(flagship_stages(docs, **STAGE_KW), timed(walls))
     wall = time.perf_counter() - t_all
     return {
-        "layer": "2staged", "cores": cores, "pairs_scored": n_pairs,
-        "n_clusters": n_clusters, "stages": stages, "wall_sec": round(wall, 2),
+        "layer": "2staged", "cores": cores,
+        "pairs_scored": out["candidate_pairs"].count(),
+        "n_clusters": out["clusters"].select("cluster_id").distinct().count(),
+        "stages": {name: round(w, 2) for name, w in walls.items()},
+        "wall_sec": round(wall, 2),
     }
 
 
@@ -200,7 +173,7 @@ def leg_layer2(cores: int) -> dict:
     docs = spark.read.parquet(f"{PREP_DIR}/documents.parquet")
     _warm(spark, cores)
     t0 = time.perf_counter()
-    res = reconcile(docs, with_clusters=True, hot_pair_threshold=100_000, max_block_size=2000)
+    res = reconcile(docs, with_clusters=True, **STAGE_KW)
     n = res.scored.count()
     nc = res.clusters.select("cluster_id").distinct().count()
     wall = time.perf_counter() - t0
@@ -225,31 +198,29 @@ def leg_inc(cores: int) -> dict:
         incremental_reconcile,
     )
     from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.plans.reconcile import (
-        reconcile,
+        flagship_stages,
+        run_stages,
     )
     from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.sources.catalog import (
         Catalog,
+        run_stage,
     )
 
     spark = _spark(cores)
     docs = spark.read.parquet(f"{PREP_DIR}/documents.parquet")
     h = F.pmod(F.xxhash64("doc_id"), F.lit(10))
     old_docs, new_docs = docs.where(h != 0), docs.where(h == 0)
-    kw = dict(hot_pair_threshold=100_000, max_block_size=2000)
     _warm(spark, cores)
 
-    def _commit_all(cat, res):
-        cat.write_committed(res.records, "records")
-        cat.write_committed(res.keys, "blocking_keys")
-        cat.write_committed(res.candidate_pairs, "candidate_pairs")
-        cat.write_committed(res.scored, "scored")
-        cat.write_committed(res.clusters, "clusters")
+    def committed(cat):  # materializer: commit every stage to ``cat``
+        return lambda name, build: run_stage(cat, spark, name, build, force=True)
 
     root_inc = tempfile.mkdtemp(prefix="inc_bench_")
     root_full = tempfile.mkdtemp(prefix="full_bench_")
     try:
         cat = Catalog(root_inc)
-        _commit_all(cat, reconcile(old_docs, **kw))  # untimed prior state
+        # untimed prior state
+        run_stages(flagship_stages(old_docs, **STAGE_KW), committed(cat))
         # drop the prep run's caches AND its localCheckpoint RDDs before
         # timing (gc releases the checkpoint references; without this the
         # timed phases run against a half-full executor heap)
@@ -260,12 +231,12 @@ def leg_inc(cores: int) -> dict:
         spark.sparkContext._jvm.System.gc()
 
         t0 = time.perf_counter()
-        res_inc = incremental_reconcile(cat, spark, new_docs, **kw)
+        res_inc = incremental_reconcile(cat, spark, new_docs, **STAGE_KW)
         t_inc = time.perf_counter() - t0
 
         spark.catalog.clearCache()
         t0 = time.perf_counter()
-        _commit_all(Catalog(root_full), reconcile(docs, **kw))
+        run_stages(flagship_stages(docs, **STAGE_KW), committed(Catalog(root_full)))
         t_full = time.perf_counter() - t0
     finally:
         shutil.rmtree(root_inc, ignore_errors=True)
@@ -332,7 +303,7 @@ def main():
     s2, e2 = eff("2")
     sn, s4 = best[("2s", LEG_N)]["stages"], best[("2s", LEG_4N)]["stages"]
     stage_rows = []
-    for st in ("extract", "blocking", "candidates", "scoring", "cc"):
+    for st in sn:
         sp = sn[st] / s4[st] if s4[st] else float("nan")
         stage_rows.append(
             f"| {st} | {sn[st]} | {s4[st]} | {sp:.2f}x | {sp / (LEG_4N / LEG_N):.3f} |"

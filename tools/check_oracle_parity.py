@@ -18,54 +18,22 @@ import json
 import os
 import subprocess
 import sys
-from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
-
-import duckdb  # noqa: E402
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from parity import connect, oracle_result, rows_to_multiset  # noqa: E402
 from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.session import (  # noqa: E402
     get_spark,
 )
-
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-
-def norm_val(v):
-    # Type-sensitive on purpose: the driver's value hash distinguishes
-    # int from float (e.g. DuckDB HUGEINT -> float64 via Arrow), so an
-    # int-valued float must NOT normalize to the int's string.
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, Decimal):
-        return "dec:" + str(v)
-    if isinstance(v, float):
-        # NO -0.0 fold: the driver's hash is bit-sensitive, so the local
-        # replica must flag signed-zero divergence too (r2 x4 lesson) —
-        # queries/oracles normalize it themselves ("+ 0.0" after round)
-        return "f:" + repr(v)
-    if isinstance(v, int):
-        return "i:" + str(v)
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(norm_val(x) for x in v) + "]"
-    return str(v)
-
-
-def rows_to_multiset(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(norm_val(r[i]) for i in idx) for r in rows)
 
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark(app_name="oracle_parity", cores=8, shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = connect(sf_dir)
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
@@ -95,8 +63,7 @@ def main():
             continue
         try:
             sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
             rec["spark_rows"] = len(srows)
         except Exception as e:
             rec["err"] = "spark: " + str(e)[:300]
@@ -104,14 +71,7 @@ def main():
             failures.append(name)
             continue
         try:
-            res = con.sql(oracles[name])
-            # Fetch via Arrow, like the driver: this is where DuckDB's
-            # HUGEINT (int128 from raw sum()) silently becomes float64,
-            # so a missing BIGINT cast in an oracle shows up here too.
-            tbl = res.fetch_arrow_table()
-            dcols = tbl.column_names
-            dlists = [tbl.column(c).to_pylist() for c in dcols]
-            drows = list(zip(*dlists)) if dcols else []
+            dcols, drows = oracle_result(con, oracles[name])
             rec["oracle_rows"] = len(drows)
         except Exception as e:
             rec["err"] = "duckdb: " + str(e)[:300]
@@ -144,7 +104,7 @@ def main():
         # this records a verdict for every registered one at a known HEAD)
         try:
             head = subprocess.run(
-                ["git", "rev-parse", "HEAD"], cwd="/root/repo",
+                ["git", "rev-parse", "HEAD"], cwd=ROOT,
                 capture_output=True, text=True,
             ).stdout.strip()
         except Exception:
@@ -161,7 +121,7 @@ def main():
             },
             "queries": results,
         }
-        out = os.path.join("/root/repo", "PARITY_LOCAL.json")
+        out = os.path.join(ROOT, "PARITY_LOCAL.json")
         with open(out, "w") as f:
             json.dump(payload, f, indent=1)
         print(f"wrote {out} ({len(results)} queries at {head[:9]})")
