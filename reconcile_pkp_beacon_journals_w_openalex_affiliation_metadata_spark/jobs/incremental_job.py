@@ -24,6 +24,11 @@ import sys
 
 
 def main(argv=None):
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators.pairs import (
+        DEFAULT_N_SALTS,
+        HOT_PAIR_THRESHOLD,
+    )
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--new-documents", help="parquet path of the new document batch")
     ap.add_argument(
@@ -33,13 +38,9 @@ def main(argv=None):
     )
     ap.add_argument("--checkpoint", help="streaming checkpoint dir (with --stream-dir)")
     ap.add_argument("--output", required=True)
-    ap.add_argument("--n-salts", type=int, default=8)
+    ap.add_argument("--n-salts", type=int, default=DEFAULT_N_SALTS)
     ap.add_argument("--max-block-size", type=int, default=None)
-    ap.add_argument("--hot-pair-threshold", type=int, default=1_000_000)
-    ap.add_argument(
-        "--catalog-backend", choices=["marker", "table"], default="marker",
-        help="catalog backend the prior full run was committed with",
-    )
+    ap.add_argument("--hot-pair-threshold", type=int, default=HOT_PAIR_THRESHOLD)
     args = ap.parse_args(argv)
     if bool(args.new_documents) == bool(args.stream_dir):
         ap.error("exactly one of --new-documents / --stream-dir required")
@@ -51,7 +52,7 @@ def main(argv=None):
     from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.sources.catalog import Catalog
 
     spark = SparkSession.builder.appName("reconcile_incremental").getOrCreate()
-    cat = Catalog(args.output, backend=args.catalog_backend)
+    cat = Catalog(args.output)
     kwargs = dict(
         n_salts=args.n_salts,
         hot_pair_threshold=args.hot_pair_threshold,

@@ -80,16 +80,6 @@ def main(argv=None):
         action="store_true",
         help="with --synth: calibrate on the generated labeled pairs",
     )
-    ap.add_argument(
-        "--catalog-backend", default="marker",
-        choices=["marker", "table", "iceberg"],
-    )
-    ap.add_argument(
-        "--bucket-tables", type=int, default=0, metavar="N",
-        help="commit records/candidate_pairs hash-bucketed (N buckets) on "
-        "their scoring-join keys so downstream keyed joins run shuffle-free; "
-        "needs --catalog-backend table or iceberg",
-    )
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -101,17 +91,8 @@ def main(argv=None):
     # on a cluster the session comes from spark-submit; local fallback for smoke
     spark = SparkSession.builder.appName("reconcile_pkp_openalex").getOrCreate()
     run_id = args.run_id or uuid.uuid4().hex[:12]
-    cat = Catalog(args.output, backend=args.catalog_backend)
+    cat = Catalog(args.output)
     force = not args.resume
-    if args.bucket_tables and args.catalog_backend == "marker":
-        ap.error("--bucket-tables needs --catalog-backend table or iceberg")
-    # bucket the two sides of the scoring join on their join keys: the
-    # heaviest recurring shuffle becomes a one-time write-side cost
-    bucket_by = (
-        {"records": (["doc_id"], args.bucket_tables),
-         "candidate_pairs": (["left_id"], args.bucket_tables)}
-        if args.bucket_tables else {}
-    )
 
     labeled = None
     if args.synth:
@@ -139,7 +120,6 @@ def main(argv=None):
         df = run_stage(
             cat, spark, name, build,
             force=force or (fit is not None and name in ("scored", "clusters")),
-            bucket_by=bucket_by.get(name),
         )
         lineage_rows.append(lineage.partition_metrics(df, run_id, LINEAGE_STAGE[name]))
         if name == "scored":

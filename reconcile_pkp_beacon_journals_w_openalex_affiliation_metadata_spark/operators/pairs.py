@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from .blocking import block_size_metrics
 
 DEFAULT_N_SALTS = 8
+HOT_PAIR_THRESHOLD = 1_000_000
 
 
 def _exceptional_lists(
@@ -122,7 +123,7 @@ def _pair_join(
 def blocking_family_quality(
     keys: DataFrame,
     n_salts: int = DEFAULT_N_SALTS,
-    hot_pair_threshold: int = 1_000_000,
+    hot_pair_threshold: int = HOT_PAIR_THRESHOLD,
     max_block_size: int | None = None,
 ) -> DataFrame:
     """Per-blocking-family quality diagnostics: which key families earn
@@ -196,7 +197,7 @@ def _dedup_pairs(pairs: DataFrame) -> DataFrame:
 def candidate_pairs(
     keys: DataFrame,
     n_salts: int = DEFAULT_N_SALTS,
-    hot_pair_threshold: int = 1_000_000,
+    hot_pair_threshold: int = HOT_PAIR_THRESHOLD,
     max_block_size: int | None = None,
 ) -> DataFrame:
     """(left_id, right_id, blocking_key, n_shared_keys) candidate pairs.
@@ -220,7 +221,7 @@ def delta_candidate_pairs(
     old_keys: DataFrame,
     new_keys: DataFrame,
     n_salts: int = DEFAULT_N_SALTS,
-    hot_pair_threshold: int = 1_000_000,
+    hot_pair_threshold: int = HOT_PAIR_THRESHOLD,
     max_block_size: int | None = None,
 ) -> DataFrame:
     """Pairs with at least one NEW endpoint: new-left x all-right plus

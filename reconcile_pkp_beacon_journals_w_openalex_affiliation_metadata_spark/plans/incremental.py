@@ -47,7 +47,7 @@ def incremental_reconcile(
     spark: SparkSession,
     new_documents: DataFrame,
     n_salts: int = pairs.DEFAULT_N_SALTS,
-    hot_pair_threshold: int = 1_000_000,
+    hot_pair_threshold: int = pairs.HOT_PAIR_THRESHOLD,
     max_block_size: int | None = None,
     weights: dict | None = None,
     threshold: float | None = None,
@@ -58,15 +58,6 @@ def incremental_reconcile(
     ``clusters`` tables (a prior full run); publishes updated versions of
     all four plus ``candidate_pairs``.
     """
-    if cat.backend not in ("marker", "table"):
-        # both file-based backends speak the batch-ledger append protocol;
-        # the production answer for Iceberg is engine-native appends /
-        # snapshot commits, which this sandbox cannot execute (no jar).
-        raise NotImplementedError(
-            "incremental_reconcile supports the 'marker' and 'table' catalog "
-            f"backends; got {cat.backend!r} (iceberg needs engine-native "
-            "appends)"
-        )
     # retire ORPHANED batches from a crashed prior run first: records
     # appends LAST, so any batch id present in a downstream table but
     # absent from records never completed — and a replay may arrive with a
@@ -75,11 +66,8 @@ def incremental_reconcile(
     # "committed to records" = live batch OR one compact() already folded
     # into records' base: compacting records must not make fully-committed
     # downstream batches look orphaned (they would be retired = data loss)
-    rec_ledger = (
-        cat._ledger_read("records") if cat.is_committed("records", spark) else {}
-    )
-    rec_batches = set(rec_ledger.get("batches", [])) | set(
-        rec_ledger.get("compacted_batches", [])
+    rec_batches = set(cat.list_batches("records")) | set(
+        cat.compacted_batches("records")
     )
     for t in ("blocking_keys", "candidate_pairs", "scored"):
         for b in cat.list_batches(t):
@@ -92,13 +80,9 @@ def incremental_reconcile(
         # Fail loudly instead of silently duplicating; the repair is a
         # full rebuild of the affected table. compact()'s docstring tells
         # operators to run a replay (which retires orphans) first.
-        folded_orphans = []
-        if cat.is_committed(t, spark):
-            folded_orphans = [
-                b
-                for b in cat._ledger_read(t).get("compacted_batches", [])
-                if b not in rec_batches
-            ]
+        folded_orphans = [
+            b for b in cat.compacted_batches(t) if b not in rec_batches
+        ]
         if folded_orphans:
             raise RuntimeError(
                 f"table {t!r}: batch(es) {folded_orphans} were compacted "
@@ -177,10 +161,10 @@ def incremental_reconcile(
         F.col("node").alias("u"), F.col("cluster_id").alias("v")
     )
     edges = seed_edges.unionByName(scoring.matched_edges(delta_scored))
-    # pinned like every other delta frame: the clusters rewrite below must
-    # not read the very table (or cached plan) it replaces — on the table
-    # backend saveAsTable(overwrite) cannot rewrite a table its own input
-    # plan reads, and CC's internal checkpoints don't pin the seed scan
+    # pinned like every other delta frame: the clusters rewrite below
+    # deletes the very files the seed scan reads (and refreshByPath drops
+    # any cached plan over them), and CC's internal checkpoints don't pin
+    # the seed scan
     clusters = cluster.connected_components(edges).localCheckpoint()
 
     n_delta = delta_pairs.count()

@@ -35,11 +35,10 @@ from typing import TYPE_CHECKING, Callable
 from pyspark.sql import DataFrame
 
 from ..operators import blocking, cluster, extract, pairs, scoring
+from ..operators.pairs import HOT_PAIR_THRESHOLD
 
 if TYPE_CHECKING:
     from ..operators.calibrate import Calibration
-
-HOT_PAIR_THRESHOLD = 1_000_000
 
 Build = Callable[[dict], DataFrame]
 Materialize = Callable[[str, Callable[[], DataFrame]], DataFrame]

@@ -1,8 +1,7 @@
-"""Committed-table catalog: the Iceberg stand-in.
+"""Committed-table catalog: a marker-and-ledger commit protocol over parquet.
 
-Production deployments put every stage output in an Iceberg table (atomic
-snapshot commits, partition pruning, incremental reads). This sandbox has no
-Iceberg runtime jar, so the same contract is provided over parquet:
+Every stage output is a directory that readers see only once it is fully
+committed:
 
 - ``write_committed``: stage output written to ``<table>/_staging_<token>``,
   then atomically renamed to ``<table>/data`` + a ``_COMMIT`` marker written
@@ -10,38 +9,31 @@ Iceberg runtime jar, so the same contract is provided over parquet:
   append-mode gz writers + filesystem existence checks, main.rs:381,
   vlm_text_extractor.py:611-646).
 - ``read_committed``: returns None unless the commit marker exists.
+- ``append_committed``: O(batch) appends; a batch is visible only once the
+  marker's batch ledger lists it.
 - ``resume_filter``: left **anti-join** of the input against the committed
   output's keys — the reference's skip-if-output-exists resume
   (vlm_text_extractor.py:663-670) as a distributed operator (SURVEY S12/J4).
 
-Directory layout per table:  <root>/<name>/data/*.parquet + <root>/<name>/_COMMIT
+Directory layout per table:
+``<root>/<name>/data/*.parquet`` + ``<root>/<name>/batch_<id>/`` +
+``<root>/<name>/_COMMIT``. The marker is the table's one piece of commit
+state: a JSON object with ``meta``, ``partition_by``, ``batches`` (the live
+appended batches) and ``compacted_batches`` (ids ``compact()`` folded into
+the base). It is only ever replaced whole, via write-temp + fsync +
+``os.replace``, so readers never see a torn ledger.
 
-Three backends behind the ``backend`` flag, all satisfying the same
-contract (is_committed / write_committed / read_committed / resume_filter),
-so every stage and test runs identically over any of them:
-
-- ``marker`` (default): the parquet + _COMMIT protocol above. Works on any
-  filesystem, no extra jars.
-- ``table``: Spark-catalog managed tables (``saveAsTable`` with identity
-  ``partitionBy``); commit atomicity comes from Spark's own commit
-  protocol + catalog registration, i.e. the table exists in the session
-  catalog only after a successful write.
-- ``iceberg``: ``df.writeTo(<catalog>.<name>).createOrReplace()`` — the
-  documented production target (real snapshot isolation, partition
-  evolution, incremental reads). **UNTESTED — needs the Iceberg runtime
-  jar**, which this sandbox does not have and cannot download; the code
-  path has never executed here (it raises a clear error without the jar,
-  and its test auto-skips). Treat it as a documented write-up of the
-  intended production mapping, not verified behavior: run the parametrized
-  resume/compaction tests with the jar on the classpath before relying on
-  it.
+Production target: the same contract maps onto Iceberg. A full write is
+one snapshot commit of a replace, ``append_committed`` is
+``writeTo(...).append()`` (its own snapshot), ``compact`` is Iceberg's
+``rewrite_data_files`` procedure, and the batch ledger becomes snapshot
+summary properties. Snapshot isolation then replaces the marker.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 import uuid
 
@@ -49,25 +41,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class Catalog:
-    def __init__(self, root: str, backend: str = "marker", iceberg_catalog: str = "local"):
-        if backend not in ("marker", "table", "iceberg"):
-            raise ValueError(f"unknown catalog backend: {backend!r}")
+    def __init__(self, root: str):
         self.root = root
-        self.backend = backend
-        self.iceberg_catalog = iceberg_catalog
         os.makedirs(root, exist_ok=True)
-
-    # table/iceberg backends namespace their table names; marker uses dirs.
-    # The ident embeds a hash of root so two Catalog instances in one Spark
-    # session (e.g. parallel tests) cannot collide on a bare table name.
-    def _table_ident(self, name: str) -> str:
-        import hashlib
-
-        safe = name.replace("-", "_").replace(".", "_")
-        ns = hashlib.md5(self.root.encode()).hexdigest()[:8]
-        if self.backend == "iceberg":
-            return f"{self.iceberg_catalog}.spark_graft.{safe}_{ns}"
-        return f"spark_graft_{ns}_{safe}"
 
     def _dir(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -75,108 +51,22 @@ class Catalog:
     def _marker(self, name: str) -> str:
         return os.path.join(self._dir(name), "_COMMIT")
 
-    def is_committed(self, name: str, spark: SparkSession | None = None) -> bool:
-        if self.backend == "marker":
-            return os.path.exists(self._marker(name))
-        spark = spark or SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError(f"{self.backend} backend needs an active SparkSession")
-        return spark.catalog.tableExists(self._table_ident(name))
+    def is_committed(self, name: str) -> bool:
+        return os.path.exists(self._marker(name))
 
     def write_committed(
         self, df: DataFrame, name: str, partition_by: list[str] | None = None,
         meta: dict | None = None,
-        bucket_by: tuple[list[str], int] | None = None,
         compacted_batches: list[str] | None = None,
     ) -> None:
         """Write + atomic publish. Invariant at every crash point: the
         committed state is marker-AND-data or neither.
 
-        ``bucket_by=(cols, n)`` hash-buckets the table on ``cols`` (sorted
-        within buckets): a downstream join or aggregation keyed on those
-        columns reads pre-shuffled, pre-sorted data — SortMergeJoin with
-        ZERO Exchange when both sides are bucketed to the same count. At
-        100 TB this converts the scoring join's per-run shuffle of the
-        records table into a one-time write cost amortized across every
-        stage that joins on the key. Bucket specs live in catalog table
-        metadata, so this needs the ``table`` backend (or ``iceberg``,
-        which expresses it as a bucket partition transform); the marker
-        backend raises — Spark will not trust bucket layout on bare
-        parquet dirs.
-
         Overwrite order matters: the old _COMMIT marker is removed BEFORE
         the old data dir is deleted (a crash in between leaves an
         uncommitted table that a restart recomputes, never a committed
         table with missing data), and the new marker is published via
-        write-to-temp + os.replace so readers never see a torn marker.
-
-        Non-marker backends delegate commit atomicity to the engine: the
-        Spark catalog registers the table only after a successful write;
-        Iceberg's createOrReplace is one snapshot commit."""
-        if self.backend == "iceberg":
-            from pyspark.sql import functions as F
-
-            w = df.writeTo(self._table_ident(name)).using("iceberg")
-            parts = [F.col(c) for c in (partition_by or [])]
-            if bucket_by:
-                cols, n = bucket_by
-                parts += [F.bucket(n, c) for c in cols]
-            if parts:
-                w = w.partitionedBy(*parts)
-            if meta:
-                for k, v in meta.items():
-                    w = w.tableProperty(f"graft.{k}", str(v))
-            w.createOrReplace()  # raises without the Iceberg jar/catalog
-            return
-        if self.backend == "table":
-            # Ledger ordering mirrors the marker backend's demote-first
-            # philosophy, within saveAsTable's limits (no staging+rename):
-            # - plain rewrite: reset the ledger BEFORE publishing — a crash
-            #   in between leaves appended batches invisible (the batch
-            #   looks unprocessed; the incremental replay protocol repairs
-            #   it), never double-counted.
-            # - compaction (compacted_batches set): the pinned df already
-            #   CONTAINS the batch rows, so publish first and retire the
-            #   ledger after — a crash in between double-counts until
-            #   compact() is rerun (documented; Iceberg's snapshot commit
-            #   is the atomic production answer).
-            # read the ledger FILE unconditionally: the catalog entry may be
-            # gone (crashed overwrite, external drop) while _BATCHES still
-            # lists batch dirs — skipping the reset then deleting the dirs
-            # below would leave a ledger pointing at missing paths and every
-            # subsequent read_committed raising on the dead parquet path
-            ledger = self._ledger_read(name)
-            if compacted_batches is None and (
-                ledger.get("batches") or ledger.get("compacted_batches")
-            ):
-                # full rewrite owes nothing to old batches: reset both lists
-                # (a replayed old id must append against the NEW base)
-                self._ledger_write(name, {"batches": [], "compacted_batches": []})
-            w = df.write.mode("overwrite").format("parquet").option(
-                "path", os.path.join(self._dir(name), "table_data")
-            )
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            if bucket_by:
-                cols, n = bucket_by
-                w = w.bucketBy(n, *cols).sortBy(*cols)
-            w.saveAsTable(self._table_ident(name))
-            if compacted_batches is not None:
-                self._ledger_write(
-                    name,
-                    {"batches": [], "compacted_batches": compacted_batches},
-                )
-            tdir = self._dir(name)
-            for entry in os.listdir(tdir) if os.path.exists(tdir) else []:
-                if entry.startswith("batch_"):
-                    shutil.rmtree(os.path.join(tdir, entry), ignore_errors=True)
-            df.sparkSession.catalog.refreshByPath(tdir)
-            return
-        if bucket_by:
-            raise ValueError(
-                "bucket_by needs catalog table metadata; use backend='table' "
-                "or 'iceberg' (the marker backend writes bare parquet dirs)"
-            )
+        write-to-temp + os.replace so readers never see a torn marker."""
         tdir = self._dir(name)
         self._sweep_stale_staging(tdir)
         staging = os.path.join(tdir, f"_staging_{uuid.uuid4().hex[:8]}")
@@ -195,23 +85,18 @@ class Catalog:
             if entry.startswith("batch_"):
                 shutil.rmtree(os.path.join(tdir, entry), ignore_errors=True)
         os.replace(staging, data)
-        tmp_marker = marker + f".tmp_{uuid.uuid4().hex[:8]}"
-        with open(tmp_marker, "w") as f:
-            json.dump(
-                {
-                    "table": name,
-                    "meta": meta or {},
-                    "partition_by": partition_by or [],
-                    # batch ids whose rows are already folded into this base
-                    # (set by compact()); append_committed treats a replay of
-                    # one as a no-op so compaction preserves idempotent replay
-                    "compacted_batches": compacted_batches or [],
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp_marker, marker)
+        self._write_marker(
+            name,
+            {
+                "table": name,
+                "meta": meta or {},
+                "partition_by": partition_by or [],
+                # batch ids whose rows are already folded into this base
+                # (set by compact()); append_committed treats a replay of
+                # one as a no-op so compaction preserves idempotent replay
+                "compacted_batches": compacted_batches or [],
+            },
+        )
         # invalidate Spark's file-listing cache AND any cached plan reading
         # this path: a table REwrite keeps the same data dir, and the
         # CacheManager matches persisted plans by canonicalized path — a
@@ -244,72 +129,24 @@ class Catalog:
             os.fsync(f.fileno())
         os.replace(tmp, marker)
 
-    # The batch LEDGER (which appended batches are visible + which ids a
-    # compaction already folded into the base) lives inside the _COMMIT
-    # marker on the marker backend and in a sidecar _BATCHES file on the
-    # table backend (the table's commit state is the Spark catalog entry,
-    # which cannot carry the list atomically). Same JSON shape either way;
-    # both publish via write-temp + os.replace so readers never see a torn
-    # ledger.
-    def _ledger_path(self, name: str) -> str:
-        return os.path.join(self._dir(name), "_BATCHES")
-
-    def _ledger_read(self, name: str) -> dict:
-        if self.backend == "marker":
-            return self._read_marker(name)
-        p = self._ledger_path(name)
-        if not os.path.exists(p):
-            return {}
-        with open(p) as f:
-            return json.load(f)
-
-    def _ledger_write(self, name: str, payload: dict) -> None:
-        if self.backend == "marker":
-            self._write_marker(name, payload)
-            return
-        os.makedirs(self._dir(name), exist_ok=True)
-        p = self._ledger_path(name)
-        tmp = p + f".tmp_{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, p)
-
     def read_committed(self, spark: SparkSession, name: str) -> DataFrame | None:
-        if not self.is_committed(name, spark):
+        if not self.is_committed(name):
             return None
-        if self.backend == "marker":
-            tdir = self._dir(name)
-            paths = [os.path.join(tdir, "data")]
-            # append-committed batches: only dirs LISTED IN THE MARKER are
-            # readable (a half-written batch dir is invisible)
-            paths += [
-                os.path.join(tdir, f"batch_{b}")
-                for b in self._read_marker(name).get("batches", [])
-            ]
-            return spark.read.parquet(*paths)
-        base = spark.table(self._table_ident(name))
-        if self.backend == "table":
-            batches = self._ledger_read(name).get("batches", [])
-            if batches:
-                extra = spark.read.parquet(
-                    *[
-                        os.path.join(self._dir(name), f"batch_{b}")
-                        for b in batches
-                    ]
-                )
-                # unionByName: batch parquet stores partition columns as
-                # ordinary columns, so order may differ from the table's
-                base = base.unionByName(extra.select(*base.columns))
-        return base
+        tdir = self._dir(name)
+        paths = [os.path.join(tdir, "data")]
+        # append-committed batches: only dirs LISTED IN THE MARKER are
+        # readable (a half-written batch dir is invisible)
+        paths += [
+            os.path.join(tdir, f"batch_{b}")
+            for b in self._read_marker(name).get("batches", [])
+        ]
+        return spark.read.parquet(*paths)
 
     def append_committed(self, df: DataFrame, name: str, batch_id: str) -> None:
         """Append-style commit: O(batch) IO instead of the O(table)
-        union-rewrite — the shape Iceberg appends give in production, here
-        over the batch-ledger protocol (marker AND table backends). The
+        union-rewrite — the shape Iceberg appends give in production. The
         batch is written to ``<table>/batch_<id>`` and becomes visible only
-        when the ledger's batch list is atomically replaced. Re-appending
+        when the marker's batch list is atomically replaced. Re-appending
         the SAME batch_id REPLACES that batch (the id is first retired from
         the ledger, so a crashed replay can never double-count): with
         deterministic batch ids, replays are idempotent. A batch id that
@@ -317,30 +154,21 @@ class Catalog:
         ``compacted_batches``) replays as a replace-nothing no-op — replay
         idempotency survives compaction.
         """
-        if self.backend == "iceberg":
-            raise NotImplementedError(
-                "append_committed on the iceberg backend is an engine-native "
-                "append (df.writeTo(...).append() snapshot commit); the "
-                "batch-ledger protocol covers marker and table backends"
-            )
         spark = df.sparkSession
-        if not self.is_committed(name, spark):
+        if not self.is_committed(name):
             raise ValueError(f"table {name!r} has no base commit to append to")
         tdir = self._dir(name)
-        ledger = self._ledger_read(name)
-        if self.backend == "marker" and ledger.get("partition_by"):
+        ledger = self._read_marker(name)
+        if ledger.get("partition_by"):
             raise NotImplementedError(
                 f"append to {name!r}: the base commit is hive-partitioned by "
                 f"{ledger['partition_by']} and flat batch dirs cannot be mixed "
                 "into a partitioned layout"
             )
-        # schema guard against the BASE only (marker: one footer read;
-        # table: catalog metadata — batches share its schema by induction;
-        # reading the whole table here would make the guard O(#batches))
-        if self.backend == "marker":
-            base_cols = set(spark.read.parquet(os.path.join(tdir, "data")).columns)
-        else:
-            base_cols = set(spark.table(self._table_ident(name)).columns)
+        # schema guard against the BASE only (one footer read — batches
+        # share its schema by induction; reading the whole table here would
+        # make the guard O(#batches))
+        base_cols = set(spark.read.parquet(os.path.join(tdir, "data")).columns)
         if set(df.columns) != base_cols:
             raise ValueError(
                 f"append to {name!r} with mismatched columns: "
@@ -356,29 +184,34 @@ class Catalog:
         batches = [b for b in ledger.get("batches", []) if b != safe]
         if len(batches) != len(ledger.get("batches", [])):
             # replay of a known batch: retire it BEFORE touching its dir
-            self._ledger_write(name, {**ledger, "batches": batches})
-        os.makedirs(tdir, exist_ok=True)
+            self._write_marker(name, {**ledger, "batches": batches})
         self._sweep_stale_staging(tdir)
         staging = os.path.join(tdir, f"_staging_{uuid.uuid4().hex[:8]}")
         df.write.mode("overwrite").parquet(staging)
         if os.path.exists(bdir):
             shutil.rmtree(bdir)
         os.replace(staging, bdir)
-        self._ledger_write(name, {**ledger, "batches": batches + [safe]})
+        self._write_marker(name, {**ledger, "batches": batches + [safe]})
         spark.catalog.refreshByPath(tdir)
-        if self.backend == "table":
-            spark.catalog.refreshTable(self._table_ident(name))
 
     def list_batches(self, name: str) -> list[str]:
-        if self.backend == "iceberg" or not self.is_committed(name):
+        """Live appended batch ids ([] for an uncommitted table)."""
+        if not self.is_committed(name):
             return []
-        return list(self._ledger_read(name).get("batches", []))
+        return list(self._read_marker(name).get("batches", []))
+
+    def compacted_batches(self, name: str) -> list[str]:
+        """Batch ids ``compact()`` folded into the base ([] for an
+        uncommitted table)."""
+        if not self.is_committed(name):
+            return []
+        return list(self._read_marker(name).get("compacted_batches", []))
 
     def drop_batch(self, name: str, batch_id: str) -> None:
         """Retire an appended batch: the ledger entry goes first (atomic —
         readers never see the dir disappear while it is still listed)."""
-        ledger = self._ledger_read(name)
-        self._ledger_write(
+        ledger = self._read_marker(name)
+        self._write_marker(
             name,
             {
                 **ledger,
@@ -392,33 +225,24 @@ class Catalog:
         if spark is not None:
             spark.catalog.refreshByPath(self._dir(name))
 
-    def drop(self, name: str, spark: SparkSession | None = None) -> None:
-        if self.backend != "marker":
-            spark = spark or SparkSession.getActiveSession()
-            if spark is not None:
-                spark.sql(f"DROP TABLE IF EXISTS {self._table_ident(name)}")
+    def drop(self, name: str) -> None:
         if os.path.exists(self._dir(name)):
             shutil.rmtree(self._dir(name))
 
-    def compact(
-        self, spark: SparkSession, name: str, target_partitions: int,
-        bucket_by: tuple[list[str], int] | None = None,
-    ) -> None:
+    def compact(self, spark: SparkSession, name: str, target_partitions: int) -> None:
         """Rewrite a committed table into ``target_partitions`` files.
 
         The small-files problem at 100 TB: a stage committed from thousands
         of tasks leaves thousands of tiny parquet files, and every
         downstream scan pays per-file open/footer cost plus scheduler
         pressure. Compaction is a coalesce (no shuffle) + the same atomic
-        republish protocol; ``bucket_by`` optionally re-lays the table out
-        bucketed while it is being rewritten anyway (table/iceberg
-        backends). The read is localCheckpoint-ed first so the rewrite
-        never scans the path it is replacing.
+        republish protocol. The read is localCheckpoint-ed first so the
+        rewrite never scans the path it is replacing.
 
         The existing layout is preserved: a hive-partitioned table is
-        republished with the SAME partition_by (and, on the marker backend,
-        the same marker meta) — compaction must never silently flatten a
-        partitioned table and lose downstream partition pruning.
+        republished with the SAME partition_by and the same marker meta —
+        compaction must never silently flatten a partitioned table and lose
+        downstream partition pruning.
 
         Appended batches are FOLDED into the new base and become
         unretirable (their ids move to ``compacted_batches``). In a
@@ -431,75 +255,17 @@ class Catalog:
         df = self.read_committed(spark, name)
         if df is None:
             raise ValueError(f"table {name!r} is not committed")
-        if self.backend == "iceberg" and bucket_by is None:
-            # the iceberg path cannot READ the existing partition/bucket
-            # spec here (backend is untested in this sandbox — no jar), so
-            # a compaction would silently recreate the table flat; refuse
-            # instead of breaking the layout-preservation invariant above
-            raise NotImplementedError(
-                "compact on the iceberg backend cannot recover the existing "
-                "partition/bucket spec; pass bucket_by explicitly or use "
-                "Iceberg's own rewrite_data_files procedure in production"
-            )
-        partition_by: list[str] | None = None
-        meta: dict | None = None
-        compacted: list[str] | None = None
-        if self.backend in ("marker", "table"):
-            m = self._ledger_read(name)
-            # batches folded into the new base are retired but REMEMBERED:
-            # a crash-replay of one after compaction must be a no-op, not a
-            # duplicate append (idempotent-replay contract)
-            compacted = sorted(
-                set(m.get("batches", [])) | set(m.get("compacted_batches", []))
-            ) or None
-        if self.backend == "marker":
-            m = self._read_marker(name)
-            partition_by = m.get("partition_by") or None
-            meta = m.get("meta") or None
-        elif self.backend == "table":
-            partition_by = [
-                c.name
-                for c in spark.catalog.listColumns(self._table_ident(name))
-                if c.isPartition
-            ] or None
-            if bucket_by is None:
-                # bucket layout must survive compaction too (losing it would
-                # silently re-introduce the shuffle the table was bucketed
-                # to avoid); DESCRIBE FORMATTED carries the spec
-                # only rows AFTER the first "# ..." section header are table
-                # metadata — a data column literally named "Num Buckets"
-                # would otherwise collide in the dict
-                desc: dict[str, str] = {}
-                in_info = False
-                for r in spark.sql(
-                    f"DESCRIBE FORMATTED {self._table_ident(name)}"
-                ).collect():
-                    if str(r["col_name"]).startswith("#"):
-                        in_info = True
-                        continue
-                    if in_info and r["col_name"]:
-                        desc.setdefault(r["col_name"], r["data_type"] or "")
-                if desc.get("Num Buckets"):
-                    # bucket columns render as `a`, `b` — take the
-                    # backtick-quoted identifiers (comma-safe), not a naive
-                    # comma split of the bracketed list
-                    cols = re.findall(r"`((?:[^`]|``)+)`", desc["Bucket Columns"])
-                    cols = [c.replace("``", "`") for c in cols]
-                    known = {
-                        c.name
-                        for c in spark.catalog.listColumns(self._table_ident(name))
-                    }
-                    if not cols or not set(cols) <= known:
-                        raise ValueError(
-                            f"compact {name!r}: cannot recover bucket spec from "
-                            f"DESCRIBE FORMATTED ({desc['Bucket Columns']!r}); "
-                            "pass bucket_by explicitly"
-                        )
-                    bucket_by = (cols, int(desc["Num Buckets"]))
+        m = self._read_marker(name)
+        # batches folded into the new base are retired but REMEMBERED:
+        # a crash-replay of one after compaction must be a no-op, not a
+        # duplicate append (idempotent-replay contract)
+        compacted = sorted(
+            set(m.get("batches", [])) | set(m.get("compacted_batches", []))
+        ) or None
         pinned = df.coalesce(target_partitions).localCheckpoint()
         self.write_committed(
             pinned, name,
-            partition_by=partition_by, meta=meta, bucket_by=bucket_by,
+            partition_by=m.get("partition_by") or None, meta=m.get("meta") or None,
             compacted_batches=compacted,
         )
 
@@ -522,7 +288,6 @@ def run_stage(
     build: "callable",
     partition_by: list[str] | None = None,
     force: bool = False,
-    bucket_by: tuple[list[str], int] | None = None,
 ) -> DataFrame:
     """Checkpointed stage runner: skip when committed, else build + commit.
     ``build()`` -> DataFrame. Restart-safe: a rerun after a crash recomputes
@@ -532,5 +297,5 @@ def run_stage(
         if cached is not None:
             return cached
     df = build()
-    catalog.write_committed(df, name, partition_by=partition_by, bucket_by=bucket_by)
+    catalog.write_committed(df, name, partition_by=partition_by)
     return catalog.read_committed(spark, name)

@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.sources.catalog import (
@@ -71,12 +69,10 @@ def test_run_stage_recomputes_after_crash(spark, tmp_path):
     assert calls["n"] == 2
 
 
-@pytest.mark.parametrize("backend", ["marker", "table"])
-def test_resume_semantics_identical_across_backends(spark, tmp_path, backend):
-    """VERDICT r2 #7: the table-format backend must satisfy the exact same
-    resume contract as the marker protocol — same skip-when-committed, same
-    anti-join remainder, same partitioned layout."""
-    cat = Catalog(str(tmp_path / f"cat_{backend}"), backend=backend)
+def test_resume_semantics_partitioned_stage(spark, tmp_path):
+    """The resume contract on a hive-partitioned stage: skip-when-committed,
+    anti-join remainder, drop -> rebuild."""
+    cat = Catalog(str(tmp_path / "cat"))
     calls = {"n": 0}
 
     def build():
@@ -89,79 +85,43 @@ def test_resume_semantics_identical_across_backends(spark, tmp_path, backend):
     again = run_stage(cat, spark, "stage", build, partition_by=["part"])
     assert calls["n"] == 1  # committed stage never rebuilds
     assert sorted(map(tuple, first.collect())) == sorted(map(tuple, again.collect()))
-    assert cat.is_committed("stage", spark)
+    assert cat.is_committed("stage")
 
     inputs = spark.range(60).select(F.col("id").alias("doc_id"))
     todo = cat.resume_filter(spark, inputs, "stage", "doc_id")
     assert sorted(r["doc_id"] for r in todo.collect()) == list(range(40, 60))
 
-    cat.drop("stage", spark)
-    assert not cat.is_committed("stage", spark)
+    cat.drop("stage")
+    assert not cat.is_committed("stage")
     assert cat.read_committed(spark, "stage") is None
     run_stage(cat, spark, "stage", build, partition_by=["part"])
     assert calls["n"] == 2  # dropped -> rebuilt
 
 
-def test_table_backend_partition_pruning(spark, tmp_path):
-    """Identity partitions must reach the filesystem layout (Iceberg-style
-    partition pruning depends on it)."""
-    import glob
-
-    cat = Catalog(str(tmp_path / "catp"), backend="table")
-    df = spark.range(20).select(F.col("id"), (F.col("id") % 2).alias("side"))
-    cat.write_committed(df, "pt", partition_by=["side"])
-    dirs = glob.glob(str(tmp_path / "catp" / "pt" / "table_data" / "side=*"))
-    assert sorted(os.path.basename(d) for d in dirs) == ["side=0", "side=1"]
-    cat.drop("pt", spark)
-
-
-def test_iceberg_backend_requires_runtime(spark, tmp_path):
-    """The iceberg backend is wired but needs the runtime jar + a configured
-    catalog; in this sandbox the write must fail loudly, never silently
-    fall back."""
-    cat = Catalog(str(tmp_path / "cati"), backend="iceberg")
-    try:
-        cat.write_committed(spark.range(3), "it")
-    except Exception:
-        pass  # expected: no Iceberg catalog configured
-    else:  # pragma: no cover - only on clusters with the jar
-        got = cat.read_committed(spark, "it")
-        assert got is not None and got.count() == 3
-
-
 def test_compact_reduces_files_preserves_rows(spark, tmp_path):
     """Small-files compaction: same rows, same committed contract, fewer
-    part files; works on both marker and table backends."""
+    part files."""
     import glob
 
-    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.sources.catalog import (
-        Catalog,
+    cat = Catalog(str(tmp_path / "cmp"))
+    df = spark.range(0, 1000).repartition(16).selectExpr(
+        "cast(id as string) as doc_id", "id % 7 as v"
     )
-
-    for backend in ("marker", "table"):
-        cat = Catalog(str(tmp_path / f"cmp_{backend}"), backend=backend)
-        df = spark.range(0, 1000).repartition(16).selectExpr(
-            "cast(id as string) as doc_id", "id % 7 as v"
-        )
-        cat.write_committed(df, "t")
-        before = sorted(
-            (r["doc_id"], r["v"]) for r in cat.read_committed(spark, "t").collect()
-        )
-        data_glob = (
-            str(tmp_path / f"cmp_{backend}" / "t" / "data" / "part-*")
-            if backend == "marker"
-            else str(tmp_path / f"cmp_{backend}" / "t" / "table_data" / "part-*")
-        )
-        n_before = len(glob.glob(data_glob))
-        assert n_before >= 8
-        cat.compact(spark, "t", 2)
-        assert cat.is_committed("t", spark)
-        after = sorted(
-            (r["doc_id"], r["v"]) for r in cat.read_committed(spark, "t").collect()
-        )
-        assert before == after
-        assert len(glob.glob(data_glob)) <= 2
-        cat.drop("t", spark)
+    cat.write_committed(df, "t")
+    before = sorted(
+        (r["doc_id"], r["v"]) for r in cat.read_committed(spark, "t").collect()
+    )
+    data_glob = str(tmp_path / "cmp" / "t" / "data" / "part-*")
+    n_before = len(glob.glob(data_glob))
+    assert n_before >= 8
+    cat.compact(spark, "t", 2)
+    assert cat.is_committed("t")
+    after = sorted(
+        (r["doc_id"], r["v"]) for r in cat.read_committed(spark, "t").collect()
+    )
+    assert before == after
+    assert len(glob.glob(data_glob)) <= 2
+    cat.drop("t")
 
 
 def test_append_committed_batches(spark, tmp_path):
@@ -275,34 +235,28 @@ def test_compact_preserves_partition_layout_and_meta(spark, tmp_path):
     the SAME partition_by (pruning survives) and the same marker meta."""
     import glob
 
-    for backend in ("marker", "table"):
-        cat = Catalog(str(tmp_path / f"cpp_{backend}"), backend=backend)
-        df = spark.range(0, 200).repartition(8).selectExpr(
-            "cast(id as string) as doc_id", "id % 3 as shard", "id * 2 as v"
-        )
-        cat.write_committed(
-            df, "t", partition_by=["shard"],
-            meta={"stage": "scored"} if backend == "marker" else None,
-        )
-        before = sorted(
-            (r["doc_id"], r["shard"], r["v"])
-            for r in cat.read_committed(spark, "t").collect()
-        )
-        cat.compact(spark, "t", 1)
-        sub = "data" if backend == "marker" else "table_data"
-        part_dirs = glob.glob(str(tmp_path / f"cpp_{backend}" / "t" / sub / "shard=*"))
-        assert sorted(os.path.basename(p) for p in part_dirs) == [
-            "shard=0", "shard=1", "shard=2",
-        ]
-        after = sorted(
-            (r["doc_id"], r["shard"], r["v"])
-            for r in cat.read_committed(spark, "t").collect()
-        )
-        assert before == after
-        if backend == "marker":
-            assert cat._read_marker("t")["meta"] == {"stage": "scored"}
-            assert cat._read_marker("t")["partition_by"] == ["shard"]
-        cat.drop("t", spark)
+    cat = Catalog(str(tmp_path / "cpp"))
+    df = spark.range(0, 200).repartition(8).selectExpr(
+        "cast(id as string) as doc_id", "id % 3 as shard", "id * 2 as v"
+    )
+    cat.write_committed(df, "t", partition_by=["shard"], meta={"stage": "scored"})
+    before = sorted(
+        (r["doc_id"], r["shard"], r["v"])
+        for r in cat.read_committed(spark, "t").collect()
+    )
+    cat.compact(spark, "t", 1)
+    part_dirs = glob.glob(str(tmp_path / "cpp" / "t" / "data" / "shard=*"))
+    assert sorted(os.path.basename(p) for p in part_dirs) == [
+        "shard=0", "shard=1", "shard=2",
+    ]
+    after = sorted(
+        (r["doc_id"], r["shard"], r["v"])
+        for r in cat.read_committed(spark, "t").collect()
+    )
+    assert before == after
+    assert cat._read_marker("t")["meta"] == {"stage": "scored"}
+    assert cat._read_marker("t")["partition_by"] == ["shard"]
+    cat.drop("t")
 
 
 def test_stale_staging_dirs_swept_on_next_write(spark, tmp_path):
@@ -328,54 +282,3 @@ def test_stale_staging_dirs_swept_on_next_write(spark, tmp_path):
     )
     assert list(tdir.glob("_staging_*")) == []
     assert cat.read_committed(spark, "t").count() == 12
-
-
-def test_compact_preserves_bucket_spec(spark, tmp_path):
-    """Compacting a bucketed table (no explicit bucket_by) must republish it
-    with the SAME bucket spec — otherwise the zero-Exchange join layout the
-    table was bucketed for silently disappears."""
-    cat = Catalog(str(tmp_path / "cbk"), backend="table")
-    df = spark.range(0, 300).repartition(8).selectExpr(
-        "cast(id as string) as doc_id", "id * 3 as v"
-    )
-    cat.write_committed(df, "t", bucket_by=(["doc_id"], 4))
-    before = sorted(
-        (r["doc_id"], r["v"]) for r in cat.read_committed(spark, "t").collect()
-    )
-    cat.compact(spark, "t", 1)
-    desc = {
-        r["col_name"]: r["data_type"]
-        for r in spark.sql(f"DESCRIBE FORMATTED {cat._table_ident('t')}").collect()
-    }
-    assert desc.get("Num Buckets") == "4"
-    assert "doc_id" in desc.get("Bucket Columns", "")
-    after = sorted(
-        (r["doc_id"], r["v"]) for r in cat.read_committed(spark, "t").collect()
-    )
-    assert before == after
-    cat.drop("t", spark)
-
-
-def test_table_backend_stale_ledger_reset_even_when_unregistered(spark, tmp_path):
-    """CODE-REVIEW r5: if the catalog entry vanishes (crashed overwrite /
-    external drop) while _BATCHES still lists batch dirs, the next
-    write_committed must reset the ledger — otherwise it deletes the dirs
-    but leaves the ledger pointing at dead paths and every read raises."""
-    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.sources.catalog import (
-        Catalog,
-    )
-
-    cat = Catalog(str(tmp_path / "stale"), backend="table")
-    base = spark.range(0, 20).selectExpr("cast(id as string) as doc_id")
-    cat.write_committed(base, "t")
-    cat.append_committed(
-        spark.range(20, 25).selectExpr("cast(id as string) as doc_id"), "t", "b1"
-    )
-    assert cat.read_committed(spark, "t").count() == 25
-    # simulate the catalog entry disappearing while the ledger survives
-    spark.sql(f"DROP TABLE {cat._table_ident('t')}")
-    assert cat._ledger_read("t").get("batches") == ["b1"]
-    cat.write_committed(base, "t")
-    assert cat._ledger_read("t").get("batches", []) == []
-    assert cat.read_committed(spark, "t").count() == 20  # readable, no dead path
-    cat.drop("t", spark)

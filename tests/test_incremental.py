@@ -49,12 +49,11 @@ def test_delta_candidate_pairs_equals_full_rebuild(corpus_dfs):
         assert r["left_id"] not in old_ids or r["right_id"] not in old_ids
 
 
-@pytest.fixture(params=["marker", "table"])
-def committed_full_run(spark, corpus_dfs, tmp_path, request):
-    # both file-based backends speak the batch-ledger append protocol, so
-    # the whole incremental matrix (equality, rerun-noop, crash-replay,
-    # orphan retirement) runs against each (r4-verdict task #7)
-    cat = Catalog(str(tmp_path / "inc"), backend=request.param)
+# the one param names the commit protocol every test below runs on (the
+# catalog's marker-and-ledger protocol) and keeps the ids suffixed [marker]
+@pytest.fixture(params=["marker"])
+def committed_full_run(spark, corpus_dfs, tmp_path):
+    cat = Catalog(str(tmp_path / "inc"))
     old_docs, new_docs = _split_docs(corpus_dfs["documents"])
     res = reconcile(old_docs, max_block_size=500)
     cat.write_committed(res.records, "records")
@@ -150,8 +149,8 @@ def test_streaming_incremental_reconcile(spark, corpus_dfs, committed_full_run, 
 class _CrashingCatalog(Catalog):
     """Raises after N successful publishes (append or rewrite)."""
 
-    def __init__(self, root, crash_after, backend="marker"):
-        super().__init__(root, backend=backend)
+    def __init__(self, root, crash_after):
+        super().__init__(root)
         self._writes = 0
         self._crash_after = crash_after
 
@@ -178,7 +177,7 @@ def test_incremental_crash_then_replay_recovers(
     merge is idempotent, so the replay converges to the full-rebuild state
     with no loss and no duplicates."""
     cat, old_docs, new_docs = committed_full_run
-    crashing = _CrashingCatalog(cat.root, crash_after, backend=cat.backend)
+    crashing = _CrashingCatalog(cat.root, crash_after)
     with pytest.raises(RuntimeError, match="injected crash"):
         incremental_reconcile(crashing, spark, new_docs, max_block_size=500)
     # replay on a clean catalog handle
@@ -193,14 +192,6 @@ def test_incremental_crash_then_replay_recovers(
     )
 
 
-def test_incremental_rejects_iceberg_backend(spark, corpus_dfs, tmp_path):
-    # marker AND table now speak the batch-ledger protocol; only iceberg
-    # (engine-native appends, no jar in sandbox) is refused
-    cat = Catalog(str(tmp_path / "ice"), backend="iceberg")
-    with pytest.raises(NotImplementedError, match="iceberg"):
-        incremental_reconcile(cat, spark, corpus_dfs["documents"])
-
-
 def test_incremental_job_cli(spark, corpus_dfs, committed_full_run, tmp_path, capsys):
     """spark-submit CLI over the delta plan: batch mode on a parquet drop."""
     from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.jobs.incremental_job import (
@@ -212,7 +203,6 @@ def test_incremental_job_cli(spark, corpus_dfs, committed_full_run, tmp_path, ca
     new_docs.write.parquet(drop)
     rc = inc_main([
         "--new-documents", drop, "--output", cat.root, "--max-block-size", "500",
-        "--catalog-backend", cat.backend,
     ])
     assert rc == 0
     out = capsys.readouterr().out
@@ -304,7 +294,7 @@ def test_crashed_batch_replayed_with_different_composition(
     h2 = F.pmod(F.xxhash64("doc_id"), F.lit(2))
     part_ab = new_docs.where(h2 == 0)
     # crash after 3 publishes (keys+pairs+scored appended, records absent)
-    crashing = _CrashingCatalog(cat.root, 3, backend=cat.backend)
+    crashing = _CrashingCatalog(cat.root, 3)
     with pytest.raises(RuntimeError, match="injected crash"):
         incremental_reconcile(crashing, spark, part_ab, max_block_size=500)
     # replay with a LARGER batch (the full new set)
@@ -330,7 +320,7 @@ def test_compact_of_orphaned_batch_is_detected_on_replay(
     replay must refuse loudly (RuntimeError) instead of double-counting."""
     cat, old_docs, new_docs = committed_full_run
     # crash after 3 publishes: keys+pairs+scored appended, records absent
-    crashing = _CrashingCatalog(cat.root, 3, backend=cat.backend)
+    crashing = _CrashingCatalog(cat.root, 3)
     with pytest.raises(RuntimeError, match="injected crash"):
         incremental_reconcile(crashing, spark, new_docs, max_block_size=500)
     assert cat.list_batches("scored")  # the orphan is present

@@ -77,40 +77,6 @@ def test_job_calibrated_run_meets_f1_gate(spark, tmp_path):
     assert f1 >= 0.99
 
 
-def test_job_bucketed_table_backend_matches_marker(spark, tmp_path):
-    """--catalog-backend table --bucket-tables N: same clusters as the
-    default marker run; the committed records/candidate_pairs carry the
-    bucket spec (scoring-join shuffle paid at write time)."""
-    out_m = str(tmp_path / "job_marker")
-    out_b = str(tmp_path / "job_bucketed")
-    main(["--synth", "200", "--output", out_m])
-    main([
-        "--synth", "200", "--output", out_b,
-        "--catalog-backend", "table", "--bucket-tables", "8",
-    ])
-    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.sources.catalog import (
-        Catalog,
-    )
-
-    cat_b = Catalog(out_b, backend="table")
-    marker_clusters = {
-        (r["node"], r["cluster_id"])
-        for r in spark.read.parquet(os.path.join(out_m, "clusters", "data")).collect()
-    }
-    bucket_clusters = {
-        (r["node"], r["cluster_id"])
-        for r in cat_b.read_committed(spark, "clusters").collect()
-    }
-    assert marker_clusters == bucket_clusters
-    # the committed records table really is bucketed
-    ident = cat_b._table_ident("records")
-    ddl = spark.sql(f"DESCRIBE TABLE EXTENDED {ident}").collect()
-    as_text = "\n".join(f"{r['col_name']} {r['data_type']}" for r in ddl)
-    assert "doc_id" in as_text and "8" in as_text and "Bucket" in as_text
-    for t in ("records", "blocking_keys", "candidate_pairs", "scored", "clusters"):
-        cat_b.drop(t, spark)
-
-
 def _mask(plan: str) -> str:
     """Expression, plan, lambda-variable and common-subexpression ids and
     the input dir vary between sessions and hosts."""
