@@ -1595,13 +1595,7 @@ def x2(spark, sf):
     )
 
     d = _t(spark, sf, "documents")
-    return (
-        minhash_lsh_pairs(
-            d, id_col="doc_id", text_col="text",
-            num_perm=64, bands=16, shingle_k=3, max_band_size=10_000,
-        )
-        .orderBy("left_id", "right_id")
-    )
+    return minhash_lsh_pairs(d).orderBy("left_id", "right_id")
 
 
 _X3_ORACLE = """
@@ -2371,10 +2365,7 @@ def t17(spark, sf):
     )
 
     d = _t(spark, sf, "documents")
-    drop = dedup_decisions(
-        d, id_col="doc_id", text_col="text",
-        num_perm=64, bands=16, shingle_k=3, max_band_size=10_000,
-    )
+    drop = dedup_decisions(d)
     clean = d.join(drop.select("doc_id"), "doc_id", "left_anti")
     return materialize_packs(clean, pack_size=256).orderBy("source", "pack_id")
 
@@ -2877,11 +2868,8 @@ def x11(spark, sf):
     d = _t(spark, sf, "documents")
     old_docs = d.where(F.col("doc_id") % 4 != 0)
     new_docs = d.where(F.col("doc_id") % 4 == 0)
-    old_keys = minhash_band_keys(old_docs, id_col="doc_id", text_col="text")
-    return delta_minhash_pairs(
-        old_keys, new_docs, id_col="doc_id", text_col="text",
-        num_perm=64, bands=16, shingle_k=3, max_band_size=10_000,
-    ).orderBy("left_id", "right_id")
+    old_keys = minhash_band_keys(old_docs)
+    return delta_minhash_pairs(old_keys, new_docs).orderBy("left_id", "right_id")
 
 
 def _x12_oracle() -> str:
@@ -2921,11 +2909,9 @@ def x12(spark, sf):
     new_docs = d.where(F.col("doc_id") % 4 == 0)
     # in production old_codes is a committed table; built inline here so the
     # oracle comparison is self-contained
-    old_codes = simhash_codes(old_docs, id_col="doc_id", text_col="text")
+    old_codes = simhash_codes(old_docs)
     return (
-        delta_simhash_pairs(
-            old_codes, new_docs, id_col="doc_id", text_col="text", max_hamming=3
-        )
+        delta_simhash_pairs(old_codes, new_docs, max_hamming=3)
         .select("left_id", "right_id", F.col("hamming").cast("long").alias("hamming"))
         .orderBy("left_id", "right_id")
     )
@@ -2955,11 +2941,9 @@ def x13(spark, sf):
     d = _t(spark, sf, "documents")
     old_docs = d.where(F.col("doc_id") % 4 != 0)
     new_docs = d.where(F.col("doc_id") % 4 == 0)
-    old_keys = minhash_band_keys(old_docs, id_col="doc_id", text_col="text")
+    old_keys = minhash_band_keys(old_docs)
     return delta_ngram_jaccard_pairs(
-        old_keys, old_docs, new_docs,
-        id_col="doc_id", text_col="text", threshold=0.8,
-        num_perm=64, bands=16, shingle_k=3, max_band_size=10_000,
+        old_keys, old_docs, new_docs, threshold=0.8
     ).orderBy("left_id", "right_id")
 
 
@@ -2999,10 +2983,7 @@ def t12(spark, sf):
     # members_cap=None: the DuckDB oracle models the cap-free full member
     # list, fine at driver scale; production consumers use t13's decision
     # table (no arrays) and the scale-safe default cap applies elsewhere
-    return near_dup_groups(
-        d, id_col="doc_id", text_col="text", members_cap=None,
-        num_perm=64, bands=16, shingle_k=3, max_band_size=10_000,
-    ).orderBy("keeper")
+    return near_dup_groups(d, members_cap=None).orderBy("keeper")
 
 
 def _x14_oracle() -> str:
@@ -3032,10 +3013,7 @@ def x14(spark, sf):
     )
 
     d = _t(spark, sf, "documents")
-    return minhash_jaccard_estimates(
-        d, id_col="doc_id", text_col="text",
-        num_perm=64, bands=16, shingle_k=3, max_band_size=10_000,
-    ).orderBy("left_id", "right_id")
+    return minhash_jaccard_estimates(d).orderBy("left_id", "right_id")
 
 
 def _x15_oracle() -> str:
@@ -3147,10 +3125,7 @@ def t13(spark, sf):
     )
 
     d = _t(spark, sf, "documents")
-    return dedup_decisions(
-        d, id_col="doc_id", text_col="text",
-        num_perm=64, bands=16, shingle_k=3, max_band_size=10_000,
-    ).orderBy("doc_id")
+    return dedup_decisions(d).orderBy("doc_id")
 
 
 # Queries added in round 4 (never sampled by a driver that takes the first 50

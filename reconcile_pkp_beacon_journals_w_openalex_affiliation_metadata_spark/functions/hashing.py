@@ -24,6 +24,11 @@ import numpy as np
 # byte-exact on control characters too.
 _ASCII_WS = re.compile(r"[ \t\n\f\r]+")
 
+# MinHash signature length: every LSH family and the Jaccard estimate use 64
+NUM_PERM = 64
+# bound on the (NUM_PERM, tokens) intermediate of minhash_signatures_batch
+_CHUNK_TOKENS = 200_000
+
 
 def ascii_split(text: str) -> list[str]:
     return [t for t in _ASCII_WS.split(text) if t]
@@ -96,20 +101,18 @@ def char_ngrams(text: str, n: int = 3) -> list[str]:
     return [text[i : i + n] for i in range(len(text) - n + 1)]
 
 
-def minhash_signature(tokens: list[str], num_perm: int = 64, seed: int = 42) -> np.ndarray:
-    """num_perm 32-bit minhash values; empty input -> all MAXH sentinel."""
+def minhash_signature(tokens: list[str], seed: int = 42) -> np.ndarray:
+    """NUM_PERM 32-bit minhash values; empty input -> all MAXH sentinel."""
     if not tokens:
-        return np.full(num_perm, _MAXH, dtype=np.uint64)
+        return np.full(NUM_PERM, _MAXH, dtype=np.uint64)
     h = token_hashes(tokens)  # (n,)
-    a, b = _perms(num_perm, seed)  # (p,)
+    a, b = _perms(NUM_PERM, seed)  # (p,)
     # (p, n) universal hash: ((a*h + b) mod mersenne) & 32-bit
     vals = (a[:, None] * h[None, :] + b[:, None]) % _MERSENNE
     return (vals & _MAXH).min(axis=1)
 
 
-def minhash_bands(
-    tokens: list[str], num_perm: int = 64, bands: int = 16, seed: int = 42
-) -> list[str]:
+def minhash_bands(tokens: list[str], bands: int = 16, seed: int = 42) -> list[str]:
     """LSH band keys: signature split into ``bands`` rows-per-band groups,
     each band rendered as ``b{i}:{v0-v1-...}`` (decimal join — longer than a
     hash of the band bytes but recomputable in SQL via string_agg, which is
@@ -122,8 +125,8 @@ def minhash_bands(
     with no tokens carries no signal and belongs in no bucket."""
     if not tokens:
         return []
-    sig = minhash_signature(tokens, num_perm=num_perm, seed=seed)
-    r = num_perm // bands
+    sig = minhash_signature(tokens, seed=seed)
+    r = NUM_PERM // bands
     out = []
     for i in range(bands):
         band = sig[i * r : (i + 1) * r]
@@ -131,30 +134,27 @@ def minhash_bands(
     return out
 
 
-def minhash_signatures_batch(
-    token_lists: list[list[str]], num_perm: int = 64, seed: int = 42,
-    chunk_tokens: int = 200_000,
-) -> np.ndarray:
-    """(n_docs, num_perm) uint64 minhash matrix for a whole batch of
+def minhash_signatures_batch(token_lists: list[list[str]], seed: int = 42) -> np.ndarray:
+    """(n_docs, NUM_PERM) uint64 minhash matrix for a whole batch of
     tokenized docs in a few large numpy ops — bit-identical to calling
     :func:`minhash_signature` per doc (same perms, same universal hash,
     segmented min instead of a per-doc ``.min``), but without the per-doc
     numpy dispatch overhead that dominated the banding UDF (measured ~10x
     on Arrow-sized batches). Empty docs get the all-``_MAXH`` sentinel row.
 
-    ``chunk_tokens`` bounds the (num_perm, total_tokens) intermediate to
-    ~num_perm * chunk * 8 bytes (100 MB at the defaults) regardless of
-    batch size; chunks split on doc boundaries so segments never straddle.
+    ``_CHUNK_TOKENS`` bounds the (NUM_PERM, total_tokens) intermediate to
+    ~NUM_PERM * chunk * 8 bytes (100 MB) regardless of batch size; chunks
+    split on doc boundaries so segments never straddle.
     """
     n = len(token_lists)
-    out = np.full((n, num_perm), _MAXH, dtype=np.uint64)
-    a, b = _perms(num_perm, seed)
+    out = np.full((n, NUM_PERM), _MAXH, dtype=np.uint64)
+    a, b = _perms(NUM_PERM, seed)
     i = 0
     while i < n:
         j = i
         total = 0
         idx: list[int] = []
-        while j < n and (total == 0 or total + len(token_lists[j]) <= chunk_tokens):
+        while j < n and (total == 0 or total + len(token_lists[j]) <= _CHUNK_TOKENS):
             if token_lists[j]:
                 idx.append(j)
                 total += len(token_lists[j])
@@ -184,14 +184,13 @@ def minhash_signatures_batch(
 
 
 def minhash_bands_batch(
-    token_lists: list[list[str]], num_perm: int = 64, bands: int = 16,
-    seed: int = 42,
+    token_lists: list[list[str]], bands: int = 16, seed: int = 42
 ) -> list[list[str]]:
     """Batch twin of :func:`minhash_bands`: same band-key strings, one
     vectorized signature pass for the whole batch. Token-less docs get
     ``[]`` (no bands), matching the scalar function."""
-    sigs = minhash_signatures_batch(token_lists, num_perm=num_perm, seed=seed)
-    r = num_perm // bands
+    sigs = minhash_signatures_batch(token_lists, seed=seed)
+    r = NUM_PERM // bands
     rows = sigs.tolist()  # C-level uint64 -> Python int conversion
     out: list[list[str]] = []
     for d, toks in enumerate(token_lists):

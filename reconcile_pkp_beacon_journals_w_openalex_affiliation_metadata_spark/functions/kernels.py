@@ -231,7 +231,7 @@ def jaro(a: str, b: str) -> float:
     return (m / la + m / lb + (m - t) / m) / 3.0
 
 
-def jaro_winkler(a: str | None, b: str | None, prefix_weight: float = 0.1) -> float:
+def jaro_winkler(a: str | None, b: str | None) -> float:
     """Jaro-Winkler similarity x100 (prefix boost up to 4 chars)."""
     a = a or ""
     b = b or ""
@@ -243,7 +243,7 @@ def jaro_winkler(a: str | None, b: str | None, prefix_weight: float = 0.1) -> fl
                 prefix += 1
             else:
                 break
-        j += prefix * prefix_weight * (1.0 - j)
+        j += prefix * 0.1 * (1.0 - j)
     return 100.0 * j
 
 

@@ -186,7 +186,6 @@ def sim_features_udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
 
 
 def make_minhash_bands_udf(
-    num_perm: int = 64,
     bands: int = 16,
     shingle_k: int = 3,
     seed: int = 42,
@@ -211,30 +210,27 @@ def make_minhash_bands_udf(
         # the per-doc minhash_bands; differential-tested)
         token_lists = [tok(text) if text else [] for text in s]
         return pd.Series(
-            hashing.minhash_bands_batch(
-                token_lists, num_perm=num_perm, bands=bands, seed=seed
-            ),
+            hashing.minhash_bands_batch(token_lists, bands=bands, seed=seed),
             index=s.index,
         )
 
     return _udf
 
 
-def make_minhash_signature_udf(num_perm: int = 64, shingle_k: int = 3, seed: int = 42):
-    """Full minhash SIGNATURE (array of num_perm 32-bit values) over
-    normalized text — the committed representation that enables verify-free
-    Jaccard estimates (``dedup.minhash_jaccard_estimates``): est = fraction
-    of equal slots. Same shingling/perms as ``make_minhash_bands_udf``, so
+def make_minhash_signature_udf():
+    """Full minhash SIGNATURE (array of NUM_PERM 32-bit values over word
+    3-shingles, seed 42) of normalized text — the committed representation
+    that enables verify-free Jaccard estimates
+    (``dedup.minhash_jaccard_estimates``): est = fraction of equal slots.
+    Same shingling/perms as ``make_minhash_bands_udf``, so
     bands and signatures derived from one committed table never disagree.
     Token-less docs get the all-sentinel signature (they emit no bands, so
     no candidate pair ever reads it)."""
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _udf(s: pd.Series) -> pd.Series:
-        token_lists = [hashing.shingles(t or "", k=shingle_k) for t in s]
-        sigs = hashing.minhash_signatures_batch(
-            token_lists, num_perm=num_perm, seed=seed
-        )
+        token_lists = [hashing.shingles(t or "") for t in s]
+        sigs = hashing.minhash_signatures_batch(token_lists)
         return pd.Series(sigs.astype("int64").tolist(), index=s.index)
 
     return _udf

@@ -15,6 +15,11 @@ Usage (cluster):
 invocation folds only the delta (new x all candidate pairs, delta scoring,
 seeded connected components) and republishes crash-safely — the records
 table commits last, so an interrupted run replays idempotently.
+
+The block cap and the scoring model come from the committed ``scored``
+table: the full run recorded its ``--max-block-size`` and any fitted
+weights/threshold there, ``--max-block-size`` defaults to that cap, and a
+different one is refused.
 """
 
 from __future__ import annotations
@@ -39,7 +44,10 @@ def main(argv=None):
     ap.add_argument("--checkpoint", help="streaming checkpoint dir (with --stream-dir)")
     ap.add_argument("--output", required=True)
     ap.add_argument("--n-salts", type=int, default=DEFAULT_N_SALTS)
-    ap.add_argument("--max-block-size", type=int, default=None)
+    ap.add_argument(
+        "--max-block-size", type=int, default=None,
+        help="defaults to the cap recorded by the committed full run",
+    )
     ap.add_argument("--hot-pair-threshold", type=int, default=HOT_PAIR_THRESHOLD)
     args = ap.parse_args(argv)
     if bool(args.new_documents) == bool(args.stream_dir):

@@ -11,7 +11,9 @@ Usage (cluster):
 
 ``--labeled`` re-fits the scoring logistic on the given ground-truth table
 (distributed pyspark.ml fit + F1-optimal threshold sweep) and serves the
-fitted weights instead of the shipped constants.
+fitted weights instead of the shipped constants. The ``scored`` commit
+records the block cap and any fitted weights/threshold in its marker meta;
+``jobs/incremental_job.py`` folds new documents under those settings.
 
 Usage (sandbox smoke):
 
@@ -41,7 +43,7 @@ LINEAGE_STAGE = {
 }
 
 
-def _fit_calibration(labeled, records):
+def _fit_calibration(labeled, scored_meta, records):
     from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators import calibrate
 
     cal = calibrate.fit_calibration(records, labeled)
@@ -49,6 +51,7 @@ def _fit_calibration(labeled, records):
         f"calibration: n_train={cal.n_train} train_f1={cal.train_f1:.4f} "
         f"threshold={cal.threshold:.4f} weights={ {k: round(v, 4) for k, v in cal.weights.items()} }"
     )
+    scored_meta.update(weights=cal.weights, threshold=cal.threshold)
     return cal
 
 
@@ -110,7 +113,14 @@ def main(argv=None):
 
     if args.labeled:
         labeled = spark.read.parquet(args.labeled)
-    fit = functools.partial(_fit_calibration, labeled) if labeled is not None else None
+    # the settings a later fold must score under, committed with scored:
+    # the block cap, plus the weights/threshold the scored build adds when
+    # it fits them (run_stage writes meta after build() has run)
+    scored_meta = {"max_block_size": args.max_block_size}
+    fit = (
+        functools.partial(_fit_calibration, labeled, scored_meta)
+        if labeled is not None else None
+    )
     lineage_rows = []
 
     def commit(name, build):
@@ -120,6 +130,7 @@ def main(argv=None):
         df = run_stage(
             cat, spark, name, build,
             force=force or (fit is not None and name in ("scored", "clusters")),
+            meta=scored_meta if name == "scored" else None,
         )
         lineage_rows.append(lineage.partition_metrics(df, run_id, LINEAGE_STAGE[name]))
         if name == "scored":

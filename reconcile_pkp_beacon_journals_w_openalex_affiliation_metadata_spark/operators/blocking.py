@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from ..functions.udfs import make_minhash_bands_udf
 
-MINHASH_NUM_PERM = 64
 MINHASH_BANDS = 16
 MINHASH_SHINGLE_K = 3
 CHAR_NGRAM_K = 4
@@ -29,67 +28,36 @@ CHAR_NGRAM_K = 4
 MINHASH_CHAR_BANDS = 8
 
 
-def blocking_keys(
-    records: DataFrame,
-    use_issn: bool = True,
-    use_title_bands: bool = True,
-    use_domain: bool = True,
-    use_char_bands: bool = True,
-) -> DataFrame:
+def blocking_keys(records: DataFrame) -> DataFrame:
     """(doc_id, side, key) — one row per (document, blocking key).
 
-    Key families are namespaced ('issn:', 'band:', 'domain:') so collisions
-    across families are impossible.
+    Key families are namespaced ('issn:', 'domain:', 'band:', 'cband:') so
+    collisions across families are impossible.
     """
-    parts = []
-    if use_issn:
-        parts.append(
-            records.where(F.col("norm_issn").isNotNull()).select(
-                "doc_id",
-                "side",
-                F.concat(F.lit("issn:"), F.col("norm_issn")).alias("key"),
-            )
-        )
-    if use_domain:
-        parts.append(
-            records.where(F.col("domain").isNotNull() & (F.col("domain") != "")).select(
-                "doc_id",
-                "side",
-                F.concat(F.lit("domain:"), F.col("domain")).alias("key"),
-            )
-        )
+    issn = records.where(F.col("norm_issn").isNotNull()).select(
+        "doc_id", "side", F.concat(F.lit("issn:"), F.col("norm_issn")).alias("key")
+    )
+    domain = records.where(F.col("domain").isNotNull() & (F.col("domain") != "")).select(
+        "doc_id", "side", F.concat(F.lit("domain:"), F.col("domain")).alias("key")
+    )
     titled = records.where(
         F.col("norm_title").isNotNull() & (F.col("norm_title") != "")
     )
-    if use_title_bands:
-        # word-shingle LSH: catches token-level edits (reorder, add/drop word)
-        bands_udf = make_minhash_bands_udf(
-            num_perm=MINHASH_NUM_PERM, bands=MINHASH_BANDS, shingle_k=MINHASH_SHINGLE_K
-        )
-        parts.append(
-            titled.select(
-                "doc_id", "side", F.explode(bands_udf(F.col("norm_title"))).alias("band")
-            ).select("doc_id", "side", F.concat(F.lit("band:"), F.col("band")).alias("key"))
-        )
-    if use_char_bands:
-        # char-4-gram LSH: catches letter-level typos, which flip k whole
-        # word-shingles at once and make the word family miss (~20% of
-        # indel>=90 pairs in the recall property test without this family)
-        cbands_udf = make_minhash_bands_udf(
-            num_perm=MINHASH_NUM_PERM, bands=MINHASH_CHAR_BANDS,
-            shingle_k=CHAR_NGRAM_K, seed=137, tokenizer="char",
-        )
-        parts.append(
-            titled.select(
-                "doc_id", "side", F.explode(cbands_udf(F.col("norm_title"))).alias("band")
-            ).select("doc_id", "side", F.concat(F.lit("cband:"), F.col("band")).alias("key"))
-        )
-    if not parts:
-        raise ValueError("at least one key family must be enabled")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    # word-shingle LSH: catches token-level edits (reorder, add/drop word)
+    bands_udf = make_minhash_bands_udf(bands=MINHASH_BANDS, shingle_k=MINHASH_SHINGLE_K)
+    band = titled.select(
+        "doc_id", "side", F.explode(bands_udf(F.col("norm_title"))).alias("band")
+    ).select("doc_id", "side", F.concat(F.lit("band:"), F.col("band")).alias("key"))
+    # char-4-gram LSH: catches letter-level typos, which flip k whole
+    # word-shingles at once and make the word family miss (~20% of
+    # indel>=90 pairs in the recall property test without this family)
+    cbands_udf = make_minhash_bands_udf(
+        bands=MINHASH_CHAR_BANDS, shingle_k=CHAR_NGRAM_K, seed=137, tokenizer="char"
+    )
+    cband = titled.select(
+        "doc_id", "side", F.explode(cbands_udf(F.col("norm_title"))).alias("band")
+    ).select("doc_id", "side", F.concat(F.lit("cband:"), F.col("band")).alias("key"))
+    return issn.unionByName(domain).unionByName(band).unionByName(cband)
 
 
 def block_size_metrics(keys: DataFrame) -> DataFrame:

@@ -12,7 +12,7 @@ Spark job so a user can re-fit on fresh labeled pairs at corpus scale:
   labeled-pair volume, not the driver heap).
 - The decision threshold is chosen by a DISTRIBUTED F1 sweep
   (``best_threshold``): probabilities are quantized to a fixed grid
-  (``round(prob, grid_decimals)``), per-bin tp/fp counted with one
+  (``round(prob, GRID_DECIMALS)``), per-bin tp/fp counted with one
   groupBy, and the cumulative F1 curve is a window over <= 10^grid bins —
   bounded driver/exchange cost no matter how many pairs were scored.
 - The fitted coefficients plug back into ``scoring.score_pairs(weights=,
@@ -62,19 +62,21 @@ def feature_frame(scored: DataFrame) -> DataFrame:
     return scored.select("left_id", "right_id", *cols)
 
 
-def best_threshold(
-    prob_labeled: DataFrame, grid_decimals: int = 4
-) -> tuple[float, float]:
+# probabilities are swept in 10^-GRID_DECIMALS bins
+GRID_DECIMALS = 4
+
+
+def best_threshold(prob_labeled: DataFrame) -> tuple[float, float]:
     """F1-optimal decision threshold from (prob, label) rows, distributed.
 
-    Quantize probs to 10^grid_decimals bins, count positives/negatives per
+    Quantize probs to 10^GRID_DECIMALS bins, count positives/negatives per
     bin (one shuffle over the bins only), then cumulative tp/fp from the
     top of the probability order gives F1 at every candidate cutoff. The
     window runs over <= 10^grid bins — a single small partition by
     construction, independent of input row count.
     """
     bins = prob_labeled.groupBy(
-        F.round(F.col("prob"), grid_decimals).alias("p")
+        F.round(F.col("prob"), GRID_DECIMALS).alias("p")
     ).agg(
         F.sum(F.col("label").cast("long")).alias("pos"),
         F.sum((F.lit(1) - F.col("label")).cast("long")).alias("neg"),
@@ -99,17 +101,12 @@ def best_threshold(
     # row that ROUNDS to p (i.e. prob >= p - 0.5*10^-grid) as positive, so
     # only the lower-edge cutoff makes serving (`prob >= threshold`) decide
     # exactly the rows the reported F1 was computed from
-    return float(best["p"]) - 0.5 * 10.0 ** (-grid_decimals), float(best["f1"])
+    return float(best["p"]) - 0.5 * 10.0 ** (-GRID_DECIMALS), float(best["f1"])
 
 
-def fit_calibration(
-    records: DataFrame,
-    labeled: DataFrame,
-    reg_param: float = 0.01,
-    max_iter: int = 100,
-    grid_decimals: int = 4,
-) -> Calibration:
-    """Fit the logistic on labeled pairs; returns weights + F1-best threshold.
+def fit_calibration(records: DataFrame, labeled: DataFrame) -> Calibration:
+    """Fit the logistic on labeled pairs (L2 0.01, at most 100 LBFGS
+    iterations); returns weights + F1-best threshold.
 
     ``records``: the extracted record table (any side mix — the ground
     truth's negative pairs are same-side, so features are computed with the
@@ -141,9 +138,9 @@ def fit_calibration(
     lr = LogisticRegression(
         featuresCol="fv",
         labelCol="label",
-        regParam=reg_param,
+        regParam=0.01,
         elasticNetParam=0.0,
-        maxIter=max_iter,
+        maxIter=100,
         standardization=False,
     )
     model = lr.fit(assembled)
@@ -163,7 +160,7 @@ def fit_calibration(
     prob_labeled = train.select(
         (F.lit(1.0) / (F.lit(1.0) + F.exp(-z))).alias("prob"), "label"
     )
-    threshold, train_f1 = best_threshold(prob_labeled, grid_decimals=grid_decimals)
+    threshold, train_f1 = best_threshold(prob_labeled)
     n_train = train.count()
     train.unpersist()
     return Calibration(

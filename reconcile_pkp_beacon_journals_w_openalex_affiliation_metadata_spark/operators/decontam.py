@@ -24,40 +24,34 @@ from pyspark.sql import functions as F
 from ..partitioning import spread
 
 
-def _shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """(id, shingle) rows: every k-token window of the whitespace stream,
+def _shingles(df: DataFrame, k: int) -> DataFrame:
+    """(doc_id, shingle) rows: every k-token window of the whitespace stream,
     space-joined. Docs shorter than k tokens emit nothing.
 
     The token array is materialized into a column BEFORE the per-window
     transform: referencing the split() expression inside the lambda makes
     codegen re-tokenize the whole document per window (O(n^2) per doc —
     measured 6x slower at sf0.1)."""
-    toks = F.split(F.trim(F.col(text_col)), "[ \t\n\f\r]+")
+    toks = F.split(F.trim(F.col("text")), "[ \t\n\f\r]+")
     # tokenize + per-window transform + explode is the expensive narrow
     # chain; a one-row-group scan would run it single-task (partitioning
     # repair, no-op on parallel scans)
     base = (
-        spread(df).select(F.col(id_col), toks.alias("_toks"))
+        spread(df).select("doc_id", toks.alias("_toks"))
         .where(F.size("_toks") >= k)
     )
     wins = F.transform(
         F.sequence(F.lit(0), F.size("_toks") - k),
         lambda i: F.concat_ws(" ", F.slice("_toks", i + 1, k)),
     )
-    return base.select(F.col(id_col), F.explode(wins).alias("shingle"))
+    return base.select("doc_id", F.explode(wins).alias("shingle"))
 
 
-def ngram_contamination(
-    train: DataFrame,
-    bench: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_id_col: str | None = None,
-) -> DataFrame:
-    """Per-train-doc contamination rollup against a benchmark set.
+def ngram_contamination(train: DataFrame, bench: DataFrame, k: int = 8) -> DataFrame:
+    """Per-train-doc contamination rollup against a benchmark set; both
+    frames carry (doc_id, text).
 
-    Returns (``id_col``, n_hits, first_bench_id): n_hits = number of
+    Returns (doc_id, n_hits, first_bench_id): n_hits = number of
     DISTINCT k-shingles the doc shares with any benchmark doc,
     first_bench_id = smallest matching benchmark id (for triage). A doc
     with no shared shingle is absent — the table is anti-joinable:
@@ -69,11 +63,10 @@ def ngram_contamination(
     pre-aggregated frame and drop the broadcast hint upstream if yours is
     not).
     """
-    bid = bench_id_col or id_col
     bench_sh = (
-        _shingles(bench, bid, text_col, k)
+        _shingles(bench, k)
         .groupBy("shingle")
-        .agg(F.min(F.col(bid)).alias("bench_id"))
+        .agg(F.min(F.col("doc_id")).alias("bench_id"))
     )
     # probe FIRST, dedupe AFTER: the broadcast join filters map-side, so
     # only the (rare) matching shingle occurrences ever shuffle — a
@@ -83,11 +76,11 @@ def ngram_contamination(
     # occurrence out; dropDuplicates then collapses repeated occurrences
     # within a doc, making n_hits a DISTINCT-shingle count.
     hits = (
-        _shingles(train, id_col, text_col, k)
+        _shingles(train, k)
         .join(F.broadcast(bench_sh), "shingle")
-        .dropDuplicates([id_col, "shingle"])
+        .dropDuplicates(["doc_id", "shingle"])
     )
-    return hits.groupBy(id_col).agg(
+    return hits.groupBy("doc_id").agg(
         F.count("*").alias("n_hits"),
         F.min("bench_id").alias("first_bench_id"),
     )

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.hashing import NUM_PERM
 from ..functions.udfs import make_minhash_bands_udf, simhash_udf
 from ..partitioning import spread
 from .similarity_search import hyperplane_bucket_pairs
@@ -33,18 +34,24 @@ from .similarity_search import hyperplane_bucket_pairs
 # desynchronize on normalization.
 _WS_RUN = "[ \t\n\f\r]+"
 
-
-def _norm_ws_expr(text_col: str):
-    """lower + trim + collapse-whitespace — the shared normalization every
-    dedup strategy keys on (and the oracles' ``norm`` CTE replicates)."""
-    return F.regexp_replace(F.lower(F.trim(F.col(text_col))), _WS_RUN, " ")
+# MinHash LSH band buckets above this size are dropped (stop-phrase shingles)
+MAX_BAND_SIZE = 10_000
 
 
-def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Groups of exact duplicates on normalized text; keeper = min id."""
-    key = F.md5(_norm_ws_expr(text_col))
+def _norm_ws_expr():
+    """lower + trim + collapse-whitespace of ``text`` — the shared
+    normalization every dedup strategy keys on (and the oracles' ``norm``
+    CTE replicates)."""
+    return F.regexp_replace(F.lower(F.trim(F.col("text"))), _WS_RUN, " ")
+
+
+def exact_dup_groups(df: DataFrame) -> DataFrame:
+    """Groups of exact duplicates on normalized text; keeper = min id.
+
+    Every text operator in this module reads a (doc_id, text) frame."""
+    key = F.md5(_norm_ws_expr())
     return (
-        df.select(F.col(id_col).alias("id"), key.alias("content_key"))
+        df.select(F.col("doc_id").alias("id"), key.alias("content_key"))
         .groupBy("content_key")
         .agg(F.min("id").alias("keeper"), F.count("*").alias("n_copies"),
              F.collect_list("id").alias("members"))
@@ -52,36 +59,22 @@ def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-def minhash_band_keys(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """(id, band) LSH key rows — map-only; commit this once per corpus and
-    the incremental path (``delta_minhash_pairs``) never re-bands old docs."""
-    bands_udf = make_minhash_bands_udf(num_perm=num_perm, bands=bands, shingle_k=shingle_k)
-    norm = _norm_ws_expr(text_col)
+def minhash_band_keys(df: DataFrame) -> DataFrame:
+    """(id, band) LSH key rows, 16 bands of word 3-shingle MinHash — map-only;
+    commit this once per corpus and the incremental path
+    (``delta_minhash_pairs``) never re-bands old docs."""
+    bands_udf = make_minhash_bands_udf()
+    norm = _norm_ws_expr()
     # the banding UDF is the expensive pass; a single-row-group fixture scan
     # would otherwise run it on one core (partitioning.spread is a no-op on
     # already-parallel scans)
     df = spread(df)
     return df.select(
-        F.col(id_col).alias("id"), F.explode(bands_udf(norm)).alias("band")
+        F.col("doc_id").alias("id"), F.explode(bands_udf(norm)).alias("band")
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
-    max_band_size: int = 10_000,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, max_band_size: int = MAX_BAND_SIZE) -> DataFrame:
     """Near-dup candidate pairs via MinHash LSH.
 
     Oversized band buckets (stop-phrase shingles) are dropped with the same
@@ -112,9 +105,7 @@ def minhash_lsh_pairs(
     degenerate case. Corpora known to carry mega-bands should pre-filter
     them upstream (or lower max_band_size so the surviving sort is small —
     the dropped rows still transit the shuffle once either way)."""
-    keys = minhash_band_keys(
-        df, id_col, text_col, num_perm=num_perm, bands=bands, shingle_k=shingle_k
-    )
+    keys = minhash_band_keys(df)
     kept = (
         keys.withColumn("_n", F.count("*").over(Window.partitionBy("band")))
         .where(F.col("_n") <= max_band_size)
@@ -131,16 +122,7 @@ def minhash_lsh_pairs(
     )
 
 
-def delta_minhash_pairs(
-    old_keys: DataFrame,
-    new_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
-    max_band_size: int = 10_000,
-) -> DataFrame:
+def delta_minhash_pairs(old_keys: DataFrame, new_docs: DataFrame) -> DataFrame:
     """Near-dup pairs with at least one endpoint in the NEW batch.
 
     The training-data ingestion shape at 100 TB: dedup each crawl batch
@@ -170,16 +152,13 @@ def delta_minhash_pairs(
     without the cache the whole old-corpus lineage would execute once per
     join side — the cost the incremental path exists to avoid.
     """
-    new_keys = minhash_band_keys(
-        new_docs, id_col, text_col, num_perm=num_perm, bands=bands,
-        shingle_k=shingle_k,
-    )
+    new_keys = minhash_band_keys(new_docs)
     all_keys = old_keys.withColumn("_new", F.lit(False)).unionByName(
         new_keys.withColumn("_new", F.lit(True))
     )
     kept_all = (
         all_keys.withColumn("_n", F.count("*").over(Window.partitionBy("band")))
-        .where(F.col("_n") <= max_band_size)
+        .where(F.col("_n") <= MAX_BAND_SIZE)
         .drop("_n")
         .persist()
     )
@@ -200,16 +179,18 @@ def delta_minhash_pairs(
     )
 
 
-def simhash_codes(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash_codes(df: DataFrame) -> DataFrame:
     df = spread(df)  # simhash UDF pass: same single-task-scan repair as banding
     return df.select(
-        F.col(id_col).alias("id"),
-        simhash_udf(F.lower(F.col(text_col))).alias("simhash"),
+        F.col("doc_id").alias("id"),
+        simhash_udf(F.lower(F.col("text"))).alias("simhash"),
     )
 
 
-def _simhash_block_exprs(max_hamming: int):
-    """Block columns for the pigeonhole split (see simhash_near_pairs)."""
+def _simhash_block_key(max_hamming: int):
+    """The pigeonhole split's block keys (see simhash_near_pairs) as one
+    exploded column ``bk``: one row per block of each code, prefixed with
+    the block index so equal bits at different offsets never meet."""
     if not 0 <= max_hamming <= 63:
         raise ValueError("max_hamming must be in [0, 63]")
     n_blocks = max_hamming + 1
@@ -217,104 +198,66 @@ def _simhash_block_exprs(max_hamming: int):
     offsets = [sum(widths[:i]) for i in range(n_blocks)]
 
     def _block(i: int):
-        shifted = F.shiftrightunsigned("simhash", offsets[i])
-        if widths[i] >= 64:  # full-code block (radius 0): mask literal would
-            return shifted.alias(f"blk{i}")  # overflow a signed 64-bit long
-        return shifted.bitwiseAND(F.lit((1 << widths[i]) - 1)).alias(f"blk{i}")
+        blk = F.shiftrightunsigned("simhash", offsets[i])
+        # a full-code block (radius 0) takes no mask: its literal would
+        # overflow a signed 64-bit long
+        if widths[i] < 64:
+            blk = blk.bitwiseAND(F.lit((1 << widths[i]) - 1))
+        return F.concat(F.lit(f"{i}:"), blk.cast("string"))
 
-    return n_blocks, [_block(i) for i in range(n_blocks)]
+    return F.explode(F.array(*[_block(i) for i in range(n_blocks)])).alias("bk")
 
 
-def simhash_near_pairs(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", max_hamming: int = 3
-) -> DataFrame:
+def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Hamming-radius pairs: split the 64-bit code into ``max_hamming + 1``
     blocks; a pair within the radius has fewer differing bits than blocks, so
     by pigeonhole it agrees exactly on >= 1 block — block-equality buckets
     are therefore a complete candidate set for ANY radius (a fixed 4-block
-    split is only complete for radius <= 3)."""
-    n_blocks, block_cols = _simhash_block_exprs(max_hamming)
-    codes = simhash_codes(df, id_col, text_col)
+    split is only complete for radius <= 3).
 
-    # persist: every block family references this twice (self-join sides),
-    # so without a materialization the simhash UDF would run 2*n_blocks
-    # times over the corpus (same lesson as the LSH banding pass)
-    blocks = codes.select("id", "simhash", *block_cols).persist()
-    parts = []
-    for i in range(n_blocks):
-        k = blocks.select(
-            "id", "simhash", F.concat(F.lit(f"{i}:"), F.col(f"blk{i}").cast("string")).alias("bk")
-        )
-        a, b = k.alias("a"), k.alias("b")
-        parts.append(
-            a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.id") < F.col("b.id")))
-            .select(
-                F.col("a.id").alias("left_id"),
-                F.col("b.id").alias("right_id"),
-                F.col("a.simhash").alias("sh_l"),
-                F.col("b.simhash").alias("sh_r"),
-            )
-        )
-    cand = parts[0]
-    for p in parts[1:]:
-        cand = cand.unionByName(p)
-    ham = F.bit_count(F.col("sh_l").bitwiseXOR(F.col("sh_r")))
+    One self-join over the exploded (id, simhash, bk) rows: both sides are
+    the same plan, so AQE reuses the one bk exchange and the simhash UDF
+    runs once, with no cache to release."""
+    bk = _simhash_block_key(max_hamming)
+    keyed = simhash_codes(df).select("id", "simhash", bk)
+    a, b = keyed.alias("a"), keyed.alias("b")
+    cand = a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.id") < F.col("b.id")))
+    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
-        cand.distinct()
-        .where(ham <= max_hamming)
-        .select("left_id", "right_id", ham.alias("hamming"))
+        cand.where(ham <= max_hamming)
+        .select(F.col("a.id").alias("left_id"), F.col("b.id").alias("right_id"),
+                ham.alias("hamming"))
+        .distinct()
     )
 
 
 def delta_simhash_pairs(
-    old_codes: DataFrame,
-    new_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
+    old_codes: DataFrame, new_docs: DataFrame, max_hamming: int = 3
 ) -> DataFrame:
     """Hamming-radius pairs with >= 1 NEW endpoint.
 
     ``old_codes`` is a committed ``simhash_codes`` output (id, simhash):
     the corpus hashes once; each new batch runs the simhash UDF over its
-    own docs only, and the per-block joins are new x (old + new) — never
+    own docs only, and the block join is new x (old + new) — never
     old x old. Completes the incremental-dedup family alongside
     ``delta_minhash_pairs``.
     """
-    n_blocks, block_cols = _simhash_block_exprs(max_hamming)
-    new_codes = simhash_codes(new_docs, id_col, text_col)
-    blocks_new = new_codes.select("id", "simhash", *block_cols).persist()
-    # union of BLOCK frames, reusing the persisted new side — building
-    # blocks_all from new_codes directly would re-run the simhash UDF over
-    # the new batch a second time
-    blocks_all = (
-        old_codes.select("id", "simhash", *block_cols)
-        .unionByName(blocks_new)
-        .persist()
-    )
-    parts = []
-    for i in range(n_blocks):
-        sel = lambda d: d.select(  # noqa: E731
-            "id", "simhash",
-            F.concat(F.lit(f"{i}:"), F.col(f"blk{i}").cast("string")).alias("bk"),
-        )
-        n, t = sel(blocks_new).alias("n"), sel(blocks_all).alias("t")
-        parts.append(
-            n.join(t, (F.col("n.bk") == F.col("t.bk")) & (F.col("n.id") != F.col("t.id")))
-            .select(
-                F.least(F.col("n.id"), F.col("t.id")).alias("left_id"),
-                F.greatest(F.col("n.id"), F.col("t.id")).alias("right_id"),
-                F.col("n.simhash").alias("sh_l"),  # hamming is symmetric
-                F.col("t.simhash").alias("sh_r"),
-            )
-        )
-    cand = parts[0]
-    for p in parts[1:]:
-        cand = cand.unionByName(p)
-    ham = F.bit_count(F.col("sh_l").bitwiseXOR(F.col("sh_r")))
+    bk = _simhash_block_key(max_hamming)
+    # persist: the new batch's keys feed both join sides (the union below
+    # differs in plan, so no exchange reuse) — without it the simhash UDF
+    # would run over the new batch twice
+    keyed_new = simhash_codes(new_docs).select("id", "simhash", bk).persist()
+    keyed_all = old_codes.select("id", "simhash", bk).unionByName(keyed_new)
+    n, t = keyed_new.alias("n"), keyed_all.alias("t")
+    cand = n.join(t, (F.col("n.bk") == F.col("t.bk")) & (F.col("n.id") != F.col("t.id")))
+    ham = F.bit_count(F.col("n.simhash").bitwiseXOR(F.col("t.simhash")))
     return (
         cand.where(ham <= max_hamming)
-        .select("left_id", "right_id", ham.alias("hamming"))
+        .select(
+            F.least(F.col("n.id"), F.col("t.id")).alias("left_id"),
+            F.greatest(F.col("n.id"), F.col("t.id")).alias("right_id"),
+            ham.alias("hamming"),
+        )
         .distinct()
     )
 
@@ -352,17 +295,11 @@ def _ngram_jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(out, index=a.index, dtype="float64")
 
 
-def ngram_jaccard_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    **lsh_kwargs,
-) -> DataFrame:
+def ngram_jaccard_dedup(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """LSH candidates verified by exact character-3-gram Jaccard >= threshold.
     The classic block-then-verify shape: candidates are the only shuffle."""
-    cand = minhash_lsh_pairs(df, id_col, text_col, **lsh_kwargs)
-    texts = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
+    cand = minhash_lsh_pairs(df)
+    texts = df.select(F.col("doc_id").alias("id"), F.col("text").alias("txt"))
     j = (
         cand.join(texts.withColumnRenamed("id", "left_id").withColumnRenamed("txt", "lt"), "left_id")
         .join(texts.withColumnRenamed("id", "right_id").withColumnRenamed("txt", "rt"), "right_id")
@@ -371,38 +308,26 @@ def ngram_jaccard_dedup(
     return j.where(F.col("jaccard") >= threshold).select("left_id", "right_id", "jaccard")
 
 
-def minhash_jaccard_estimates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
-    max_band_size: int = 10_000,
-) -> DataFrame:
+def minhash_jaccard_estimates(df: DataFrame) -> DataFrame:
     """LSH candidate pairs + VERIFY-FREE Jaccard estimate from signatures.
 
-    est = (#equal signature slots) / num_perm — the standard MinHash
-    estimator of word-shingle Jaccard (std err <= 1/(2*sqrt(num_perm))).
+    est = (#equal signature slots) / NUM_PERM (64) — the standard MinHash
+    estimator of word-shingle Jaccard (std err <= 1/16).
     At 100 TB this is the cheap middle tier between raw candidates and the
     exact n-gram verify: thresholding on the estimate costs a zip_with over
     two already-committed arrays, no text reads at all. The division by
-    num_perm (a power of two) is exact binary, so the DuckDB oracle is
+    NUM_PERM (a power of two) is exact binary, so the DuckDB oracle is
     bit-identical.
     """
-    cand = minhash_lsh_pairs(
-        df, id_col, text_col,
-        num_perm=num_perm, bands=bands, shingle_k=shingle_k,
-        max_band_size=max_band_size,
-    )
+    cand = minhash_lsh_pairs(df)
     from ..functions.udfs import make_minhash_signature_udf
 
-    sig_udf = make_minhash_signature_udf(num_perm=num_perm, shingle_k=shingle_k)
+    sig_udf = make_minhash_signature_udf()
     # persist: the signature UDF feeds BOTH sides of the candidate join —
     # without a materialization each side re-runs it over the full corpus
     # (the same multi-consumer 2x-wall lesson as minhash_lsh_pairs)
     sigs = spread(df).select(
-        F.col(id_col).alias("id"), sig_udf(_norm_ws_expr(text_col)).alias("sig")
+        F.col("doc_id").alias("id"), sig_udf(_norm_ws_expr()).alias("sig")
     ).persist()
     j = (
         cand.join(
@@ -420,7 +345,7 @@ def minhash_jaccard_estimates(
     )
     return j.select(
         "left_id", "right_id",
-        (matches.cast("double") / F.lit(float(num_perm))).alias("jaccard_est"),
+        (matches.cast("double") / F.lit(float(NUM_PERM))).alias("jaccard_est"),
     )
 
 
@@ -462,13 +387,7 @@ def near_dup_groups_from_edges(
     )
 
 
-def near_dup_groups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    members_cap: int | None = 1000,
-    **lsh_kwargs,
-) -> DataFrame:
+def near_dup_groups(df: DataFrame, members_cap: int | None = 1000) -> DataFrame:
     """Near-dup CLUSTERS with a canonical keeper, for inspection/reporting.
 
     minhash_lsh_pairs edges -> :func:`near_dup_groups_from_edges` roll-up.
@@ -488,7 +407,7 @@ def near_dup_groups(
     key the roll-up groups on, so it adds no extra shuffle beyond the
     group-by's own Exchange.
     """
-    pairs = minhash_lsh_pairs(df, id_col, text_col, **lsh_kwargs)
+    pairs = minhash_lsh_pairs(df)
     edges = pairs.select(F.col("left_id").alias("u"), F.col("right_id").alias("v"))
     # left_id < right_id by construction -> no u == v rows for CC to keep
     return near_dup_groups_from_edges(
@@ -510,12 +429,7 @@ def dedup_decisions_from_edges(
     )
 
 
-def dedup_decisions(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **lsh_kwargs,
-) -> DataFrame:
+def dedup_decisions(df: DataFrame) -> DataFrame:
     """The PRIMARY dedup deliverable: one row per doc to DROP, with the
     keeper it duplicates — the anti-joinable decision table a training
     pipeline consumes (``corpus.join(decisions, "doc_id", "left_anti")``).
@@ -527,7 +441,7 @@ def dedup_decisions(
     array on one task. Prefer this over exploding
     :func:`near_dup_groups`.members at any real corpus scale.
     """
-    pairs = minhash_lsh_pairs(df, id_col, text_col, **lsh_kwargs)
+    pairs = minhash_lsh_pairs(df)
     edges = pairs.select(F.col("left_id").alias("u"), F.col("right_id").alias("v"))
     # left_id < right_id by construction (see near_dup_groups)
     return dedup_decisions_from_edges(edges, assume_no_self_loops=True)
@@ -537,10 +451,7 @@ def delta_ngram_jaccard_pairs(
     old_keys: DataFrame,
     old_docs: DataFrame,
     new_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.8,
-    **lsh_kwargs,
 ) -> DataFrame:
     """Verified near-dup pairs with >= 1 NEW endpoint — the incremental
     block-then-verify, completing the delta family (minhash / simhash /
@@ -556,13 +467,11 @@ def delta_ngram_jaccard_pairs(
     restricted to new-endpoint pairs == this, away from cap boundaries
     (same caveat as the other deltas).
     """
-    cand = delta_minhash_pairs(
-        old_keys, new_docs, id_col=id_col, text_col=text_col, **lsh_kwargs
-    )
+    cand = delta_minhash_pairs(old_keys, new_docs)
     texts = (
-        old_docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
+        old_docs.select(F.col("doc_id").alias("id"), F.col("text").alias("txt"))
         .unionByName(
-            new_docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
+            new_docs.select(F.col("doc_id").alias("id"), F.col("text").alias("txt"))
         )
     )
     j = (
@@ -581,15 +490,9 @@ def delta_ngram_jaccard_pairs(
     )
 
 
-def embedding_bucket_keys(
-    df: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    seed: int = 7,
-) -> DataFrame:
-    """(id, v, bucket) hyperplane-LSH rows — the committable representation
+def embedding_bucket_keys(df: DataFrame, dim: int) -> DataFrame:
+    """(id, v, bucket) hyperplane-LSH rows over a (vec_id, embedding)
+    frame, 8 seeded hyperplanes — the committable representation
     for the embedding near-dup family (the full and delta passes both key on
     it, so a corpus bucketed once is never re-bucketed for a new batch).
 
@@ -606,37 +509,28 @@ def embedding_bucket_keys(
 
     from ..functions.udfs import make_hyperplane_bucket_udf
 
-    rng = np.random.RandomState(seed)
-    planes = rng.randn(n_planes, dim).tolist()
+    planes = np.random.RandomState(7).randn(8, dim).tolist()
     # fail fast on a dim/vector mismatch: sign bits against a wrong-length
     # vector would silently collapse buckets and turn the near-linear
     # bucket pass into an O(n^2) one. The check rides inside the value
     # column so column pruning cannot drop it; a null vector passes
     # (size(NULL) is NULL, which would otherwise raise a NULL message).
-    v = F.col(vec_col)
+    v = F.col("embedding")
     checked_vec = F.when(v.isNull() | (F.size(v) == dim), v).otherwise(
         F.raise_error(
             F.concat(F.lit(f"embedding length != dim={dim}: "),
                      F.size(v).cast("string"))
         )
     )
-    # the batched pass costs O(n_planes x dim) per row: spread the scan
+    # the batched pass costs O(planes x dim) per row: spread the scan
     # before paying it
     return spread(df).select(
-        F.col(id_col).alias("id"), checked_vec.alias("v"),
+        F.col("vec_id").alias("id"), checked_vec.alias("v"),
         make_hyperplane_bucket_udf(planes)(v).alias("bucket"),
     )
 
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    seed: int = 7,
-) -> DataFrame:
+def embedding_near_dup_pairs(df: DataFrame, dim: int, threshold: float = 0.95) -> DataFrame:
     """Cosine near-dups via random-hyperplane LSH buckets + exact verify:
     ``(left_id, right_id, cos_sim)`` with ``cos_sim = round(cosine, 6)``
     ``>= threshold``. Brute force is O(n^2); bucketing keeps it near-linear
@@ -644,9 +538,7 @@ def embedding_near_dup_pairs(
     bits). All pairs of a bucket are scored by one per-bucket kernel
     (``similarity_search.hyperplane_bucket_pairs``). Null vectors pair with
     nothing."""
-    keyed = embedding_bucket_keys(
-        df, dim, id_col=id_col, vec_col=vec_col, n_planes=n_planes, seed=seed,
-    )
+    keyed = embedding_bucket_keys(df, dim)
     return hyperplane_bucket_pairs(keyed, decimals=6, threshold=threshold)
 
 
@@ -654,11 +546,7 @@ def delta_embedding_near_dup(
     old_keys: DataFrame,
     new_vectors: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
-    n_planes: int = 8,
-    seed: int = 7,
 ) -> DataFrame:
     """Embedding near-dup pairs with >= 1 NEW endpoint — the 5th and last
     dedup family's incremental variant. ``old_keys`` is a committed
@@ -670,10 +558,7 @@ def delta_embedding_near_dup(
     id is immutable once committed), and the result equals the full pass
     restricted to pairs with a new endpoint.
     """
-    new_keys = embedding_bucket_keys(
-        new_vectors, dim, id_col=id_col, vec_col=vec_col,
-        n_planes=n_planes, seed=seed,
-    )
+    new_keys = embedding_bucket_keys(new_vectors, dim)
     keyed = old_keys.select("id", "v", "bucket", F.lit(False).alias("_new")).unionByName(
         new_keys.withColumn("_new", F.lit(True))
     )

@@ -5,14 +5,15 @@ Reference semantics re-expressed (retrieve_landing_pages.py:38-91,112-115;
 retrieve_pkp_work_url_download_pdf.py:31-76):
 
 - retry policy: Timeout/ConnectionError and HTTP 5xx retry up to
-  ``max_retries`` with exponential backoff ``backoff * 2**(attempt-1)``;
+  ``MAX_RETRIES`` with exponential backoff
+  ``BACKOFF_FACTOR * 2**(attempt-1)``;
   other HTTP errors fail immediately with the status in the message.
 - content-type gate (P8): a 200 response whose Content-Type does not
   contain the wanted type is routed to status='skipped' (py:57-63).
 - per-domain politeness: the reference serializes same-domain requests with
   an Arc<Mutex> per domain and a 0.1 s delay (py:112-115). Distributed
   analog: repartition by domain so one task owns a domain, then iterate
-  that partition sequentially with ``min_delay`` between same-domain hits.
+  that partition sequentially (no delay between same-domain hits).
 
 The HTTP transport is INJECTABLE and the default raises — this sandbox has
 no network; tests inject a deterministic fake. The operator's Spark shape
@@ -60,22 +61,20 @@ def fetch_once_with_retry(
     url: str,
     transport: Callable[[str], tuple[int, str, str]],
     wanted_type: str,
-    max_retries: int = MAX_RETRIES,
-    backoff: float = BACKOFF_FACTOR,
     sleep: Callable[[float], None] = time.sleep,
 ) -> tuple[str, str, str, str, int]:
     """-> (status, detail, content_type, body, n_attempts). Pure kernel;
     mirrors fetch_html_with_retry (py:38-91) including the backoff series."""
     attempts = 0
-    while attempts <= max_retries:
+    while attempts <= MAX_RETRIES:
         attempts += 1
         try:
             code, ctype, body = transport(url)
         except TransientError as e:
-            if attempts > max_retries:
+            if attempts > MAX_RETRIES:
                 return ("failed", f"Error: Max retries exceeded ({type(e).__name__})",
                         "", "", attempts)
-            sleep(backoff * (2 ** (attempts - 1)))
+            sleep(BACKOFF_FACTOR * (2 ** (attempts - 1)))
             continue
         ctype_l = (ctype or "").lower()
         if 200 <= code < 300:
@@ -85,10 +84,10 @@ def fetch_once_with_retry(
                     f"Skipped - Content-Type is not {wanted_type} ({ctype_l})",
                     ctype_l, "", attempts)
         if 500 <= code < 600:
-            if attempts > max_retries:
+            if attempts > MAX_RETRIES:
                 return ("failed", f"Error: Max retries exceeded ({code})", "", "",
                         attempts)
-            sleep(backoff * (2 ** (attempts - 1)))
+            sleep(BACKOFF_FACTOR * (2 ** (attempts - 1)))
             continue
         return ("failed", f"Error: HTTP Error: {code}", "", "", attempts)
     return ("failed", "Error: Unknown error after retries", "", "", attempts)
@@ -96,42 +95,30 @@ def fetch_once_with_retry(
 
 def fetch_urls(
     urls: DataFrame,
-    url_col: str = "url",
-    wanted_type: str = "text/html",
     transport: Callable[[str], tuple[int, str, str]] = default_transport,
-    max_retries: int = MAX_RETRIES,
-    backoff: float = BACKOFF_FACTOR,
-    min_delay: float = 0.0,
     n_partitions: int | None = None,
     sleep: Callable[[float], None] = time.sleep,
 ) -> DataFrame:
-    """Distributed fetch with per-domain politeness.
+    """Distributed fetch of the ``url`` column's text/html pages with
+    per-domain politeness.
 
     Plan shape: repartition(domain) -> mapInPandas (sequential within a
-    partition, ``min_delay`` between same-domain requests) -> one row per
-    URL with routed status. At cluster scale the repartition bounds each
+    partition) -> one row per URL with routed status. At cluster scale the repartition bounds each
     domain to one task — the reference's per-domain mutex without a lock."""
     from ..functions import native
 
-    keyed = urls.withColumn("_domain", native.registrable_domain(F.col(url_col)))
+    keyed = urls.withColumn("_domain", native.registrable_domain(F.col("url")))
     keyed = keyed.repartition(
         *([n_partitions] if n_partitions else []), "_domain"
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        last_hit: dict[str, float] = {}
         for pdf in batches:
             rows = []
-            for url, domain in zip(pdf[url_col], pdf["_domain"]):
-                if min_delay and domain in last_hit:
-                    dt = time.monotonic() - last_hit[domain]
-                    if dt < min_delay:
-                        sleep(min_delay - dt)
+            for url in pdf["url"]:
                 status, detail, ctype, body, n = fetch_once_with_retry(
-                    url, transport, wanted_type, max_retries, backoff, sleep
+                    url, transport, "text/html", sleep
                 )
-                if min_delay:
-                    last_hit[domain] = time.monotonic()
                 rows.append((url, status, detail, ctype, body, n))
             yield pd.DataFrame(
                 rows, columns=[f.name for f in FETCH_SCHEMA.fields]

@@ -259,14 +259,12 @@ def _extract_udf(filenames: pd.Series, htmls: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(out, index=filenames.index)
 
 
-def extract_html_pairs(
-    df: DataFrame, file_col: str = "file_name", html_col: str = "html"
-) -> DataFrame:
+def extract_html_pairs(df: DataFrame) -> DataFrame:
     """(file_name, html, ...) -> one row per extracted raw pair:
     (<carried cols>, doi, author, institution, source, seq) plus per-file
     tag flags. Feed the result to ``span_pairing.dedup_pairs_with_sources``
     (keyed on file) for the reference's merged CSV rows."""
-    parsed = df.withColumn("_x", _extract_udf(F.col(file_col), F.col(html_col)))
+    parsed = df.withColumn("_x", _extract_udf(F.col("file_name"), F.col("html")))
     return (
         parsed.select(
             "*",
@@ -277,7 +275,7 @@ def extract_html_pairs(
             F.col("_x.has_ul_authors").alias("has_ul_authors"),
             F.explode_outer("_x.pairs").alias("_p"),
         )
-        .drop("_x", html_col)
+        .drop("_x", "html")
         .select(
             "*",
             F.col("_p.author").alias("author"),
@@ -289,9 +287,9 @@ def extract_html_pairs(
     )
 
 
-def html_parse_stats(extracted: DataFrame, file_col: str = "file_name") -> DataFrame:
+def html_parse_stats(extracted: DataFrame) -> DataFrame:
     """The reference's parsing_stats block (py:123-129,250-289) as one agg."""
-    per_file = extracted.groupBy(file_col).agg(
+    per_file = extracted.groupBy("file_name").agg(
         F.first("has_author_tag").alias("a"),
         F.first("has_institution_tag").alias("i"),
         F.first("has_ul_authors").alias("u"),

@@ -58,7 +58,7 @@ def media_spans(documents: DataFrame) -> DataFrame:
     ).select("doc_id", F.col("m.media_ref").alias("media_ref"), F.col("m.offset").alias("offset"))
 
 
-def extract_media_text(documents: DataFrame, batch_hint: int = 64) -> DataFrame:
+def extract_media_text(documents: DataFrame) -> DataFrame:
     """mapInPandas media->text extraction (S11). Each Arrow batch maps to one
     inference call in production; here the fake decoder runs per batch.
 

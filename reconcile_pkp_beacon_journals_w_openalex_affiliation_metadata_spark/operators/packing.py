@@ -7,7 +7,8 @@ coverage table (who contributes which in-doc token range to which pack);
 ``materialize_packs`` emits the actual per-pack ordered token concatenation —
 the tensor-shaped deliverable a pretraining data loader consumes.
 ``delta_pack_slices`` / ``delta_materialize_packs`` are the O(batch)
-incremental twins (committed corpus never rescanned).
+incremental twins (committed corpus never rescanned). Every API reads a
+(doc_id, source, text) frame: ``source`` is the stratum.
 
 Scale shape: one shuffle on the stratum key for the running-sum window, a
 row-local explode whose fan-out is 1 + n_tokens/pack_size per doc, and (for
@@ -30,30 +31,25 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _tokens(text_col: str):
-    return F.split(F.trim(F.col(text_col)), "[ \t\n\f\r]+")
+def _tokens():
+    return F.split(F.trim(F.col("text")), "[ \t\n\f\r]+")
 
 
 def _packed(
-    docs: DataFrame,
-    id_col: str,
-    stratum_col: str,
-    text_col: str,
-    carry_tokens: bool,
-    stratum_totals: DataFrame | None = None,
+    docs: DataFrame, carry_tokens: bool, stratum_totals: DataFrame | None = None
 ) -> DataFrame:
     """[id, stratum, (toks), n_tokens, tok_before] — the running-sum frame
     shared by every packing API. ``stratum_totals`` (delta mode) offsets
     each stratum's running sum by the committed stream length."""
-    w = Window.partitionBy(stratum_col).orderBy(id_col)
-    cols = [F.col(id_col), F.col(stratum_col)]
+    w = Window.partitionBy("source").orderBy("doc_id")
+    cols = [F.col("doc_id"), F.col("source")]
     if carry_tokens:
-        cols.append(_tokens(text_col).alias("toks"))
+        cols.append(_tokens().alias("toks"))
         base = docs.select(*cols).withColumn(
             "n_tokens", F.size("toks").cast("long")
         )
     else:
-        cols.append(F.size(_tokens(text_col)).cast("long").alias("n_tokens"))
+        cols.append(F.size(_tokens()).cast("long").alias("n_tokens"))
         base = docs.select(*cols)
     # a zero-token doc contributes nothing and must not reach the pack-range
     # math (sequence(first_p, last_p) with last_p < first_p would generate a
@@ -64,7 +60,7 @@ def _packed(
     offset = F.lit(0).cast("long")
     if stratum_totals is not None:
         base = base.join(
-            F.broadcast(stratum_totals), stratum_col, "left"
+            F.broadcast(stratum_totals), "source", "left"
         ).withColumn("tok_total", F.coalesce(F.col("tok_total"), F.lit(0)))
         offset = F.col("tok_total")
     packed = base.withColumn(
@@ -81,7 +77,7 @@ def _pack_range(pack_size: int):
     return first_p, last_p
 
 
-def _slice_rows(packed: DataFrame, pack_size: int, id_col: str, stratum_col: str) -> DataFrame:
+def _slice_rows(packed: DataFrame, pack_size: int) -> DataFrame:
     """Count-only coverage rows (no token payload): explode the pack range,
     then derive the slice arithmetic per row."""
     first_p, last_p = _pack_range(pack_size)
@@ -92,7 +88,7 @@ def _slice_rows(packed: DataFrame, pack_size: int, id_col: str, stratum_col: str
         F.col("tok_before") + F.col("n_tokens"),
     )
     return cov.select(
-        id_col, stratum_col,
+        "doc_id", "source",
         F.col("pack_id").cast("long").alias("pack_id"),
         (start_g - F.col("tok_before")).cast("long").alias("slice_start"),
         (end_g - start_g).cast("long").alias("slice_len"),
@@ -100,7 +96,7 @@ def _slice_rows(packed: DataFrame, pack_size: int, id_col: str, stratum_col: str
     )
 
 
-def _token_slice_rows(packed: DataFrame, pack_size: int, stratum_col: str) -> DataFrame:
+def _token_slice_rows(packed: DataFrame, pack_size: int) -> DataFrame:
     """(stratum, pack_id, pack_offset, slice_toks) with the slice cut
     INSIDE the pack-range transform: each exploded row carries only its own
     <= pack_size tokens, keeping per-doc work O(n_tokens)."""
@@ -122,34 +118,28 @@ def _token_slice_rows(packed: DataFrame, pack_size: int, stratum_col: str) -> Da
         )
 
     parts = F.transform(F.sequence(first_p, last_p), mk)
-    return packed.select(stratum_col, F.explode(parts).alias("pk")).select(
-        stratum_col,
+    return packed.select("source", F.explode(parts).alias("pk")).select(
+        "source",
         F.col("pk.pack_id").alias("pack_id"),
         F.col("pk.pack_offset").alias("pack_offset"),
         F.col("pk.slice_toks").alias("slice_toks"),
     )
 
 
-def _assemble_packs(slices: DataFrame, stratum_col: str) -> DataFrame:
+def _assemble_packs(slices: DataFrame) -> DataFrame:
     parts = F.sort_array(F.collect_list(F.struct("pack_offset", "slice_toks")))
     return (
-        slices.groupBy(stratum_col, "pack_id")
+        slices.groupBy("source", "pack_id")
         .agg(F.flatten(parts.getField("slice_toks")).alias("pack_toks"))
         .select(
-            stratum_col, "pack_id",
+            "source", "pack_id",
             F.concat_ws(" ", "pack_toks").alias("pack_text"),
             F.size("pack_toks").cast("long").alias("pack_len"),
         )
     )
 
 
-def pack_slices(
-    docs: DataFrame,
-    pack_size: int = 256,
-    id_col: str = "doc_id",
-    stratum_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def pack_slices(docs: DataFrame, pack_size: int = 256) -> DataFrame:
     """Coverage table: one row per (doc, pack) overlap.
 
     Columns: id, stratum, pack_id, slice_start/slice_len (the in-doc token
@@ -158,17 +148,10 @@ def pack_slices(
     contiguously; per (stratum, pack) the offsets tile [0, pack_size)
     gaplessly and every pack is exactly full except the last per stratum.
     """
-    packed = _packed(docs, id_col, stratum_col, text_col, False)
-    return _slice_rows(packed, pack_size, id_col, stratum_col)
+    return _slice_rows(_packed(docs, False), pack_size)
 
 
-def materialize_packs(
-    docs: DataFrame,
-    pack_size: int = 256,
-    id_col: str = "doc_id",
-    stratum_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def materialize_packs(docs: DataFrame, pack_size: int = 256) -> DataFrame:
     """Per-pack ordered concatenation — the actual pretraining deliverable.
 
     One row per (stratum, pack_id) with ``pack_text`` (the pack's tokens in
@@ -180,21 +163,14 @@ def materialize_packs(
     Tokens are carried through the window (no second join back to the
     documents table).
     """
-    packed = _packed(docs, id_col, stratum_col, text_col, True)
-    return _assemble_packs(
-        _token_slice_rows(packed, pack_size, stratum_col), stratum_col
-    )
+    return _assemble_packs(_token_slice_rows(_packed(docs, True), pack_size))
 
 
-def stratum_token_totals(
-    docs: DataFrame,
-    stratum_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def stratum_token_totals(docs: DataFrame) -> DataFrame:
     """(stratum, tok_total) — the committed stream length per stratum; the
     only state ``delta_pack_slices`` needs from a 10^12-doc corpus."""
-    return docs.groupBy(stratum_col).agg(
-        F.sum(F.size(_tokens(text_col)).cast("long")).alias("tok_total")
+    return docs.groupBy("source").agg(
+        F.sum(F.size(_tokens()).cast("long")).alias("tok_total")
     )
 
 
@@ -202,9 +178,6 @@ def delta_pack_slices(
     new_docs: DataFrame,
     stratum_totals: DataFrame,
     pack_size: int = 256,
-    id_col: str = "doc_id",
-    stratum_col: str = "source",
-    text_col: str = "text",
 ) -> DataFrame:
     """O(batch) incremental packing: coverage rows for an APPENDED batch.
 
@@ -212,7 +185,7 @@ def delta_pack_slices(
     :func:`stratum_token_totals`, a one-row-per-stratum table a catalog
     keeps alongside the pack manifest). Contract: the batch is an APPEND —
     every new doc sorts after all committed docs of its stratum in the
-    ``id_col`` order (the t10/t11 stream order). Under that contract the
+    ``doc_id`` order (the t10/t11 stream order). Under that contract the
     new docs' running sums simply start at the committed total, so the
     emitted rows equal the full rebuild's rows for exactly the new docs
     (pytest-gated), and the trailing partial pack of the committed stream
@@ -222,10 +195,7 @@ def delta_pack_slices(
 
     New strata (no committed total) start at offset 0.
     """
-    packed = _packed(
-        new_docs, id_col, stratum_col, text_col, False, stratum_totals
-    )
-    return _slice_rows(packed, pack_size, id_col, stratum_col)
+    return _slice_rows(_packed(new_docs, False, stratum_totals), pack_size)
 
 
 def delta_materialize_packs(
@@ -233,9 +203,6 @@ def delta_materialize_packs(
     stratum_totals: DataFrame,
     trailing_packs: DataFrame,
     pack_size: int = 256,
-    id_col: str = "doc_id",
-    stratum_col: str = "source",
-    text_col: str = "text",
 ) -> DataFrame:
     """O(batch) incremental pack MATERIALIZATION: the affected packs only.
 
@@ -252,17 +219,12 @@ def delta_materialize_packs(
     replace-by-(stratum, pack_id) upsert — the same batch-replace shape as
     the catalog's append protocol.
     """
-    packed = _packed(
-        new_docs, id_col, stratum_col, text_col, True, stratum_totals
-    )
-    new_slices = _token_slice_rows(packed, pack_size, stratum_col)
+    new_slices = _token_slice_rows(_packed(new_docs, True, stratum_totals), pack_size)
     # the committed trailing pack participates as a pseudo-slice at offset 0
     trail_slices = trailing_packs.select(
-        F.col(stratum_col),
+        F.col("source"),
         F.col("pack_id").cast("long").alias("pack_id"),
         F.lit(0).cast("long").alias("pack_offset"),
         F.split(F.col("pack_text"), " ").alias("slice_toks"),
     )
-    return _assemble_packs(
-        new_slices.unionByName(trail_slices), stratum_col
-    )
+    return _assemble_packs(new_slices.unionByName(trail_slices))

@@ -120,12 +120,7 @@ def _pair_join(
     return cold.unionByName(hot)
 
 
-def blocking_family_quality(
-    keys: DataFrame,
-    n_salts: int = DEFAULT_N_SALTS,
-    hot_pair_threshold: int = HOT_PAIR_THRESHOLD,
-    max_block_size: int | None = None,
-) -> DataFrame:
+def blocking_family_quality(keys: DataFrame, max_block_size: int | None = None) -> DataFrame:
     """Per-blocking-family quality diagnostics: which key families earn
     their cost. One row per family (the key prefix before ':'):
 
@@ -144,11 +139,11 @@ def blocking_family_quality(
     (pair) / (family) — no new shuffle shape beyond the join itself.
     """
     sizes = block_size_metrics(keys)
-    dropped, hot = _exceptional_lists(sizes, hot_pair_threshold, max_block_size)
+    dropped, hot = _exceptional_lists(sizes, HOT_PAIR_THRESHOLD, max_block_size)
     k = _apply_flags(keys, dropped, hot)
     pj = _pair_join(
         _side(k, "pkp", "left_id"), _side(k, "oa", "right_id"),
-        n_salts, bool(hot),
+        DEFAULT_N_SALTS, bool(hot),
     )
     fam = F.substring_index("key", ":", 1)
     # single-pass roll-up: pair -> its family SET, exploded back with an

@@ -72,23 +72,18 @@ def score_pairs(
     return _attach_features(pairs, l, r, weights, threshold)
 
 
-def score_record_pairs(
-    pairs: DataFrame,
-    records: DataFrame,
-    weights: dict[str, float] | None = None,
-    threshold: float | None = None,
-) -> DataFrame:
+def score_record_pairs(pairs: DataFrame, records: DataFrame) -> DataFrame:
     """Side-agnostic scorer for arbitrary (left_id, right_id) pairs.
 
-    Same features/logistic as ``score_pairs``, but both sides resolve by
-    doc_id against the full records table — used to score labeled ground
-    truth (which includes same-side negative pairs) for calibration, and
-    any ad-hoc pair list a user brings.
+    Same features and shipped-constant logistic as ``score_pairs``, but
+    both sides resolve by doc_id against the full records table — used to
+    score labeled ground truth (which includes same-side negative pairs)
+    for calibration, and any ad-hoc pair list a user brings.
     """
     cols = ["doc_id", "norm_title", "norm_issn", "domain", "country"]
     l = records.select(*[F.col(c).alias(f"l_{c}") for c in cols])
     r = records.select(*[F.col(c).alias(f"r_{c}") for c in cols])
-    return _attach_features(pairs, l, r, weights, threshold)
+    return _attach_features(pairs, l, r, None, None)
 
 
 def _attach_features(

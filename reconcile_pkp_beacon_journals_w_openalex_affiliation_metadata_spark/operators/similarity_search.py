@@ -46,13 +46,11 @@ def cosine(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def brute_force_topk(
-    vectors: DataFrame, queries: DataFrame, k: int = 10,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    q_id_col: str = "q_id", q_vec_col: str = "q_vec",
-) -> DataFrame:
+def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k per query: broadcast the (small) query side, score all
     vectors, window top-k. Cost O(|vectors| * |queries|) — the baseline.
+    ``vectors`` carries (vec_id, embedding), ``queries`` (q_id, q_vec), in
+    this and every other search operator here.
 
     r6 plan shape: norms are computed ONCE per row/query (the factored
     ``_norm`` expression yields the identical double), and the per-pair dot
@@ -67,21 +65,21 @@ def brute_force_topk(
     # norm runs through the Arrow-batched fold (bit-exact with the
     # interpreted HOF — same addition order) instead of per-row lambdas.
     v = spread(vectors).select(
-        F.col(id_col), F.col(vec_col), seq_norm_udf(F.col(vec_col)).alias("_vn")
+        F.col("vec_id"), F.col("embedding"), seq_norm_udf(F.col("embedding")).alias("_vn")
     )
     q = queries.select(
-        F.col(q_id_col), F.col(q_vec_col), seq_norm_udf(F.col(q_vec_col)).alias("_qn")
+        F.col("q_id"), F.col("q_vec"), seq_norm_udf(F.col("q_vec")).alias("_qn")
     )
     joined = v.crossJoin(F.broadcast(q))
     scored = joined.select(
-        F.col(q_id_col), F.col(id_col),
+        F.col("q_id"), F.col("vec_id"),
         F.round(
-            seq_dot_udf(F.col(vec_col), F.col(q_vec_col))
+            seq_dot_udf(F.col("embedding"), F.col("q_vec"))
             / (F.col("_vn") * F.col("_qn")),
             6,
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
+    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
@@ -120,7 +118,6 @@ def refine_ivf_centroids(
     vectors: DataFrame,
     centroids: list[tuple[int, list[float]]],
     iters: int = 2,
-    vec_col: str = "embedding",
     assign_decimals: int = 9,
 ) -> list[tuple[int, list[float]]]:
     """Distributed Lloyd iterations over the seed centroids.
@@ -151,9 +148,9 @@ def refine_ivf_centroids(
         # is all that matters; _nearest_cells_udf re-normalizes centroids)
         # compute the O(dim) norm ONCE per row; dividing inside the
         # transform lambda would re-evaluate it per element (O(dim^2)/row)
-        norm = F.greatest(_norm(F.col(vec_col)), F.lit(1e-300))
+        norm = F.greatest(_norm(F.col("embedding")), F.lit(1e-300))
         assigned = (
-            vectors.select(F.col(vec_col).alias("raw"), norm.alias("n"))
+            vectors.select(F.col("embedding").alias("raw"), norm.alias("n"))
             .select(
                 F.transform(
                     F.col("raw"), lambda x: x.cast("double") / F.col("n")
@@ -179,10 +176,7 @@ def refine_ivf_centroids(
 
 
 def build_ivf_index(
-    vectors: DataFrame, n_cells: int = 16,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    assign_decimals: int = 9,
-    refine_iters: int = 0,
+    vectors: DataFrame, n_cells: int = 16, assign_decimals: int = 9, refine_iters: int = 0,
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
     """Deterministic coarse quantizer: centroids = the n_cells vectors with
     the smallest md5(id). ``orderBy(...).limit(n)`` compiles to
@@ -193,22 +187,21 @@ def build_ivf_index(
     ``refine_iters > 0`` runs that many distributed Lloyd rounds on the
     seed centroids before assignment (see ``refine_ivf_centroids``)."""
     cent_rows = (
-        vectors.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")))
+        vectors.select("vec_id", "embedding")
+        .orderBy(F.md5(F.col("vec_id").cast("string")))
         .limit(n_cells)
         .collect()
     )
-    centroids = [(i, [float(x) for x in r[vec_col]]) for i, r in enumerate(cent_rows)]
+    centroids = [(i, [float(x) for x in r["embedding"]]) for i, r in enumerate(cent_rows)]
     if refine_iters:
         centroids = refine_ivf_centroids(
-            vectors, centroids, iters=refine_iters,
-            vec_col=vec_col, assign_decimals=assign_decimals,
+            vectors, centroids, iters=refine_iters, assign_decimals=assign_decimals
         )
     pick1 = _nearest_cells_udf(centroids, 1, decimals=assign_decimals)
     # assignment is the full-corpus Arrow pass (and downstream ivf_topk
     # scores on this partitioning via a broadcast probe join): spread a
     # one-task fixture scan across the cores first
-    assigned = spread(vectors).withColumn("cell", pick1(F.col(vec_col))[0])
+    assigned = spread(vectors).withColumn("cell", pick1(F.col("embedding"))[0])
     return assigned, centroids
 
 
@@ -216,19 +209,14 @@ def ivf_insert(
     assigned: DataFrame,
     centroids: list[tuple[int, list[float]]],
     new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     assign_decimals: int = 9,
-    assume_new: bool = False,
 ) -> DataFrame:
     """Fold new vectors into an existing IVF index: the NEW batch is
     assigned against the FIXED centroids (map-only) and unioned with the
     committed assignments — no rebuild, no re-assignment of the old corpus.
 
     The idempotence guard anti-joins the new batch against the old ID
-    column (an id-only pushdown scan + one shuffle over ids); pass
-    ``assume_new=True`` to skip it when upstream dedup (e.g. the catalog
-    resume filter) already guarantees unseen ids. Ids are treated as
+    column (an id-only pushdown scan + one shuffle over ids). Ids are treated as
     IMMUTABLE: a re-submitted id keeps its committed embedding/cell — this
     is append-only index maintenance, not upsert. Identical to rebuilding
     only while the coarse quantizer stays representative; rebuild when the
@@ -236,19 +224,15 @@ def ivf_insert(
     the canary).
     """
     pick1 = _nearest_cells_udf(centroids, 1, decimals=assign_decimals)
-    fresh = new_vectors
-    if not assume_new:
-        # ids are unique in the index; no distinct needed for anti-join
-        fresh = new_vectors.join(assigned.select(id_col), id_col, "left_anti")
-    newly = fresh.withColumn("cell", pick1(F.col(vec_col))[0])
+    # ids are unique in the index; no distinct needed for anti-join
+    fresh = new_vectors.join(assigned.select("vec_id"), "vec_id", "left_anti")
+    newly = fresh.withColumn("cell", pick1(F.col("embedding"))[0])
     return assigned.unionByName(newly.select(*assigned.columns))
 
 
 def ivf_topk(
     assigned: DataFrame, centroids: list[tuple[int, list[float]]],
     queries: DataFrame, k: int = 10, n_probe: int = 4,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    q_id_col: str = "q_id", q_vec_col: str = "q_vec",
     assign_decimals: int = 9, score_decimals: int = 6,
 ) -> DataFrame:
     """Approximate top-k: each query probes its n_probe nearest cells only.
@@ -259,22 +243,22 @@ def ivf_topk(
     from ..functions.udfs import seq_dot_udf, seq_norm_udf
 
     pick = _nearest_cells_udf(centroids, n_probe, decimals=assign_decimals)
-    q = queries.withColumn("cell", F.explode(pick(F.col(q_vec_col)))).withColumn(
-        "_qn", seq_norm_udf(F.col(q_vec_col))
+    q = queries.withColumn("cell", F.explode(pick(F.col("q_vec")))).withColumn(
+        "_qn", seq_norm_udf(F.col("q_vec"))
     )
     # corpus-side norm via the Arrow-batched fold (bit-exact, see
     # brute_force_topk) — the interpreted HOF was O(dim) lambda steps/row
-    av = assigned.withColumn("_vn", seq_norm_udf(F.col(vec_col)))
+    av = assigned.withColumn("_vn", seq_norm_udf(F.col("embedding")))
     joined = av.join(q, "cell", "inner")
     scored = joined.select(
-        F.col(q_id_col), F.col(id_col),
+        F.col("q_id"), F.col("vec_id"),
         F.round(
-            seq_dot_udf(F.col(vec_col), F.col(q_vec_col))
+            seq_dot_udf(F.col("embedding"), F.col("q_vec"))
             / (F.col("_vn") * F.col("_qn")),
             score_decimals,
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
+    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)

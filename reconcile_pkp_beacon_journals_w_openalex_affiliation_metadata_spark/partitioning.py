@@ -20,9 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread(df: DataFrame, multiple: int = 1) -> DataFrame:
-    """Round-robin repartition ``df`` to ``defaultParallelism * multiple``
-    partitions iff it currently has fewer — the guard that keeps this a
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition ``df`` to ``defaultParallelism`` partitions
+    iff it currently has fewer — the guard that keeps this a
     no-op on well-laid-out inputs (and the reason it is safe to call inside
     operators: the repartition only ever ADDS parallelism, never collapses
     an already-parallel scan).
@@ -34,8 +34,7 @@ def spread(df: DataFrame, multiple: int = 1) -> DataFrame:
     """
     if df.isStreaming:
         return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * multiple
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

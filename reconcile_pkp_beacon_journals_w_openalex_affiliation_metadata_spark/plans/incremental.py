@@ -17,6 +17,13 @@ is already committed. This plan recomputes exactly the delta:
   O(log n) large-star/small-star rounds on a far smaller edge set than a
   rebuild's.
 
+The delta is computed under the committed run's own definition: the
+block cap and the scoring weights/threshold a full run recorded in its
+``scored`` table's marker meta (``jobs/reconcile_job.py`` writes them) are
+the ones the fold applies, and a caller cap that contradicts the recorded
+one is an error. A ``scored`` table committed without that meta is folded
+with the caller's cap and the shipped scoring constants.
+
 Every stage commits through the catalog, so the incremental run is itself
 resumable; the merged tables it publishes are byte-compatible with a full
 rebuild (equivalence is pytest-gated in tests/test_incremental.py).
@@ -49,14 +56,14 @@ def incremental_reconcile(
     n_salts: int = pairs.DEFAULT_N_SALTS,
     hot_pair_threshold: int = pairs.HOT_PAIR_THRESHOLD,
     max_block_size: int | None = None,
-    weights: dict | None = None,
-    threshold: float | None = None,
 ) -> IncrementalResult:
     """Fold ``new_documents`` into the committed reconcile state.
 
     Requires committed ``records``, ``blocking_keys``, ``scored`` and
     ``clusters`` tables (a prior full run); publishes updated versions of
-    all four plus ``candidate_pairs``.
+    all four plus ``candidate_pairs``. ``max_block_size=None`` takes the
+    cap recorded with the committed ``scored`` table; a different cap
+    raises ``ValueError``.
     """
     # retire ORPHANED batches from a crashed prior run first: records
     # appends LAST, so any batch id present in a downstream table but
@@ -102,6 +109,15 @@ def incremental_reconcile(
             "incremental_reconcile needs a committed full run "
             "(records/blocking_keys/scored/clusters)"
         )
+    recorded = cat.meta("scored")
+    if "max_block_size" in recorded:
+        if max_block_size is not None and max_block_size != recorded["max_block_size"]:
+            raise ValueError(
+                f"max_block_size={max_block_size} differs from the committed "
+                f"run's {recorded['max_block_size']}: a fold must apply the "
+                "cap the committed tables were built with"
+            )
+        max_block_size = recorded["max_block_size"]
 
     # truly-new docs only (rerun safety: an already-processed doc is a no-op).
     # Every delta frame is localCheckpoint-ed (eager), NOT persist-ed: the
@@ -109,11 +125,14 @@ def incremental_reconcile(
     # the CacheManager (canonicalized-plan match) and refreshByPath would
     # otherwise serve or recompute stale/post-rewrite data. A checkpoint
     # cuts the lineage — the materialized rows stay valid whatever happens
-    # to the source paths.
-    fresh = new_documents.join(
-        old_records.select(F.col("doc_id")).distinct(), "doc_id", "left_anti"
+    # to the source paths. Extraction reads the batch itself, so extract's
+    # partition probe (partitioning.spread) sees a scan and runs no job;
+    # the anti-join against committed ids then runs once, on the records.
+    new_records = (
+        extract.extract_records(new_documents)
+        .join(old_records.select(F.col("doc_id")).distinct(), "doc_id", "left_anti")
+        .localCheckpoint()
     )
-    new_records = extract.extract_records(fresh).localCheckpoint()
     new_keys = blocking.blocking_keys(new_records).localCheckpoint()
     new_ids = new_records.select("doc_id").distinct()
 
@@ -153,7 +172,8 @@ def incremental_reconcile(
 
     all_records = old_records.unionByName(new_records)
     delta_scored = scoring.score_pairs(
-        delta_pairs, all_records, weights=weights, threshold=threshold
+        delta_pairs, all_records,
+        weights=recorded.get("weights"), threshold=recorded.get("threshold"),
     ).localCheckpoint()
 
     # seeded CC: previous assignment as star edges + the delta's matches

@@ -135,7 +135,6 @@ class ReconcileResult:
 
 def reconcile(
     documents: DataFrame,
-    n_salts: int = pairs.DEFAULT_N_SALTS,
     hot_pair_threshold: int = HOT_PAIR_THRESHOLD,
     max_block_size: int | None = None,
     with_clusters: bool = True,
@@ -151,7 +150,9 @@ def reconcile(
         return df if name == last else df.persist()
 
     out = run_stages(
-        flagship_stages(documents, n_salts, hot_pair_threshold, max_block_size),
+        flagship_stages(
+            documents, hot_pair_threshold=hot_pair_threshold, max_block_size=max_block_size
+        ),
         materialize,
         until=last,
     )

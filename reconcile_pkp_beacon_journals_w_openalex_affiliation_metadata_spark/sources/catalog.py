@@ -120,6 +120,10 @@ class Catalog:
         with open(self._marker(name)) as f:
             return json.load(f)
 
+    def meta(self, name: str) -> dict:
+        """The ``meta`` a committed table was written with ({} if none)."""
+        return self._read_marker(name).get("meta") or {}
+
     def _write_marker(self, name: str, payload: dict) -> None:
         marker = self._marker(name)
         tmp = marker + f".tmp_{uuid.uuid4().hex[:8]}"
@@ -288,14 +292,16 @@ def run_stage(
     build: "callable",
     partition_by: list[str] | None = None,
     force: bool = False,
+    meta: dict | None = None,
 ) -> DataFrame:
     """Checkpointed stage runner: skip when committed, else build + commit.
     ``build()`` -> DataFrame. Restart-safe: a rerun after a crash recomputes
-    only uncommitted stages (north_rule resumability)."""
+    only uncommitted stages (north_rule resumability). ``meta`` is written
+    to the commit marker after ``build()`` has run."""
     if not force:
         cached = catalog.read_committed(spark, name)
         if cached is not None:
             return cached
     df = build()
-    catalog.write_committed(df, name, partition_by=partition_by)
+    catalog.write_committed(df, name, partition_by=partition_by, meta=meta)
     return catalog.read_committed(spark, name)

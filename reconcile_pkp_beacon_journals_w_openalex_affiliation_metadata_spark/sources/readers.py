@@ -55,12 +55,13 @@ def read_whole_files(spark: SparkSession, path: str, glob: str | None = None) ->
     return reader.option("recursiveFileLookup", "true").load(path)
 
 
-def with_deterministic_file_order(df: DataFrame, col: str = "_input_file") -> DataFrame:
+def with_deterministic_file_order(df: DataFrame) -> DataFrame:
     """O2: stable per-file processing order (vlm_text_extractor.py:608 sorts
     the file list before iterating). Spark's scan order is nondeterministic
     across runs/partitionings; tagging each row with ``input_file_name()``
     and sorting on it restores a deterministic total file order for
-    order-sensitive sinks (one-file-per-record layouts, progress logs)."""
+    order-sensitive sinks (one-file-per-record layouts, progress logs). The
+    tag column is ``_input_file``."""
     from pyspark.sql import functions as F
 
-    return df.withColumn(col, F.input_file_name()).orderBy(col)
+    return df.withColumn("_input_file", F.input_file_name()).orderBy("_input_file")

@@ -35,13 +35,13 @@ def sanitize_prefix(prefix: str) -> str:
     return p if p else "unknown_sanitized_prefix"
 
 
-def record_path(out_dir: str, member_id: str, prefix: str, doi: str, ext: str = ".html") -> str:
+def record_path(out_dir: str, member_id: str, prefix: str, doi: str) -> str:
     name = base64.urlsafe_b64encode((doi or "").encode("utf-8")).decode("ascii")
     # member_id goes through the same sanitizer as prefix: a crafted id like
     # '../../x' would otherwise traverse out of out_dir, and executors write
     # these paths directly (the reference shares the gap; the distributed
     # writer amplifies it)
-    return os.path.join(out_dir, sanitize_prefix(str(member_id)), sanitize_prefix(prefix), name + ext)
+    return os.path.join(out_dir, sanitize_prefix(str(member_id)), sanitize_prefix(prefix), name + ".html")
 
 
 _WRITE_SCHEMA = T.StructType(
@@ -53,25 +53,18 @@ _WRITE_SCHEMA = T.StructType(
 )
 
 
-def write_one_file_per_record(
-    df: DataFrame,
-    out_dir: str,
-    content_col: str = "body",
-    member_col: str = "member_id",
-    prefix_col: str = "prefix",
-    doi_col: str = "doi",
-    ext: str = ".html",
-) -> DataFrame:
-    """-> DataFrame(doi, path, n_bytes) of written files. Lazy like every
+def write_one_file_per_record(df: DataFrame, out_dir: str) -> DataFrame:
+    """(member_id, prefix, doi, body) -> DataFrame(doi, path, n_bytes) of
+    written ``.html`` files. Lazy like every
     sink-as-transformation: run an action (``.count()``) to execute."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for member, prefix, doi, content in zip(
-                pdf[member_col], pdf[prefix_col], pdf[doi_col], pdf[content_col]
+                pdf["member_id"], pdf["prefix"], pdf["doi"], pdf["body"]
             ):
-                path = record_path(out_dir, member, prefix, doi, ext)
+                path = record_path(out_dir, member, prefix, doi)
                 os.makedirs(os.path.dirname(path), exist_ok=True)
                 data = (content or "").encode("utf-8")
                 with open(path, "wb") as f:

@@ -4,7 +4,7 @@ Batch t9 sessionizes with lag + running-sum over a window. On a continuous
 ingest the same 30-minute-inactivity semantics need per-user state that
 survives micro-batches: ``applyInPandasWithState`` holding the open
 session (start, last-seen, count) per user and emitting a session row the
-moment a gap larger than ``gap_s`` is observed.
+moment a gap larger than ``GAP_S`` is observed.
 
 Semantics (documented, tested):
 - events inside a batch are processed in event-time order (per-group sort);
@@ -29,6 +29,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+# session gap: the t9 batch query's 30 minutes of inactivity
+GAP_S = 1800
 
 _STATE_SCHEMA = T.StructType(
     [
@@ -87,16 +90,10 @@ def _fold_group(
     return closed, open_state
 
 
-def sessionize_stream(
-    stream: DataFrame,
-    gap_s: int = 1800,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    timeout: str = "none",
-) -> DataFrame:
+def sessionize_stream(stream: DataFrame, timeout: str = "none") -> DataFrame:
     """streaming (user_id, ts, ...) -> closed sessions
     (user_id, session_start_us, session_end_us, n_events)."""
-    gap_us = gap_s * 1_000_000
+    gap_us = GAP_S * 1_000_000
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -111,7 +108,7 @@ def sessionize_stream(
             return
         closed, open_state = _fold_group(
             key[0],
-            [pdf[ts_col] for pdf in pdfs],
+            [pdf["ts"] for pdf in pdfs],
             state.get if state.exists else None,
             gap_us,
         )
@@ -129,7 +126,7 @@ def sessionize_stream(
         if timeout == "event_time"
         else GroupStateTimeout.NoTimeout
     )
-    return stream.groupBy(F.col(user_col)).applyInPandasWithState(
+    return stream.groupBy(F.col("user_id")).applyInPandasWithState(
         fn,
         outputStructType=_OUT_SCHEMA,
         stateStructType=_STATE_SCHEMA,

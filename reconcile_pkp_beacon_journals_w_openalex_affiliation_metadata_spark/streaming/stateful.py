@@ -25,10 +25,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 _STATE_SCHEMA = T.StructType([T.StructField("seen", T.BooleanType())])
 
 
-def first_seen_stream(
-    stream: DataFrame, key_col: str = "content_key"
-) -> DataFrame:
-    """streaming df with ``key_col`` -> rows whose key appears for the first
+def first_seen_stream(stream: DataFrame) -> DataFrame:
+    """streaming df with ``content_key`` -> rows whose key appears for the first
     time across the whole stream (exactly-once per key, checkpoint-backed)."""
     out_schema = stream.schema
 
@@ -46,7 +44,7 @@ def first_seen_stream(
             yield first
 
     return (
-        stream.groupBy(F.col(key_col))
+        stream.groupBy(F.col("content_key"))
         .applyInPandasWithState(
             fn,
             outputStructType=out_schema,

@@ -16,21 +16,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def windowed_event_counts(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    key_col: str | None = "event_type",
-    window: str = "10 seconds",
-    late: str = "30 seconds",
-) -> DataFrame:
-    """-> (window struct, [key], n, sum_value) with watermark-gated state.
+def windowed_event_counts(stream: DataFrame, key_col: str | None = "event_type") -> DataFrame:
+    """(ts, [key], value) stream -> (window struct, [key], n, sum_value)
+    over 10-second tumbling windows, with watermark-gated state.
 
     Append-mode contract: a window row is emitted once, when the watermark
-    passes its end; events later than ``late`` behind the max seen event
+    passes its end; events more than 30 seconds behind the max seen event
     time are dropped (the reference's batch rollup has no late concept —
     this is the streaming extension)."""
-    wm = stream.withWatermark(ts_col, late)
-    keys = [F.window(F.col(ts_col), window).alias("window")]
+    wm = stream.withWatermark("ts", "30 seconds")
+    keys = [F.window(F.col("ts"), "10 seconds").alias("window")]
     if key_col:
         keys.append(F.col(key_col))
     return wm.groupBy(*keys).agg(

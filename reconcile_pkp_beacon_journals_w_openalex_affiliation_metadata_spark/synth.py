@@ -94,11 +94,19 @@ class Corpus:
     labeled_pairs: list[dict] = field(default_factory=list)
 
 
-def _accentify(rng: random.Random, s: str, k: int = 2) -> str:
+# share of journals with OpenAlex copies, share of journals under the hot
+# publisher, chance of a media span after each text span, authors per page
+MATCH_RATE = 0.72
+HOT_SHARE = 0.2
+MEDIA_RATE = 0.4
+N_AUTHORS_MAX = 4
+
+
+def _accentify(rng: random.Random, s: str) -> str:
     chars = list(s)
     idxs = [i for i, c in enumerate(chars) if c in _ACCENT_MAP]
     rng.shuffle(idxs)
-    for i in idxs[:k]:
+    for i in idxs[:2]:
         chars[i] = _ACCENT_MAP[chars[i]]
     return "".join(chars)
 
@@ -147,7 +155,7 @@ def _issn(rng: random.Random) -> str:
     return f"{body[:4]}-{body[4:]}{check}"
 
 
-def _doc(doc_id: str, fields: list[tuple[str, str]], rng: random.Random, media_rate: float) -> dict:
+def _doc(doc_id: str, fields: list[tuple[str, str]], rng: random.Random) -> dict:
     """Serialize record fields into the interleaved span layout.
 
     Text spans carry 'KEY: value' lines; media spans carry only media_ref —
@@ -159,7 +167,7 @@ def _doc(doc_id: str, fields: list[tuple[str, str]], rng: random.Random, media_r
     for key, value in fields:
         spans.append({"kind": "text", "text": f"{key}: {value}", "media_ref": "", "offset": off})
         off += 1
-        if rng.random() < media_rate:
+        if rng.random() < MEDIA_RATE:
             spans.append(
                 {
                     "kind": "media",
@@ -175,10 +183,6 @@ def _doc(doc_id: str, fields: list[tuple[str, str]], rng: random.Random, media_r
 def generate(
     seed: int = 42,
     n_journals: int = 200,
-    match_rate: float = 0.72,
-    hot_share: float = 0.2,
-    media_rate: float = 0.4,
-    n_authors_max: int = 4,
     oa_copies: int = 1,
 ) -> Corpus:
     rng = random.Random(seed)
@@ -202,7 +206,7 @@ def generate(
             title = f"{title}, Series {j}"
         titles_seen.add(title)
         pub, domain, country = (
-            _HOT_PUBLISHER if rng.random() < hot_share else rng.choice(_PUBLISHERS)
+            _HOT_PUBLISHER if rng.random() < HOT_SHARE else rng.choice(_PUBLISHERS)
         )
         r = rng.random()
         issn = None if r < 0.10 else ("BAD-ISSN" if r < 0.14 else _issn(rng))
@@ -243,9 +247,9 @@ def generate(
             ("COUNTRY", jr["country"]),
             ("URL", jr["oai_url"]),
         ]
-        out.documents.append(_doc(f"pkp:{jr['journal_id']}", pkp_fields, rng, media_rate))
+        out.documents.append(_doc(f"pkp:{jr['journal_id']}", pkp_fields, rng))
 
-        n_copies = oa_copies if rng.random() < match_rate else 0
+        n_copies = oa_copies if rng.random() < MATCH_RATE else 0
         for copy in range(n_copies):
             oid = f"S{j:05d}" if copy == 0 else f"S{j:05d}c{copy}"
             # matched OpenAlex record: perturbed title, same or missing ISSN
@@ -268,7 +272,7 @@ def generate(
                 ("COUNTRY", jr["country"]),
                 ("URL", u + f"/article/view/{rng.randrange(1000)}"),
             ]
-            out.documents.append(_doc(f"oa:{oid}", oa_fields, rng, media_rate))
+            out.documents.append(_doc(f"oa:{oid}", oa_fields, rng))
             out.labeled_pairs.append(
                 {
                     "left_id": f"pkp:{jr['journal_id']}",
@@ -314,7 +318,7 @@ def generate(
             if doi_variant < 0.5
             else (f"doi:{doi}" if doi_variant < 0.6 else doi)
         )
-        n_auth = rng.randrange(1, n_authors_max + 1)
+        n_auth = rng.randrange(1, N_AUTHORS_MAX + 1)
         authorships = []
         landing_rows = []
         for k in range(n_auth):

@@ -18,12 +18,12 @@ def _bands(title: str) -> set[str]:
     norm = kernels.normalize_text(title)
     word = {
         "band:" + b
-        for b in hashing.minhash_bands(hashing.shingles(norm), num_perm=64, bands=16)
+        for b in hashing.minhash_bands(hashing.shingles(norm), bands=16)
     }
     char = {
         "cband:" + b
         for b in hashing.minhash_bands(
-            hashing.char_ngrams(norm, 4), num_perm=64, bands=8, seed=137
+            hashing.char_ngrams(norm, 4), bands=8, seed=137
         )
     }
     return word | char

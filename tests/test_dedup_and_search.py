@@ -349,6 +349,36 @@ def test_delta_simhash_pairs_equals_full_pass(spark, corpus_dfs):
     assert want_delta  # radius 6 on near-dup corpus: non-trivial delta
 
 
+def test_simhash_near_pairs_is_one_join_with_no_cache_left(spark, corpus_dfs):
+    """simhash_near_pairs equals a brute-force Hamming scan over
+    simhash_codes at every radius, plans a single self-join over the
+    exploded block keys, and leaves no persisted RDD behind."""
+    import re
+
+    docs = corpus_dfs["documents"].select(
+        "doc_id", F.concat_ws(" ", F.transform("spans", lambda s: s["text"])).alias("text")
+    )
+    codes = [(r["id"], r["simhash"] & (2**64 - 1)) for r in dedup.simhash_codes(docs).collect()]
+    sc = spark.sparkContext
+    cached = {str(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+    sizes = {}
+    for radius in (0, 3, 6, 10):
+        want = set()
+        for i, (a, ca) in enumerate(codes):
+            for b, cb in codes[i + 1:]:
+                ham = bin(ca ^ cb).count("1")
+                if ham <= radius:
+                    want.add((min(a, b), max(a, b), ham))
+        pairs = dedup.simhash_near_pairs(docs, max_hamming=radius)
+        plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+        assert len(re.findall(r"(?m)^[\s:+\-|]*Join\b", plan)) == 1, plan
+        got = {(r["left_id"], r["right_id"], r["hamming"]) for r in pairs.collect()}
+        assert got == want, radius
+        sizes[radius] = len(want)
+    assert 0 < sizes[3] < sizes[10]  # the radii select different pair sets
+    assert {str(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()} == cached
+
+
 def test_ivf_lloyd_refinement_recovers_probe_recall(spark):
     """r3 verdict item 6: md5-seeded centroids follow data density, so a
     large diffuse cluster soaks up most seeds and splits itself across many

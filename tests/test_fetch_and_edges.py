@@ -35,7 +35,7 @@ def test_fetch_retry_backoff_series():
               fetch.TransientError("conn"), (200, "text/html; charset=utf-8", "<html>ok")],
     })
     status, detail, ctype, body, n = fetch.fetch_once_with_retry(
-        "u", t, "text/html", max_retries=3, backoff=2.0, sleep=sleeps.append
+        "u", t, "text/html", sleep=sleeps.append
     )
     assert status == "fetched" and body == "<html>ok" and n == 4
     assert ctype == "text/html; charset=utf-8"
@@ -47,7 +47,7 @@ def test_fetch_gives_up_after_max_retries():
     sleeps = []
     t = _scripted_transport({"u": [fetch.TransientError("t")] * 10})
     status, detail, *_, n = fetch.fetch_once_with_retry(
-        "u", t, "text/html", max_retries=3, sleep=sleeps.append
+        "u", t, "text/html", sleep=sleeps.append
     )
     assert status == "failed" and "Max retries exceeded" in detail and n == 4
     assert len(sleeps) == 3

@@ -103,7 +103,7 @@ def test_first_seen_stream_dedups_across_microbatches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(src))
     )
-    deduped = first_seen_stream(stream, "content_key")
+    deduped = first_seen_stream(stream)
     q = (
         deduped.writeStream.format("memory")
         .queryName("first_seen_t")
@@ -137,8 +137,7 @@ def test_windowed_counts_watermark_drops_late(spark, tmp_path):
     def run_once(name):
         got = []
         stream = spark.readStream.schema("ts timestamp, value long").json(str(src))
-        agg = windowed_event_counts(stream, ts_col="ts", key_col=None,
-                                    window="10 seconds", late="30 seconds")
+        agg = windowed_event_counts(stream, key_col=None)
         q = (
             agg.writeStream.foreachBatch(lambda bdf, bid: got.extend(bdf.collect()))
             .option("checkpointLocation", ckpt)
@@ -215,7 +214,7 @@ def test_sessionize_stream_matches_batch_sessions(spark, tmp_path):
         .select("user_id", F.timestamp_seconds(F.col("ts")).alias("ts"))
     )
     q = (
-        sessionize_stream(stream, gap_s=1800)
+        sessionize_stream(stream)
         .writeStream.format("memory").queryName("sess_t")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .outputMode("append").trigger(availableNow=True).start()
@@ -303,7 +302,7 @@ def test_sessionize_stream_event_time_timeout_flushes_open_sessions(spark, tmp_p
         .withWatermark("ts", "0 seconds")
     )
     q = (
-        sessionize_stream(stream, gap_s=1800, timeout="event_time")
+        sessionize_stream(stream, timeout="event_time")
         .writeStream.format("memory").queryName("sess_et")
         .option("checkpointLocation", str(tmp_path / "ckpt_et"))
         .outputMode("append").trigger(availableNow=True).start()

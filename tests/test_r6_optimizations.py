@@ -398,8 +398,8 @@ def test_lsh_window_cap_equals_antijoin_cap(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     cap = 3
     new = {tuple(r) for r in minhash_lsh_pairs(
-        docs, id_col="doc_id", text_col="text", max_band_size=cap).collect()}
-    keys = minhash_band_keys(docs, "doc_id", "text").persist()
+        docs, max_band_size=cap).collect()}
+    keys = minhash_band_keys(docs).persist()
     oversized = keys.groupBy("band").count().where(F.col("count") > cap).select("band")
     kept = keys.join(F.broadcast(oversized), "band", "left_anti")
     a, b = kept.alias("a"), kept.alias("b")

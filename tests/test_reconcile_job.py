@@ -163,6 +163,76 @@ def test_job_tables_equal_reconcile(spark, tmp_path):
     assert _reconcile_cache_report(spark, docs) == _read_golden("reconcile_persisted_plans.txt")
 
 
+def test_fold_scores_under_the_committed_runs_cap_and_calibration(spark, tmp_path):
+    """A fold given only ``--new-documents`` and ``--output`` applies the
+    block cap and the fitted weights/threshold the full run recorded with
+    its ``scored`` table, and refuses a different cap."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark import (
+        schemas,
+        synth,
+    )
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.jobs import (
+        incremental_job,
+    )
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators import (
+        scoring,
+    )
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.sources.catalog import (
+        Catalog,
+    )
+
+    cap = 40
+    out = str(tmp_path / "fold_out")
+    main(["--synth", "300", "--calibrate-synth", "--max-block-size", str(cap), "--output", out])
+    cat = Catalog(out)
+    recorded = cat.meta("scored")
+    assert recorded["max_block_size"] == cap
+
+    # a batch of unseen documents: another seed's corpus under fresh ids
+    batch = synth.generate(seed=7, n_journals=40).documents
+    batch = [{**d, "doc_id": d["doc_id"].replace(":", ":new", 1)} for d in batch]
+    new_path = str(tmp_path / "new_docs")
+    spark.createDataFrame(batch, schema=schemas.DOCUMENTS).write.parquet(new_path)
+    with pytest.raises(ValueError, match="max_block_size"):
+        incremental_job.main(
+            ["--new-documents", new_path, "--output", out, "--max-block-size", str(cap + 1)]
+        )
+    incremental_job.main(["--new-documents", new_path, "--output", out])
+
+    (batch_id,) = cat.list_batches("scored")
+    delta = spark.read.parquet(os.path.join(out, "scored", f"batch_{batch_id}"))
+    pairs = delta.select("left_id", "right_id")
+    assert pairs.count() > 0
+
+    # the delta's scores are the recorded model's, not the shipped constants
+    records = cat.read_committed(spark, "records")
+
+    def probs(df):
+        return {(r["left_id"], r["right_id"]): r["match_prob"] for r in df.collect()}
+
+    got = probs(delta)
+    want = probs(scoring.score_pairs(
+        pairs, records, weights=recorded["weights"], threshold=recorded["threshold"]
+    ))
+    assert got == want
+    assert got != probs(scoring.score_pairs(pairs, records))
+
+    # every delta pair shares at least one key within the cap
+    keys = cat.read_committed(spark, "blocking_keys")
+    sizes = keys.groupBy("key").agg(F.count("*").alias("n"))
+    kept = keys.join(sizes.where(F.col("n") <= cap), "key").select("doc_id", "key")
+    supported = (
+        pairs.join(kept.withColumnRenamed("doc_id", "left_id"), "left_id")
+        .join(kept.withColumnRenamed("doc_id", "right_id"), ["right_id", "key"])
+        .select("left_id", "right_id")
+        .distinct()
+    )
+    assert pairs.subtract(supported).count() == 0
+
+
 if __name__ == "__main__":
     from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.session import (
         get_spark,
