@@ -79,45 +79,52 @@ def minhash_lsh_pairs(df: DataFrame, max_band_size: int = MAX_BAND_SIZE) -> Data
 
     Oversized band buckets (stop-phrase shingles) are dropped with the same
     cap discipline as blocking.pairs — a degenerate bucket adds quadratic
-    pairs and no signal.
+    pairs and no signal. The plan is :func:`_band_join`'s."""
+    return _band_join(minhash_band_keys(df), max_band_size)
 
-    r6 plan shape (guide §2.4 "two operations keyed the same way can share
-    one exchange"): the band-size cap is a count() window over the SAME
-    band partitioning the self-join needs, so the whole operator costs ONE
-    shuffle of the key rows (plus the pair distinct) — the previous shape
-    paid a separate groupBy shuffle for the cap, a driver broadcast of the
-    oversized set, and a persist of the keys (the band exchange is
-    identical on both self-join sides, so AQE reuses it and the banding
-    UDF runs once without any cache). The join is hinted sort-merge: the
-    window's own sort already orders each partition by band, a broadcast
-    of a corpus-sized side would be wrong at scale (and measured slower
-    locally — the driver round-trip), and sort-merge spills gracefully
-    where a forced shuffled-hash build could OOM on a 100 TB key table.
-    Skew trade, stated plainly: a degenerate band's rows now shuffle to
-    and sort on ONE task before the cap filter discards them (hash
-    co-location by band), where the old anti-join dropped them map-side —
-    for a truly pathological band (a large fraction of the corpus under
-    one stop-phrase key) that single task becomes a spill-bound straggler.
-    The trade is taken deliberately: bands UNDER the cap land on one task
-    in BOTH designs (the join requires co-location), the sort spills to
-    disk rather than OOMing, and the alternative charges every healthy
-    corpus an extra full aggregation pass + broadcast to protect only the
-    degenerate case. Corpora known to carry mega-bands should pre-filter
-    them upstream (or lower max_band_size so the surviving sort is small —
-    the dropped rows still transit the shuffle once either way)."""
-    keys = minhash_band_keys(df)
+
+def _band_join(keys: DataFrame, max_band_size: int) -> DataFrame:
+    """The band join both MinHash operators run: distinct ``(left_id,
+    right_id)`` pairs, ``left_id < right_id``, of ``(id, band)`` key rows
+    that share a band holding at most ``max_band_size`` rows.
+
+    Key rows tagged with a boolean ``_new`` column (the delta) pair only
+    when at least one endpoint is new: the left side ``a`` is the new rows,
+    and a pair joins once — new x new as ``a.id < b.id``, new x old in
+    either id order. Ids are assumed unique across old and new; an id present in
+    both never pairs with itself.
+
+    Plan: the band cap is a count() window over the same band
+    partitioning the join needs, and both join sides read the same capped
+    rows — in the delta the ``_new`` filter sits above the window, so both
+    sides still carry ``(id, band, _new)``. AQE therefore reuses the one
+    band exchange, and the banding UDF runs once per document with no
+    cache. The join is hinted sort-merge: the window's sort already
+    orders each partition by band, a broadcast of a corpus-sized side
+    would be wrong at scale, and sort-merge spills where a shuffled-hash
+    build could OOM. Skew: a degenerate band's rows shuffle to and sort on
+    one task before the cap filter drops them, so a band holding a large
+    fraction of the corpus makes that task a spill-bound straggler. Bands
+    under the cap land on one task anyway (the join needs them together),
+    and dropping oversized bands map-side would cost every corpus an extra
+    aggregation pass and broadcast; corpora known to carry mega-bands
+    should filter them upstream."""
     kept = (
         keys.withColumn("_n", F.count("*").over(Window.partitionBy("band")))
         .where(F.col("_n") <= max_band_size)
         .drop("_n")
     )
-    a, b = kept.alias("a"), kept.alias("b")
+    tagged = "_new" in keys.columns
+    a = kept.where(F.col("_new")) if tagged else kept
+    a, b = a.alias("a"), kept.alias("b")
+    lo, hi = F.col("a.id"), F.col("b.id")
+    pair = lo < hi
+    if tagged:
+        pair = pair | (~F.col("b._new") & (lo != hi))
+        lo, hi = F.least(lo, hi), F.greatest(lo, hi)
     return (
-        a.join(
-            b.hint("merge"),
-            (F.col("a.band") == F.col("b.band")) & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("left_id"), F.col("b.id").alias("right_id"))
+        a.join(b.hint("merge"), (F.col("a.band") == F.col("b.band")) & pair)
+        .select(lo.alias("left_id"), hi.alias("right_id"))
         .distinct()
     )
 
@@ -128,62 +135,32 @@ def delta_minhash_pairs(old_keys: DataFrame, new_docs: DataFrame) -> DataFrame:
     The training-data ingestion shape at 100 TB: dedup each crawl batch
     against the committed corpus without re-banding or re-self-joining the
     corpus. ``old_keys`` is the committed ``minhash_band_keys`` output; only
-    the new batch runs the banding UDF, and the join is new x (old + new)
-    — never old x old. The band cap is measured over the UNION (same drop
-    semantics as a full pass; a band newly pushed over the cap stops
-    producing pairs, but previously emitted old x old pairs are retained —
-    the same deliberate cap-boundary caveat as pairs.delta_candidate_pairs).
+    the new batch runs the banding UDF, and the full pass's band join runs
+    over the ``_new``-tagged old + new key rows — never old x old. The band
+    cap is measured over the UNION (same drop semantics as a full pass; a
+    band newly pushed over the cap stops producing pairs, but previously
+    emitted old x old pairs are retained — the same deliberate
+    cap-boundary caveat as pairs.delta_candidate_pairs).
 
     Equivalence (tested): minhash_lsh_pairs(old + new) ==
     minhash_lsh_pairs(old) ∪ delta_minhash_pairs(old_keys, new), away from
     cap boundaries.
-
-    r6 plan shape (same cap rework as :func:`minhash_lsh_pairs`): the
-    union is tagged with an ``_new`` flag and the band cap is a count()
-    window over the union's single band shuffle — the separate cap
-    aggregation and oversized-set broadcast are gone. UNLIKE the
-    self-join case, the two join inputs here can NOT share one exchange:
-    column pruning drops ``_new`` from the ``t`` side, so the two band
-    exchanges differ in schema and neither static nor AQE exchange reuse
-    fires (verified in the committed x13 plan dump — the banding subtree
-    appears twice). ``kept_all`` is therefore persisted, exactly the r2
-    multi-consumer lesson this function always carried: ``old_keys`` may
-    be a LIVE banding plan (the x11/x13 queries build it inline), and
-    without the cache the whole old-corpus lineage would execute once per
-    join side — the cost the incremental path exists to avoid.
     """
-    new_keys = minhash_band_keys(new_docs)
-    all_keys = old_keys.withColumn("_new", F.lit(False)).unionByName(
-        new_keys.withColumn("_new", F.lit(True))
+    keys = old_keys.withColumn("_new", F.lit(False)).unionByName(
+        minhash_band_keys(new_docs).withColumn("_new", F.lit(True))
     )
-    kept_all = (
-        all_keys.withColumn("_n", F.count("*").over(Window.partitionBy("band")))
-        .where(F.col("_n") <= MAX_BAND_SIZE)
-        .drop("_n")
-        .persist()
-    )
-    kept_new = kept_all.where(F.col("_new"))
-    n, t = kept_new.alias("n"), kept_all.alias("t")
-    # new x all, both orientations, normalized to (min, max); new x new
-    # appears from both sides and collapses in the distinct
-    return (
-        n.join(
-            t.hint("merge"),
-            (F.col("n.band") == F.col("t.band")) & (F.col("n.id") != F.col("t.id")),
-        )
-        .select(
-            F.least(F.col("n.id"), F.col("t.id")).alias("left_id"),
-            F.greatest(F.col("n.id"), F.col("t.id")).alias("right_id"),
-        )
-        .distinct()
-    )
+    return _band_join(keys, MAX_BAND_SIZE)
 
 
 def simhash_codes(df: DataFrame) -> DataFrame:
     df = spread(df)  # simhash UDF pass: same single-task-scan repair as banding
+    # simhash_udf never returns null (empty text hashes to 0); the coalesce
+    # declares the column non-null, so a join's inferred isnotnull(simhash)
+    # is dropped instead of being pushed below spread()'s repartition, where
+    # it would run the UDF a second time
     return df.select(
         F.col("doc_id").alias("id"),
-        simhash_udf(F.lower(F.col("text"))).alias("simhash"),
+        F.coalesce(simhash_udf(F.lower(F.col("text"))), F.lit(0)).alias("simhash"),
     )
 
 
@@ -208,6 +185,24 @@ def _simhash_block_key(max_hamming: int):
     return F.explode(F.array(*[_block(i) for i in range(n_blocks)])).alias("bk")
 
 
+def _block_join(a: DataFrame, b: DataFrame, max_hamming: int, self_join: bool) -> DataFrame:
+    """The block join both SimHash operators run: ``(left_id, right_id,
+    hamming)``, ``left_id < right_id``, for ``(id, simhash, bk)`` rows of
+    ``a`` and ``b`` that share a block key and lie within ``max_hamming``.
+    A ``self_join`` (``a`` is ``b``) joins each pair once, as
+    ``a.id < b.id``; otherwise every pair of distinct ids joins. Not yet
+    distinct: a pair agreeing on several blocks comes once per block."""
+    a, b = a.alias("a"), b.alias("b")
+    lo, hi = F.col("a.id"), F.col("b.id")
+    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    return (
+        a.join(b, (F.col("a.bk") == F.col("b.bk")) & ((lo < hi) if self_join else (lo != hi)))
+        .where(ham <= max_hamming)
+        .select(F.least(lo, hi).alias("left_id"), F.greatest(lo, hi).alias("right_id"),
+                ham.alias("hamming"))
+    )
+
+
 def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Hamming-radius pairs: split the 64-bit code into ``max_hamming + 1``
     blocks; a pair within the radius has fewer differing bits than blocks, so
@@ -215,20 +210,13 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     are therefore a complete candidate set for ANY radius (a fixed 4-block
     split is only complete for radius <= 3).
 
-    One self-join over the exploded (id, simhash, bk) rows: both sides are
-    the same plan, so AQE reuses the one bk exchange and the simhash UDF
-    runs once, with no cache to release."""
-    bk = _simhash_block_key(max_hamming)
-    keyed = simhash_codes(df).select("id", "simhash", bk)
-    a, b = keyed.alias("a"), keyed.alias("b")
-    cand = a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.id") < F.col("b.id")))
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        cand.where(ham <= max_hamming)
-        .select(F.col("a.id").alias("left_id"), F.col("b.id").alias("right_id"),
-                ham.alias("hamming"))
-        .distinct()
-    )
+    One self-join over the exploded (id, simhash, bk) rows with no cache:
+    both sides are the same plan, so under a sort-merge join AQE reuses
+    the one bk exchange and the simhash UDF runs once per document (a
+    broadcast of one side cannot share the other's shuffle, so there it
+    runs twice)."""
+    keyed = simhash_codes(df).select("id", "simhash", _simhash_block_key(max_hamming))
+    return _block_join(keyed, keyed, max_hamming, self_join=True).distinct()
 
 
 def delta_simhash_pairs(
@@ -238,26 +226,18 @@ def delta_simhash_pairs(
 
     ``old_codes`` is a committed ``simhash_codes`` output (id, simhash):
     the corpus hashes once; each new batch runs the simhash UDF over its
-    own docs only, and the block join is new x (old + new) — never
-    old x old. Completes the incremental-dedup family alongside
+    own docs only, and the full pass's block join runs new x new and
+    new x old — never old x old. The three reads of the new batch's keyed
+    rows are one plan, so they share one exchange without a cache.
+    Completes the incremental-dedup family alongside
     ``delta_minhash_pairs``.
     """
     bk = _simhash_block_key(max_hamming)
-    # persist: the new batch's keys feed both join sides (the union below
-    # differs in plan, so no exchange reuse) — without it the simhash UDF
-    # would run over the new batch twice
-    keyed_new = simhash_codes(new_docs).select("id", "simhash", bk).persist()
-    keyed_all = old_codes.select("id", "simhash", bk).unionByName(keyed_new)
-    n, t = keyed_new.alias("n"), keyed_all.alias("t")
-    cand = n.join(t, (F.col("n.bk") == F.col("t.bk")) & (F.col("n.id") != F.col("t.id")))
-    ham = F.bit_count(F.col("n.simhash").bitwiseXOR(F.col("t.simhash")))
+    new = simhash_codes(new_docs).select("id", "simhash", bk)
+    old = old_codes.select("id", "simhash", bk)
     return (
-        cand.where(ham <= max_hamming)
-        .select(
-            F.least(F.col("n.id"), F.col("t.id")).alias("left_id"),
-            F.greatest(F.col("n.id"), F.col("t.id")).alias("right_id"),
-            ham.alias("hamming"),
-        )
+        _block_join(new, new, max_hamming, self_join=True)
+        .unionByName(_block_join(new, old, max_hamming, self_join=False))
         .distinct()
     )
 
@@ -295,17 +275,38 @@ def _ngram_jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(out, index=a.index, dtype="float64")
 
 
+# declared nondeterministic only so the optimizer cannot copy it into the
+# threshold filter: a filter over a deterministic projection is pushed
+# below it with the alias inlined, and the UDF then runs twice per pair
+_ngram_jaccard_udf = _ngram_jaccard_udf.asNondeterministic()
+
+
+def _attach_ends(cand: DataFrame, per_doc: DataFrame) -> DataFrame:
+    """``cand``'s ``(left_id, right_id)`` rows with ``per_doc``'s ``v``
+    (one ``(id, v)`` row per document) attached to each endpoint as ``l``
+    and ``r``. Both joins read the one ``per_doc`` plan, so AQE reuses its
+    exchange and a per-document UDF behind it runs once."""
+    return cand.join(
+        per_doc.select(F.col("id").alias("left_id"), F.col("v").alias("l")), "left_id"
+    ).join(per_doc.select(F.col("id").alias("right_id"), F.col("v").alias("r")), "right_id")
+
+
+def _jaccard_verify(cand: DataFrame, docs: DataFrame, threshold: float) -> DataFrame:
+    """Candidate pairs whose texts in ``docs`` (doc_id, text) have exact
+    character-3-gram Jaccard >= threshold, as (left_id, right_id, jaccard)."""
+    texts = docs.select(F.col("doc_id").alias("id"), F.col("text").alias("v"))
+    jaccard = F.round(_ngram_jaccard_udf(F.col("l"), F.col("r")), 4)
+    return (
+        _attach_ends(cand, texts)
+        .select("left_id", "right_id", jaccard.alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 def ngram_jaccard_dedup(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """LSH candidates verified by exact character-3-gram Jaccard >= threshold.
     The classic block-then-verify shape: candidates are the only shuffle."""
-    cand = minhash_lsh_pairs(df)
-    texts = df.select(F.col("doc_id").alias("id"), F.col("text").alias("txt"))
-    j = (
-        cand.join(texts.withColumnRenamed("id", "left_id").withColumnRenamed("txt", "lt"), "left_id")
-        .join(texts.withColumnRenamed("id", "right_id").withColumnRenamed("txt", "rt"), "right_id")
-        .withColumn("jaccard", F.round(_ngram_jaccard_udf(F.col("lt"), F.col("rt")), 4))
-    )
-    return j.where(F.col("jaccard") >= threshold).select("left_id", "right_id", "jaccard")
+    return _jaccard_verify(minhash_lsh_pairs(df), df, threshold)
 
 
 def minhash_jaccard_estimates(df: DataFrame) -> DataFrame:
@@ -319,31 +320,16 @@ def minhash_jaccard_estimates(df: DataFrame) -> DataFrame:
     NUM_PERM (a power of two) is exact binary, so the DuckDB oracle is
     bit-identical.
     """
-    cand = minhash_lsh_pairs(df)
     from ..functions.udfs import make_minhash_signature_udf
 
-    sig_udf = make_minhash_signature_udf()
-    # persist: the signature UDF feeds BOTH sides of the candidate join —
-    # without a materialization each side re-runs it over the full corpus
-    # (the same multi-consumer 2x-wall lesson as minhash_lsh_pairs)
     sigs = spread(df).select(
-        F.col("doc_id").alias("id"), sig_udf(_norm_ws_expr()).alias("sig")
-    ).persist()
-    j = (
-        cand.join(
-            sigs.select(F.col("id").alias("left_id"), F.col("sig").alias("sl")),
-            "left_id",
-        )
-        .join(
-            sigs.select(F.col("id").alias("right_id"), F.col("sig").alias("sr")),
-            "right_id",
-        )
+        F.col("doc_id").alias("id"), make_minhash_signature_udf()(_norm_ws_expr()).alias("v")
     )
     matches = F.aggregate(
-        F.zip_with("sl", "sr", lambda x, y: F.when(x == y, 1).otherwise(0)),
+        F.zip_with("l", "r", lambda x, y: F.when(x == y, 1).otherwise(0)),
         F.lit(0), lambda acc, x: acc + x,
     )
-    return j.select(
+    return _attach_ends(minhash_lsh_pairs(df), sigs).select(
         "left_id", "right_id",
         (matches.cast("double") / F.lit(float(NUM_PERM))).alias("jaccard_est"),
     )
@@ -467,27 +453,8 @@ def delta_ngram_jaccard_pairs(
     restricted to new-endpoint pairs == this, away from cap boundaries
     (same caveat as the other deltas).
     """
-    cand = delta_minhash_pairs(old_keys, new_docs)
-    texts = (
-        old_docs.select(F.col("doc_id").alias("id"), F.col("text").alias("txt"))
-        .unionByName(
-            new_docs.select(F.col("doc_id").alias("id"), F.col("text").alias("txt"))
-        )
-    )
-    j = (
-        cand.join(
-            texts.withColumnRenamed("id", "left_id").withColumnRenamed("txt", "lt"),
-            "left_id",
-        )
-        .join(
-            texts.withColumnRenamed("id", "right_id").withColumnRenamed("txt", "rt"),
-            "right_id",
-        )
-        .withColumn("jaccard", F.round(_ngram_jaccard_udf(F.col("lt"), F.col("rt")), 4))
-    )
-    return j.where(F.col("jaccard") >= threshold).select(
-        "left_id", "right_id", "jaccard"
-    )
+    docs = old_docs.select("doc_id", "text").unionByName(new_docs.select("doc_id", "text"))
+    return _jaccard_verify(delta_minhash_pairs(old_keys, new_docs), docs, threshold)
 
 
 def embedding_bucket_keys(df: DataFrame, dim: int) -> DataFrame:

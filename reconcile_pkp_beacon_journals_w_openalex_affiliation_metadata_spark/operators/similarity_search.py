@@ -197,12 +197,22 @@ def build_ivf_index(
         centroids = refine_ivf_centroids(
             vectors, centroids, iters=refine_iters, assign_decimals=assign_decimals
         )
-    pick1 = _nearest_cells_udf(centroids, 1, decimals=assign_decimals)
     # assignment is the full-corpus Arrow pass (and downstream ivf_topk
     # scores on this partitioning via a broadcast probe join): spread a
     # one-task fixture scan across the cores first
-    assigned = spread(vectors).withColumn("cell", pick1(F.col("embedding"))[0])
-    return assigned, centroids
+    return _assign_cells(spread(vectors), centroids, assign_decimals), centroids
+
+
+def _assign_cells(
+    vectors: DataFrame, centroids: list[tuple[int, list[float]]], assign_decimals: int
+) -> DataFrame:
+    """``vectors`` with the id of its nearest centroid as ``cell``. The
+    picker always returns a cell; the coalesce only declares ``cell``
+    non-null, so the inferred ``isnotnull(cell)`` of a join on it is
+    dropped instead of being pushed below an input repartition, where it
+    would run the picker a second time."""
+    pick1 = _nearest_cells_udf(centroids, 1, decimals=assign_decimals)
+    return vectors.withColumn("cell", F.coalesce(pick1(F.col("embedding"))[0], F.lit(-1)))
 
 
 def ivf_insert(
@@ -223,10 +233,9 @@ def ivf_insert(
     distribution drifts (cell-size skew in ``assigned.groupBy('cell')`` is
     the canary).
     """
-    pick1 = _nearest_cells_udf(centroids, 1, decimals=assign_decimals)
     # ids are unique in the index; no distinct needed for anti-join
     fresh = new_vectors.join(assigned.select("vec_id"), "vec_id", "left_anti")
-    newly = fresh.withColumn("cell", pick1(F.col("embedding"))[0])
+    newly = _assign_cells(fresh, centroids, assign_decimals)
     return assigned.unionByName(newly.select(*assigned.columns))
 
 

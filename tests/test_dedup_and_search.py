@@ -3,7 +3,12 @@ multimodal span plumbing."""
 
 from __future__ import annotations
 
+import os
+import sys
+from collections import Counter
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators import (
@@ -715,3 +720,75 @@ def test_ngram_contamination_flags_and_clean_anti_join(spark):
         for r in ngram_contamination(train, bench2, k=5).collect()
     }
     assert got2[1] == (1, 899)
+
+
+def _udf_evals(node, out: Counter) -> Counter:
+    """Per Python UDF name, the eval nodes of a physical plan that run it.
+    A reused exchange is a leaf: what runs below it is counted once."""
+    if node.getClass().getSimpleName() in ("ArrowEvalPythonExec", "BatchEvalPythonExec"):
+        udfs = node.udfs()
+        for i in range(udfs.size()):
+            out[udfs.apply(i).name()] += 1
+    if node.getClass().getSimpleName().endswith("QueryStageExec"):
+        _udf_evals(node.plan(), out)
+    children = node.children()
+    for i in range(children.size()):
+        _udf_evals(children.apply(i), out)
+    return out
+
+
+# Per dedup/IVF query, the Python UDF evaluations its plan holds under
+# sort-merge joins: one per input branch. x11-x13 band or hash their old
+# and new documents in separate branches, x14's two `_udf`s are the bands
+# and the signatures, x9/x15 pick cells and take norms for the corpus
+# (x15: old and new) and for the queries.
+_ONE_EVAL_PER_BRANCH = {
+    "x2_minhash_lsh_pairs": {"_udf": 1},
+    "x11_delta_minhash_pairs": {"_udf": 2},
+    "x12_delta_simhash_pairs": {"simhash_udf": 2},
+    "x13_delta_ngram_jaccard": {"_udf": 2, "_ngram_jaccard_udf": 1},
+    "x14_minhash_jaccard_estimate": {"_udf": 2},
+    "t8_ngram_jaccard_dedup": {"_udf": 1, "_ngram_jaccard_udf": 1},
+    "simhash_near_pairs": {"simhash_udf": 1},
+    "x9_ann_ivf_topk": {"pick": 2, "seq_norm_udf": 2, "seq_dot_udf": 1},
+    "x15_ivf_insert_topk": {"pick": 3, "seq_norm_udf": 3, "seq_dot_udf": 1},
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ONE_EVAL_PER_BRANCH))
+def test_dedup_query_leaves_no_cache_and_runs_each_udf_once(spark, name):
+    """After collect(), a dedup or IVF query leaves no persisted RDD, its
+    final plan holds no isnotnull filter over a UDF output (an inferred
+    join-key filter pushed below spread()'s repartition runs the UDF a
+    second time), and with broadcast joins off every UDF runs once per
+    input branch: both sides of a join share one exchange."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
+    import __spark_entry__ as entry_mod
+
+    def query():
+        if name == "simhash_near_pairs":
+            return dedup.simhash_near_pairs(entry_mod._t(spark, entry_mod.SF_DEFAULT, "documents"))
+        return entry_mod.queries()[name](spark, entry_mod.SF_DEFAULT)
+
+    def final_plan(df):
+        plan = df._jdf.queryExecution().executedPlan()
+        return plan.executedPlan() if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec" else plan
+
+    sc = spark.sparkContext
+    cached = {str(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+    df = query()
+    df.collect()
+    assert {str(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()} == cached
+    assert "isnotnull(pythonUDF" not in final_plan(df).toString()
+
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        df = query()
+        df.collect()
+        plan = final_plan(df)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    assert "isnotnull(pythonUDF" not in plan.toString()
+    assert _udf_evals(plan, Counter()) == _ONE_EVAL_PER_BRANCH[name]

@@ -33,7 +33,10 @@ def oracle_db():
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, oracle_db, name):
     assert name in ORACLES, f"{name} has no oracle: nothing checks its values"
-    # operator-internal persists of the previous query are not this one's
+    # no dedup operator caches anything; what a previous query can still
+    # leave is reconcile()'s persists (a11), released here, and connected
+    # components' localCheckpoint of its input (j5, j6, t12, t13, t17),
+    # which is no catalog cache and stays
     spark.catalog.clearCache()
     sdf = QUERIES[name](spark, entry_mod.SF_DEFAULT)
     scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]

@@ -3,7 +3,7 @@ and the job's committed tables against ``plans.reconcile.reconcile``.
 
 ``python tests/test_reconcile_job.py`` rewrites the golden plan files under
 ``tests/golden/`` from the current tree; do that only for a change that
-means to alter ``reconcile()``'s plan or persists.
+means to alter ``reconcile()``'s plan or persists, or x2's MinHash plan.
 """
 
 from __future__ import annotations
@@ -86,9 +86,9 @@ def _mask(plan: str) -> str:
     return plan.replace(entry_mod.SF_DEFAULT, "<sf>")
 
 
-def _x1_plan(spark) -> str:
-    """x1's formatted physical plan (x1 is ``reconcile`` up to ``scored``)."""
-    df = entry_mod.queries()["x1_reconcile_flagship"](spark, entry_mod.SF_DEFAULT)
+def _query_plan(spark, name: str) -> str:
+    """A registry query's formatted physical plan, before it runs."""
+    df = entry_mod.queries()[name](spark, entry_mod.SF_DEFAULT)
     return _mask(
         spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
     )
@@ -131,7 +131,8 @@ def _synth_docs(spark, n_journals: int):
 
 
 def _read_golden(name: str) -> str:
-    with open(os.path.join(GOLDEN, name)) as f:
+    # newline="": x2's plan prints its whitespace regex with a literal \r
+    with open(os.path.join(GOLDEN, name), newline="") as f:
         return f.read()
 
 
@@ -159,8 +160,16 @@ def test_job_tables_equal_reconcile(spark, tmp_path):
     res.unpersist()
 
     spark.catalog.clearCache()
-    assert _x1_plan(spark) == _read_golden("x1_plan.txt")
+    # x1 is reconcile() up to scored
+    assert _query_plan(spark, "x1_reconcile_flagship") == _read_golden("x1_plan.txt")
     assert _reconcile_cache_report(spark, docs) == _read_golden("reconcile_persisted_plans.txt")
+
+
+def test_x2_plan_matches_golden(spark):
+    """x2 is ``dedup.minhash_lsh_pairs``, the path the ``near_dup`` benchmark
+    times: its plan stays the window-capped band self-join (both sides one
+    band exchange, which AQE reuses at runtime), pinned to the golden file."""
+    assert _query_plan(spark, "x2_minhash_lsh_pairs") == _read_golden("x2_plan.txt")
 
 
 def test_fold_scores_under_the_committed_runs_cap_and_calibration(spark, tmp_path):
@@ -241,6 +250,8 @@ if __name__ == "__main__":
     session = get_spark(app_name="golden", cores=4, shuffle_partitions=8)
     os.makedirs(GOLDEN, exist_ok=True)
     with open(os.path.join(GOLDEN, "x1_plan.txt"), "w") as f:
-        f.write(_x1_plan(session))
+        f.write(_query_plan(session, "x1_reconcile_flagship"))
+    with open(os.path.join(GOLDEN, "x2_plan.txt"), "w", newline="") as f:
+        f.write(_query_plan(session, "x2_minhash_lsh_pairs"))
     with open(os.path.join(GOLDEN, "reconcile_persisted_plans.txt"), "w") as f:
         f.write(_reconcile_cache_report(session, _synth_docs(session, 300)))

@@ -36,22 +36,35 @@ SHOW = [
     "f20_html_extract",        # expect: one ArrowEvalPython + one merge shuffle
     "x8_block_skew_profile",   # expect: one agg pair over the keys, no join
     "x9_ann_ivf_topk",         # expect: closure-matrix ArrowEvalPython pickers,
+                               # one per input (corpus, queries) and no
+                               # isnotnull filter over a picker output;
                                # one hash join on cell id, window top-k
     "x10_delta_candidate_pairs",  # expect: two key joins (new x all, old x
                                # new) + one dedup shuffle; no old x old join
-    "x11_delta_minhash_pairs", # expect: no old x old band self-join (the
-                               # query bands both sides inline; production
-                               # reads the old bands from a committed table)
-    "x12_delta_simhash_pairs",  # expect: new side's simhash ArrowEvalPython
-                               # computed once (persisted blocks), per-block
-                               # joins all new x all; no old x old
+    "x11_delta_minhash_pairs", # expect: x2's band join over the _new-tagged
+                               # old + new union, left side filtered to new
+                               # rows above the cap Window; no InMemory
+                               # scan — at runtime AQE reuses the one band
+                               # exchange (the query bands the old side
+                               # inline; production reads a committed table)
+    "x12_delta_simhash_pairs",  # expect: one bk join new x new + one new x
+                               # old, no old x old, no InMemory scan and no
+                               # isnotnull filter over the simhash UDF — at
+                               # runtime the three new-side reads share one
+                               # exchange
     "x13_delta_ngram_jaccard",  # expect: the x11 delta-candidate shape +
                                # two text joins + ONE verify ArrowEvalPython
                                # over candidate rows only
+    "x14_minhash_jaccard_estimate",  # expect: x2's candidate shape + two
+                               # signature joins over one signature
+                               # ArrowEvalPython (AQE reuses its exchange at
+                               # runtime); no InMemory scan
     "t11_sequence_packing_slices",  # expect: one Window (stratum sum) +
                                # Generate (explode) — all codegen, no UDF
     "x15_ivf_insert_topk",     # expect: union of old assignments + the new
-                               # batch's map-only picker; one cell hash join
+                               # batch's map-only picker, each picker once
+                               # with no isnotnull filter over its output;
+                               # one cell hash join
     "x16_delta_embedding_near_dup",  # expect: bucket bits for the new
                                # side only, union with the old keys, one
                                # per-bucket kernel that emits only pairs
@@ -87,13 +100,17 @@ def main():
     spark = get_spark(app_name="explain", cores=4, shuffle_partitions=8)
     qs = entry_mod.queries()
     out = ["# PLANS — physical plans of the headline queries\n"]
-    out.append(f"Generated by tools/explain_plans.py on {sf_dir}.\n")
+    out.append(
+        f"Generated by tools/explain_plans.py on {os.path.basename(sf_dir)}; "
+        "`<sf>` in scan locations stands for that directory.\n"
+    )
     for name in SHOW:
         df = qs[name](spark, sf_dir)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        out.append(f"\n## {name}\n\n```\n{buf.getvalue()}\n```\n")
+        plan = buf.getvalue().replace(sf_dir, "<sf>")
+        out.append(f"\n## {name}\n\n```\n{plan}\n```\n")
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("".join(out))
     print("wrote PLANS.md")
