@@ -79,53 +79,49 @@ def minhash_lsh_pairs(df: DataFrame, max_band_size: int = MAX_BAND_SIZE) -> Data
 
     Oversized band buckets (stop-phrase shingles) are dropped with the same
     cap discipline as blocking.pairs — a degenerate bucket adds quadratic
-    pairs and no signal. The plan is :func:`_band_join`'s."""
-    return _band_join(minhash_band_keys(df), max_band_size)
+    pairs and no signal. One :func:`_band_join` self-join of the capped
+    key rows, each pair once as ``a.id < b.id``."""
+    kept = _capped(minhash_band_keys(df), max_band_size)
+    lo, hi = F.col("a.id"), F.col("b.id")
+    return (
+        _band_join(kept, kept, lo < hi)
+        .select(lo.alias("left_id"), hi.alias("right_id"))
+        .distinct()
+    )
 
 
-def _band_join(keys: DataFrame, max_band_size: int) -> DataFrame:
-    """The band join both MinHash operators run: distinct ``(left_id,
-    right_id)`` pairs, ``left_id < right_id``, of ``(id, band)`` key rows
-    that share a band holding at most ``max_band_size`` rows.
+def _capped(keys: DataFrame, max_band_size: int) -> DataFrame:
+    """``keys``' ``(id, band, ...)`` rows in bands holding at most
+    ``max_band_size`` rows: a count() window over the band partitioning
+    the band join needs anyway.
 
-    Key rows tagged with a boolean ``_new`` column (the delta) pair only
-    when at least one endpoint is new: the left side ``a`` is the new rows,
-    and a pair joins once — new x new as ``a.id < b.id``, new x old in
-    either id order. Ids are assumed unique across old and new; an id present in
-    both never pairs with itself.
-
-    Plan: the band cap is a count() window over the same band
-    partitioning the join needs, and both join sides read the same capped
-    rows — in the delta the ``_new`` filter sits above the window, so both
-    sides still carry ``(id, band, _new)``. AQE therefore reuses the one
-    band exchange, and the banding UDF runs once per document with no
-    cache. The join is hinted sort-merge: the window's sort already
-    orders each partition by band, a broadcast of a corpus-sized side
-    would be wrong at scale, and sort-merge spills where a shuffled-hash
-    build could OOM. Skew: a degenerate band's rows shuffle to and sort on
-    one task before the cap filter drops them, so a band holding a large
-    fraction of the corpus makes that task a spill-bound straggler. Bands
-    under the cap land on one task anyway (the join needs them together),
-    and dropping oversized bands map-side would cost every corpus an extra
-    aggregation pass and broadcast; corpora known to carry mega-bands
-    should filter them upstream."""
-    kept = (
+    Skew: a degenerate band's rows shuffle to and sort on one task before
+    the cap filter drops them, so a band holding a large fraction of the
+    corpus makes that task a spill-bound straggler. Bands under the cap
+    land on one task anyway (the join needs them together), and dropping
+    oversized bands map-side would cost every corpus an extra aggregation
+    pass and broadcast; corpora known to carry mega-bands should filter
+    them upstream."""
+    return (
         keys.withColumn("_n", F.count("*").over(Window.partitionBy("band")))
         .where(F.col("_n") <= max_band_size)
         .drop("_n")
     )
-    tagged = "_new" in keys.columns
-    a = kept.where(F.col("_new")) if tagged else kept
-    a, b = a.alias("a"), kept.alias("b")
-    lo, hi = F.col("a.id"), F.col("b.id")
-    pair = lo < hi
-    if tagged:
-        pair = pair | (~F.col("b._new") & (lo != hi))
-        lo, hi = F.least(lo, hi), F.greatest(lo, hi)
-    return (
-        a.join(b.hint("merge"), (F.col("a.band") == F.col("b.band")) & pair)
-        .select(lo.alias("left_id"), hi.alias("right_id"))
-        .distinct()
+
+
+def _band_join(a: DataFrame, b: DataFrame, pair) -> DataFrame:
+    """The band join both MinHash operators run: ``a`` (aliased ``a``) x
+    ``b`` (aliased ``b``) on equal ``band`` and the ``pair`` condition.
+
+    Both operators pass :func:`_capped` rows on both sides (the delta
+    filters its left side above the window), so AQE reuses the one band
+    exchange and the banding UDF runs once per document with no cache.
+    The join is hinted sort-merge: the window's sort already orders each
+    partition by band, a broadcast of one side could not share the other
+    side's exchange, and sort-merge spills where a shuffled-hash build
+    could OOM."""
+    return a.alias("a").join(
+        b.alias("b").hint("merge"), (F.col("a.band") == F.col("b.band")) & pair
     )
 
 
@@ -142,6 +138,11 @@ def delta_minhash_pairs(old_keys: DataFrame, new_docs: DataFrame) -> DataFrame:
     emitted old x old pairs are retained — the same deliberate
     cap-boundary caveat as pairs.delta_candidate_pairs).
 
+    The left side is the capped union's new rows; a pair joins once —
+    new x new as ``a.id < b.id``, new x old in either id order. Ids are
+    assumed unique across old and new; an id present in both never pairs
+    with itself.
+
     Equivalence (tested): minhash_lsh_pairs(old + new) ==
     minhash_lsh_pairs(old) ∪ delta_minhash_pairs(old_keys, new), away from
     cap boundaries.
@@ -149,7 +150,14 @@ def delta_minhash_pairs(old_keys: DataFrame, new_docs: DataFrame) -> DataFrame:
     keys = old_keys.withColumn("_new", F.lit(False)).unionByName(
         minhash_band_keys(new_docs).withColumn("_new", F.lit(True))
     )
-    return _band_join(keys, MAX_BAND_SIZE)
+    kept = _capped(keys, MAX_BAND_SIZE)
+    a, b = F.col("a.id"), F.col("b.id")
+    pair = (a < b) | (~F.col("b._new") & (a != b))
+    return (
+        _band_join(kept.where(F.col("_new")), kept, pair)
+        .select(F.least(a, b).alias("left_id"), F.greatest(a, b).alias("right_id"))
+        .distinct()
+    )
 
 
 def simhash_codes(df: DataFrame) -> DataFrame:
@@ -191,8 +199,14 @@ def _block_join(a: DataFrame, b: DataFrame, max_hamming: int, self_join: bool) -
     ``a`` and ``b`` that share a block key and lie within ``max_hamming``.
     A ``self_join`` (``a`` is ``b``) joins each pair once, as
     ``a.id < b.id``; otherwise every pair of distinct ids joins. Not yet
-    distinct: a pair agreeing on several blocks comes once per block."""
-    a, b = a.alias("a"), b.alias("b")
+    distinct: a pair agreeing on several blocks comes once per block.
+
+    The join is hinted sort-merge, as :func:`_band_join` is: both sides
+    then read ``a``'s plan through one ``bk`` exchange that AQE reuses,
+    so the simhash UDF behind it runs once per document. A broadcast of
+    one side could not share the other side's exchange and would run the
+    UDF once per side."""
+    a, b = a.alias("a"), b.alias("b").hint("merge")
     lo, hi = F.col("a.id"), F.col("b.id")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
@@ -210,11 +224,9 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     are therefore a complete candidate set for ANY radius (a fixed 4-block
     split is only complete for radius <= 3).
 
-    One self-join over the exploded (id, simhash, bk) rows with no cache:
-    both sides are the same plan, so under a sort-merge join AQE reuses
-    the one bk exchange and the simhash UDF runs once per document (a
-    broadcast of one side cannot share the other's shuffle, so there it
-    runs twice)."""
+    One :func:`_block_join` self-join over the exploded (id, simhash, bk)
+    rows with no cache: both sides are the same plan, so AQE reuses the
+    one bk exchange and the simhash UDF runs once per document."""
     keyed = simhash_codes(df).select("id", "simhash", _simhash_block_key(max_hamming))
     return _block_join(keyed, keyed, max_hamming, self_join=True).distinct()
 
@@ -228,9 +240,11 @@ def delta_simhash_pairs(
     the corpus hashes once; each new batch runs the simhash UDF over its
     own docs only, and the full pass's block join runs new x new and
     new x old — never old x old. The three reads of the new batch's keyed
-    rows are one plan, so they share one exchange without a cache.
-    Completes the incremental-dedup family alongside
-    ``delta_minhash_pairs``.
+    rows are one plan under sort-merge joins, so they share one exchange
+    without a cache and the batch's simhash UDF runs once per document.
+    The price is that the committed codes shuffle by block key on every
+    batch, as they do in a full pass. Completes the incremental-dedup
+    family alongside ``delta_minhash_pairs``.
     """
     bk = _simhash_block_key(max_hamming)
     new = simhash_codes(new_docs).select("id", "simhash", bk)
@@ -285,7 +299,9 @@ def _attach_ends(cand: DataFrame, per_doc: DataFrame) -> DataFrame:
     """``cand``'s ``(left_id, right_id)`` rows with ``per_doc``'s ``v``
     (one ``(id, v)`` row per document) attached to each endpoint as ``l``
     and ``r``. Both joins read the one ``per_doc`` plan, so AQE reuses its
-    exchange and a per-document UDF behind it runs once."""
+    exchange when both joins broadcast it or both shuffle it. Only a
+    broadcast of the candidate side streams ``per_doc`` twice; a caller
+    whose ``per_doc`` runs a UDF hints it sort-merge to rule that out."""
     return cand.join(
         per_doc.select(F.col("id").alias("left_id"), F.col("v").alias("l")), "left_id"
     ).join(per_doc.select(F.col("id").alias("right_id"), F.col("v").alias("r")), "right_id")
@@ -322,9 +338,12 @@ def minhash_jaccard_estimates(df: DataFrame) -> DataFrame:
     """
     from ..functions.udfs import make_minhash_signature_udf
 
+    # hinted sort-merge, so both endpoint joins read the signatures
+    # through one reused exchange whichever side the planner would
+    # otherwise broadcast: the signature UDF runs once per document
     sigs = spread(df).select(
         F.col("doc_id").alias("id"), make_minhash_signature_udf()(_norm_ws_expr()).alias("v")
-    )
+    ).hint("merge")
     matches = F.aggregate(
         F.zip_with("l", "r", lambda x, y: F.when(x == y, 1).otherwise(0)),
         F.lit(0), lambda acc, x: acc + x,

@@ -17,6 +17,10 @@ from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operato
     similarity_search as sim,
 )
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import __spark_entry__ as entry_mod  # noqa: E402
+
 
 def _texts(spark):
     base = (
@@ -737,11 +741,11 @@ def _udf_evals(node, out: Counter) -> Counter:
     return out
 
 
-# Per dedup/IVF query, the Python UDF evaluations its plan holds under
-# sort-merge joins: one per input branch. x11-x13 band or hash their old
-# and new documents in separate branches, x14's two `_udf`s are the bands
-# and the signatures, x9/x15 pick cells and take norms for the corpus
-# (x15: old and new) and for the queries.
+# Per dedup/IVF query, the Python UDF evaluations its plan holds: one per
+# input branch. x11-x13 band or hash their old and new documents in
+# separate branches, x14's two `_udf`s are the bands and the signatures,
+# x9/x15 pick cells and take norms for the corpus (x15: old and new) and
+# for the queries.
 _ONE_EVAL_PER_BRANCH = {
     "x2_minhash_lsh_pairs": {"_udf": 1},
     "x11_delta_minhash_pairs": {"_udf": 2},
@@ -760,11 +764,10 @@ def test_dedup_query_leaves_no_cache_and_runs_each_udf_once(spark, name):
     """After collect(), a dedup or IVF query leaves no persisted RDD, its
     final plan holds no isnotnull filter over a UDF output (an inferred
     join-key filter pushed below spread()'s repartition runs the UDF a
-    second time), and with broadcast joins off every UDF runs once per
-    input branch: both sides of a join share one exchange."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, root)
-    import __spark_entry__ as entry_mod
+    second time), and every UDF runs once per input branch: the joins
+    share one exchange per input. Checked under the session's broadcast
+    threshold and with broadcast joins off, so neither join strategy can
+    run a UDF once per join side."""
 
     def query():
         if name == "simhash_near_pairs":
@@ -777,18 +780,15 @@ def test_dedup_query_leaves_no_cache_and_runs_each_udf_once(spark, name):
 
     sc = spark.sparkContext
     cached = {str(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
-    df = query()
-    df.collect()
-    assert {str(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()} == cached
-    assert "isnotnull(pythonUDF" not in final_plan(df).toString()
-
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = query()
-        df.collect()
-        plan = final_plan(df)
-    finally:
+    session_threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    for threshold in (session_threshold, "-1"):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-    assert "isnotnull(pythonUDF" not in plan.toString()
-    assert _udf_evals(plan, Counter()) == _ONE_EVAL_PER_BRANCH[name]
+        try:
+            df = query()
+            df.collect()
+            plan = final_plan(df)
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", session_threshold)
+        assert {str(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()} == cached
+        assert "isnotnull(pythonUDF" not in plan.toString(), threshold
+        assert _udf_evals(plan, Counter()) == _ONE_EVAL_PER_BRANCH[name], threshold

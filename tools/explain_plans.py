@@ -47,18 +47,21 @@ SHOW = [
                                # scan — at runtime AQE reuses the one band
                                # exchange (the query bands the old side
                                # inline; production reads a committed table)
-    "x12_delta_simhash_pairs",  # expect: one bk join new x new + one new x
-                               # old, no old x old, no InMemory scan and no
-                               # isnotnull filter over the simhash UDF — at
-                               # runtime the three new-side reads share one
-                               # exchange
+    "x12_delta_simhash_pairs",  # expect: two hinted SortMergeJoins on bk,
+                               # new x new + new x old, no old x old, no
+                               # InMemory scan and no isnotnull filter over
+                               # the simhash UDF; this initial plan shows
+                               # the new side's UDF under each of its three
+                               # exchanges, and at runtime AQE reuses one
+                               # for all three
     "x13_delta_ngram_jaccard",  # expect: the x11 delta-candidate shape +
                                # two text joins + ONE verify ArrowEvalPython
                                # over candidate rows only
     "x14_minhash_jaccard_estimate",  # expect: x2's candidate shape + two
-                               # signature joins over one signature
-                               # ArrowEvalPython (AQE reuses its exchange at
-                               # runtime); no InMemory scan
+                               # hinted SortMergeJoins attaching the
+                               # signatures, whose exchanges AQE reuses at
+                               # runtime (one signature ArrowEvalPython);
+                               # no InMemory scan
     "t11_sequence_packing_slices",  # expect: one Window (stratum sum) +
                                # Generate (explode) — all codegen, no UDF
     "x15_ivf_insert_topk",     # expect: union of old assignments + the new
