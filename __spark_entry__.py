@@ -2560,16 +2560,14 @@ def a8(spark, sf):
        FROM sids ORDER BY doc_id""",
 )
 def x5(spark, sf):
-    # media-span plumbing: schema/partitioning/batch shape are real; decode
-    # itself is stubbed (operators.multimodal) since no image libs exist here
-    docs = wrap_documents_as_spans(_t(spark, sf, "documents"))
-    media = docs.select(
-        "doc_id",
-        F.explode(F.filter("spans", lambda s: s["kind"] == F.lit("media"))).alias("m"),
+    # the media-span projection that feeds multimodal.extract_media_text's
+    # mapInPandas decode (a deterministic fake_decode stands in for the VLM)
+    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators.multimodal import (
+        media_spans,
     )
-    return media.select(
-        "doc_id", F.col("m.media_ref").alias("media_ref"), F.col("m.offset").alias("offset")
-    ).orderBy("doc_id", "offset")
+
+    docs = wrap_documents_as_spans(_t(spark, sf, "documents"))
+    return media_spans(docs).orderBy("doc_id", "offset")
 
 
 def _x8_oracle() -> str:

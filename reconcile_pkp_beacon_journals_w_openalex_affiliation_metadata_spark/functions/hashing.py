@@ -225,10 +225,6 @@ def simhash64(tokens: list[str]) -> int:
     return out - (1 << 64) if out >= (1 << 63) else out
 
 
-def hamming64(x: int, y: int) -> int:
-    return bin((x ^ y) & ((1 << 64) - 1)).count("1")
-
-
 def jaccard(a: set[str], b: set[str]) -> float:
     if not a and not b:
         return 1.0

@@ -2,30 +2,21 @@
 
 The reference keeps 12 atomic counters per stage and logs them periodically
 (main.rs:86-144,622-641; Python tallies parse_record_data_from_files.py:
-337-345). Spark equivalents used here:
+337-345). Spark equivalents:
 
-- ``observe()``: zero-cost aggregates piggybacked on an action (global
-  counters, the audit-sum discipline of main.rs: filter-reason buckets must
-  sum to lines read),
 - ``partition_metrics``: per-partition row counts via
   ``spark_partition_id()`` groupBy — one extra cheap agg, appended to the
-  lineage table so skew is visible per stage per partition.
+  lineage table so skew is visible per stage per partition;
+- ``match_rate_metrics``: per-key-family match rates of the scored pairs.
+
+The audit-sum counters (filter-reason buckets must sum to lines read) ride
+on an action as an ``Observation`` in ``corpus_filter.filter_works``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def observe_counts(df: DataFrame, name: str, conds: dict[str, Column]) -> tuple[DataFrame, Observation]:
-    """Attach an Observation computing count(*) plus one conditional count per
-    bucket. Read ``obs.get`` AFTER an action on the returned frame."""
-    obs = Observation(name)
-    aggs = [F.count(F.lit(1)).alias("rows_total")]
-    for key, cond in conds.items():
-        aggs.append(F.sum(cond.cast("long")).alias(key))
-    return df.observe(obs, *aggs), obs
 
 
 def partition_metrics(df: DataFrame, run_id: str, stage: str) -> DataFrame:

@@ -5,8 +5,8 @@ The reference extracts text from page images with a VLM
 (retrieve_pkp_work_url_download_pdf.py:52-64). In our engine media are
 opaque spans (kind='media', media_ref) inside the ``documents`` table; this
 module provides the Spark-side plumbing — schema, batching, partitioning —
-with the actual decoder stubbed (no image/audio libraries in this
-container; a deterministic fake stands in so the pipeline is testable).
+around ``fake_decode``, a deterministic stand-in for the VLM/OCR call that
+keeps the pipeline testable without image libraries.
 
 All processing is ``mapInPandas`` over Arrow batches: one batch in, one
 batch of (doc_id, media_ref, extracted_text, n_bytes) out — exactly the
@@ -32,14 +32,6 @@ EXTRACT_SCHEMA = T.StructType(
         T.StructField("n_bytes", T.LongType(), True),
     ]
 )
-
-
-def decode_media(payload: bytes) -> str:
-    """REAL DECODER STUB. In production this calls the VLM/OCR endpoint
-    (vlm_text_extractor.py:402-549). No imaging libs exist in this container."""
-    raise NotImplementedError(
-        "media decoding requires an inference endpoint; use fake_decode in tests"
-    )
 
 
 def fake_decode(media_ref: str) -> str:

@@ -97,17 +97,6 @@ LABELED_PAIRS = T.StructType(
     ]
 )
 
-# --- lineage / metrics table (north_rule) -------------------------------------
-LINEAGE = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("metric", T.StringType(), False),
-        T.StructField("value", T.DoubleType(), False),
-    ]
-)
-
 
 def assert_schema(df: DataFrame, required: T.StructType | list[str], name: str = "df") -> DataFrame:
     """Required-column validation, the reference's runtime schema check

@@ -121,13 +121,6 @@ def test_multimodal_attach_preserves_span_sequence(spark, corpus_dfs):
     assert texts and all(t.startswith("extracted text ") for t in texts)
 
 
-def test_decode_media_is_stubbed():
-    import pytest
-
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_media(b"\x89PNG")
-
-
 def test_minhash_lsh_band_cap_bounds_degenerate_corpus(spark):
     """A stop-phrase corpus (every doc identical) makes every band
     degenerate; the cap must drop those bands instead of emitting the
