@@ -3,8 +3,10 @@ multimodal span plumbing."""
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
+import time
 from collections import Counter
 
 import numpy as np
@@ -35,6 +37,41 @@ def _texts(spark):
         ("d5", base),  # exact dup of d1
     ]
     return spark.createDataFrame(rows, "doc_id string, text string")
+
+
+def _persistent_rdds(spark) -> set[str]:
+    return {str(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _settled_persistent_rdds(spark, polls: int = 50) -> set[str]:
+    """The session's persisted RDD ids once every unreachable one is gone.
+
+    A localCheckpoint() frame that an earlier test dropped stays in
+    getPersistentRDDs() until the JVM collects it and the ContextCleaner
+    unpersists it, which can happen while the next query runs. Two things
+    keep such a frame reachable after its test ends: a finished query's
+    SparkListenerSQLExecutionEnd holds its QueryExecution until the listener
+    bus delivers it, and py4j's finalizer thread releases the JVM object
+    behind a dead Python handle only after a Python GC, up to a second
+    later. So the bus is drained, then a Python GC, an empty finalizer queue
+    and a JVM GC are repeated until two reads of the set agree. An equality
+    check against the result then sees only what the code under test
+    persisted or freed."""
+    sc = spark.sparkContext
+    client = sc._gateway._gateway_client
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    last = None
+    for _ in range(polls):
+        gc.collect()
+        while getattr(client, "finalizer_deque", None):
+            time.sleep(0.05)
+        sc._jvm.System.gc()
+        time.sleep(0.2)
+        now = _persistent_rdds(spark)
+        if now == last:
+            return now
+        last = now
+    raise AssertionError(f"persisted RDDs did not settle: {sorted(last)}")
 
 
 def test_exact_dup_groups(spark):
@@ -193,7 +230,7 @@ def test_embedding_near_dup_plan_is_one_kernel_pass(spark):
     rows += [(1000 + i, (np.array(rows[i][1]) * 1.001).tolist()) for i in range(20)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     sc = spark.sparkContext
-    cached = {str(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+    cached = _settled_persistent_rdds(spark)
 
     pairs = dedup.embedding_near_dup_pairs(emb, dim=8)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
@@ -211,7 +248,7 @@ def test_embedding_near_dup_plan_is_one_kernel_pass(spark):
     old_keys = dedup.embedding_bucket_keys(emb.where("vec_id < 1000"), dim=8)
     delta = dedup.delta_embedding_near_dup(old_keys, emb.where("vec_id >= 1000"), dim=8)
     assert len(delta.collect()) >= 20
-    assert {str(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()} == cached
+    assert _persistent_rdds(spark) == cached
 
 
 def test_tokenless_docs_emit_no_bands(spark):
@@ -361,8 +398,7 @@ def test_simhash_near_pairs_is_one_join_with_no_cache_left(spark, corpus_dfs):
         "doc_id", F.concat_ws(" ", F.transform("spans", lambda s: s["text"])).alias("text")
     )
     codes = [(r["id"], r["simhash"] & (2**64 - 1)) for r in dedup.simhash_codes(docs).collect()]
-    sc = spark.sparkContext
-    cached = {str(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+    cached = _settled_persistent_rdds(spark)
     sizes = {}
     for radius in (0, 3, 6, 10):
         want = set()
@@ -378,7 +414,7 @@ def test_simhash_near_pairs_is_one_join_with_no_cache_left(spark, corpus_dfs):
         assert got == want, radius
         sizes[radius] = len(want)
     assert 0 < sizes[3] < sizes[10]  # the radii select different pair sets
-    assert {str(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()} == cached
+    assert _persistent_rdds(spark) == cached
 
 
 def test_ivf_lloyd_refinement_recovers_probe_recall(spark):
@@ -771,8 +807,7 @@ def test_dedup_query_leaves_no_cache_and_runs_each_udf_once(spark, name):
         plan = df._jdf.queryExecution().executedPlan()
         return plan.executedPlan() if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec" else plan
 
-    sc = spark.sparkContext
-    cached = {str(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+    cached = _settled_persistent_rdds(spark)
     session_threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     for threshold in (session_threshold, "-1"):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
@@ -782,6 +817,6 @@ def test_dedup_query_leaves_no_cache_and_runs_each_udf_once(spark, name):
             plan = final_plan(df)
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", session_threshold)
-        assert {str(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()} == cached
+        assert _persistent_rdds(spark) == cached
         assert "isnotnull(pythonUDF" not in plan.toString(), threshold
         assert _udf_evals(plan, Counter()) == _ONE_EVAL_PER_BRANCH[name], threshold
