@@ -2853,7 +2853,7 @@ ORDER BY left_id, right_id
 """,
 )
 def x11(spark, sf):
-    # incremental near-dup: join = new x all, never old x old
+    # incremental near-dup: pairs = new x all, never old x old
     # (dedup.delta_minhash_pairs) — the crawl-batch dedup shape at 100 TB.
     # (Here the old bands are built inline for the oracle comparison; in
     # production they come from a committed minhash_band_keys table, so
@@ -2894,7 +2894,7 @@ ORDER BY left_id, right_id
 def x12(spark, sf):
     # incremental simhash near-dup: the corpus is hashed ONCE (committed
     # simhash_codes), each batch hashes only its own docs and the per-block
-    # joins are new x all — never old x old (dedup.delta_simhash_pairs).
+    # pairs are new x all — never old x old (dedup.delta_simhash_pairs).
     # Completes driver-checkability for the third incremental dedup path
     # (minhash=x11, candidate-join=x10, simhash=here).
     from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators.dedup import (

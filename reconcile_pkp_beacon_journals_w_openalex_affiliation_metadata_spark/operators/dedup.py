@@ -1,18 +1,21 @@
 """Deduplication operator family for the training-data pipeline.
 
-Five strategies over a (id, text) corpus — each returns a DataFrame of
-duplicate groups or near-dup pairs. At 100 TB the shape that matters is:
-keys computed locally (map-only), ONE shuffle per strategy (the groupBy,
-band self-join or bucket grouping), hot band keys capped.
+Four near-dup strategies over a (doc_id, text) corpus (the embedding one
+over (vec_id, embedding)) — each returns a DataFrame of near-dup pairs.
+At 100 TB the shape that matters is: keys computed locally (map-only),
+ONE shuffle per strategy (the bucket grouping), hot band keys capped.
 
-- exact:          hash-groupBy on the full normalized text
-- minhash_lsh:    shingle -> minhash -> band -> bucket self-join
-- simhash:        64-bit simhash, pairs within hamming radius via 4-way
-                  block rotation (Manku et al., WWW'07 table approach)
+- minhash_lsh:    shingle -> minhash -> band -> per-band pair expansion
+- simhash:        64-bit simhash, pairs within hamming radius via the
+                  pigeonhole block split (Manku et al., WWW'07)
 - ngram_jaccard:  character n-gram Jaccard verify on LSH candidates
 - embedding:      cosine near-dup over an embedding column: hyperplane
                   sign bits -> one per-bucket kernel
                   (``similarity_search.hyperplane_bucket_pairs``)
+
+MinHash and SimHash share one equal-key pair step, :func:`_key_pairs`:
+group each bucket's members into lists and expand the pairs in the JVM,
+with no self-join.
 """
 
 from __future__ import annotations
@@ -30,8 +33,8 @@ from .similarity_search import hyperplane_bucket_pairs
 # RE2-exact ASCII whitespace run ('\s' under RE2 is exactly [\t\n\f\r ]).
 # Spelled out so Spark's Java regex engine matches the DuckDB oracles
 # byte-for-byte (Java '\s' would additionally collapse \x0b); ONE shared
-# definition so bands, signatures, and exact-dup keys can never
-# desynchronize on normalization.
+# definition so bands and signatures can never desynchronize on
+# normalization.
 _WS_RUN = "[ \t\n\f\r]+"
 
 # MinHash LSH band buckets above this size are dropped (stop-phrase shingles)
@@ -43,20 +46,6 @@ def _norm_ws_expr():
     normalization every dedup strategy keys on (and the oracles' ``norm``
     CTE replicates)."""
     return F.regexp_replace(F.lower(F.trim(F.col("text"))), _WS_RUN, " ")
-
-
-def exact_dup_groups(df: DataFrame) -> DataFrame:
-    """Groups of exact duplicates on normalized text; keeper = min id.
-
-    Every text operator in this module reads a (doc_id, text) frame."""
-    key = F.md5(_norm_ws_expr())
-    return (
-        df.select(F.col("doc_id").alias("id"), key.alias("content_key"))
-        .groupBy("content_key")
-        .agg(F.min("id").alias("keeper"), F.count("*").alias("n_copies"),
-             F.collect_list("id").alias("members"))
-        .where(F.col("n_copies") > 1)
-    )
 
 
 def minhash_band_keys(df: DataFrame) -> DataFrame:
@@ -75,53 +64,59 @@ def minhash_band_keys(df: DataFrame) -> DataFrame:
 
 
 def minhash_lsh_pairs(df: DataFrame, max_band_size: int = MAX_BAND_SIZE) -> DataFrame:
-    """Near-dup candidate pairs via MinHash LSH.
+    """Near-dup candidate pairs via MinHash LSH, each pair once as
+    ``left_id < right_id``.
 
     Oversized band buckets (stop-phrase shingles) are dropped with the same
     cap discipline as blocking.pairs — a degenerate bucket adds quadratic
-    pairs and no signal. One :func:`_band_join` self-join of the capped
-    key rows, each pair once as ``a.id < b.id``."""
-    kept = _capped(minhash_band_keys(df), max_band_size)
-    lo, hi = F.col("a.id"), F.col("b.id")
+    pairs and no signal. The capped band rows then pair by
+    :func:`_key_pairs`, every row counted as new."""
+    return _band_pairs(minhash_band_keys(df).withColumn("_new", F.lit(True)), max_band_size)
+
+
+def _band_pairs(keys: DataFrame, max_band_size: int) -> DataFrame:
+    """Distinct ``(left_id, right_id)`` pairs of distinct ids sharing a band
+    of ``keys``' ``(id, band, _new)`` rows, at least one of them new, over
+    bands holding at most ``max_band_size`` rows.
+
+    The cap is a count() window over the band partitioning, which the
+    grouping in :func:`_key_pairs` reuses, so an over-cap band is dropped
+    before any list of its ids exists. Skew: a degenerate band's rows
+    still shuffle to and sort on one task before the filter drops them,
+    so a band holding a large fraction of the corpus makes that task a
+    spill-bound straggler; corpora known to carry mega-bands should filter
+    them upstream."""
+    kept = keys.withColumn("_n", F.count("*").over(Window.partitionBy("band"))).where(
+        F.col("_n") <= max_band_size
+    )
+    a, b = F.col("a"), F.col("b")
     return (
-        _band_join(kept, kept, lo < hi)
-        .select(lo.alias("left_id"), hi.alias("right_id"))
+        _key_pairs(kept, "band", F.col("id"), F.col("_new"))
+        .where(a != b)
+        .select(F.least(a, b).alias("left_id"), F.greatest(a, b).alias("right_id"))
         .distinct()
     )
 
 
-def _capped(keys: DataFrame, max_band_size: int) -> DataFrame:
-    """``keys``' ``(id, band, ...)`` rows in bands holding at most
-    ``max_band_size`` rows: a count() window over the band partitioning
-    the band join needs anyway.
+def _key_pairs(rows: DataFrame, key: str, member, new) -> DataFrame:
+    """``(a, b)`` rows, one per pair of ``rows``' ``member`` values that
+    share ``key``, at least one of whose rows is ``new``: the equal-key pair
+    step of every LSH family here. A full pass counts every row as new.
 
-    Skew: a degenerate band's rows shuffle to and sort on one task before
-    the cap filter drops them, so a band holding a large fraction of the
-    corpus makes that task a spill-bound straggler. Bands under the cap
-    land on one task anyway (the join needs them together), and dropping
-    oversized bands map-side would cost every corpus an extra aggregation
-    pass and broadcast; corpora known to carry mega-bands should filter
-    them upstream."""
-    return (
-        keys.withColumn("_n", F.count("*").over(Window.partitionBy("band")))
-        .where(F.col("_n") <= max_band_size)
-        .drop("_n")
+    One aggregation collects each key's new and old members into two lists;
+    each new member then pairs with the new members after it and with every
+    old one, by explodes in the JVM — so a key with no new member expands
+    nothing and old x old never pairs. Each input row feeds one consumer,
+    so a UDF behind ``rows`` runs once per row. A null ``member`` pairs
+    with nothing; equal members do pair, so callers filter ``a != b``."""
+    lists = rows.groupBy(key).agg(
+        F.collect_list(F.when(new, member)).alias("n"),
+        F.collect_list(F.when(~new, member)).alias("o"),
     )
-
-
-def _band_join(a: DataFrame, b: DataFrame, pair) -> DataFrame:
-    """The band join both MinHash operators run: ``a`` (aliased ``a``) x
-    ``b`` (aliased ``b``) on equal ``band`` and the ``pair`` condition.
-
-    Both operators pass :func:`_capped` rows on both sides (the delta
-    filters its left side above the window), so AQE reuses the one band
-    exchange and the banding UDF runs once per document with no cache.
-    The join is hinted sort-merge: the window's sort already orders each
-    partition by band, a broadcast of one side could not share the other
-    side's exchange, and sort-merge spills where a shuffled-hash build
-    could OOM."""
-    return a.alias("a").join(
-        b.alias("b").hint("merge"), (F.col("a.band") == F.col("b.band")) & pair
+    n = F.col("n")
+    later = F.concat(F.slice(n, F.col("i") + 2, F.size(n)), F.col("o"))
+    return lists.select(F.posexplode(n).alias("i", "a"), n, "o").select(
+        "a", F.explode(later).alias("b")
     )
 
 
@@ -129,19 +124,18 @@ def delta_minhash_pairs(old_keys: DataFrame, new_docs: DataFrame) -> DataFrame:
     """Near-dup pairs with at least one endpoint in the NEW batch.
 
     The training-data ingestion shape at 100 TB: dedup each crawl batch
-    against the committed corpus without re-banding or re-self-joining the
-    corpus. ``old_keys`` is the committed ``minhash_band_keys`` output; only
-    the new batch runs the banding UDF, and the full pass's band join runs
-    over the ``_new``-tagged old + new key rows — never old x old. The band
-    cap is measured over the UNION (same drop semantics as a full pass; a
-    band newly pushed over the cap stops producing pairs, but previously
-    emitted old x old pairs are retained — the same deliberate
-    cap-boundary caveat as pairs.delta_candidate_pairs).
+    against the committed corpus without re-banding the corpus.
+    ``old_keys`` is the committed ``minhash_band_keys`` output; only the new
+    batch runs the banding UDF, and the full pass's capped band pairing
+    runs over the ``_new``-tagged old + new key rows — bands with no new
+    row expand nothing, and old x old never pairs. The band cap is measured
+    over the UNION (same drop semantics as a full pass; a band newly pushed
+    over the cap stops producing pairs, but previously emitted old x old
+    pairs are retained — the same deliberate cap-boundary caveat as
+    pairs.delta_candidate_pairs).
 
-    The left side is the capped union's new rows; a pair joins once —
-    new x new as ``a.id < b.id``, new x old in either id order. Ids are
-    assumed unique across old and new; an id present in both never pairs
-    with itself.
+    Ids are assumed unique across old and new; an id present in both never
+    pairs with itself.
 
     Equivalence (tested): minhash_lsh_pairs(old + new) ==
     minhash_lsh_pairs(old) ∪ delta_minhash_pairs(old_keys, new), away from
@@ -150,22 +144,15 @@ def delta_minhash_pairs(old_keys: DataFrame, new_docs: DataFrame) -> DataFrame:
     keys = old_keys.withColumn("_new", F.lit(False)).unionByName(
         minhash_band_keys(new_docs).withColumn("_new", F.lit(True))
     )
-    kept = _capped(keys, MAX_BAND_SIZE)
-    a, b = F.col("a.id"), F.col("b.id")
-    pair = (a < b) | (~F.col("b._new") & (a != b))
-    return (
-        _band_join(kept.where(F.col("_new")), kept, pair)
-        .select(F.least(a, b).alias("left_id"), F.greatest(a, b).alias("right_id"))
-        .distinct()
-    )
+    return _band_pairs(keys, MAX_BAND_SIZE)
 
 
 def simhash_codes(df: DataFrame) -> DataFrame:
     df = spread(df)  # simhash UDF pass: same single-task-scan repair as banding
     # simhash_udf never returns null (empty text hashes to 0); the coalesce
-    # declares the column non-null, so a join's inferred isnotnull(simhash)
-    # is dropped instead of being pushed below spread()'s repartition, where
-    # it would run the UDF a second time
+    # declares the column non-null, so no inferred isnotnull(simhash) filter
+    # can be pushed below spread()'s repartition, where it would run the
+    # UDF a second time
     return df.select(
         F.col("doc_id").alias("id"),
         F.coalesce(simhash_udf(F.lower(F.col("text"))), F.lit(0)).alias("simhash"),
@@ -173,7 +160,7 @@ def simhash_codes(df: DataFrame) -> DataFrame:
 
 
 def _simhash_block_key(max_hamming: int):
-    """The pigeonhole split's block keys (see simhash_near_pairs) as one
+    """The pigeonhole split's block keys (see delta_simhash_pairs) as one
     exploded column ``bk``: one row per block of each code, prefixed with
     the block index so equal bits at different offsets never meet."""
     if not 0 <= max_hamming <= 63:
@@ -193,65 +180,36 @@ def _simhash_block_key(max_hamming: int):
     return F.explode(F.array(*[_block(i) for i in range(n_blocks)])).alias("bk")
 
 
-def _block_join(a: DataFrame, b: DataFrame, max_hamming: int, self_join: bool) -> DataFrame:
-    """The block join both SimHash operators run: ``(left_id, right_id,
-    hamming)``, ``left_id < right_id``, for ``(id, simhash, bk)`` rows of
-    ``a`` and ``b`` that share a block key and lie within ``max_hamming``.
-    A ``self_join`` (``a`` is ``b``) joins each pair once, as
-    ``a.id < b.id``; otherwise every pair of distinct ids joins. Not yet
-    distinct: a pair agreeing on several blocks comes once per block.
-
-    The join is hinted sort-merge, as :func:`_band_join` is: both sides
-    then read ``a``'s plan through one ``bk`` exchange that AQE reuses,
-    so the simhash UDF behind it runs once per document. A broadcast of
-    one side could not share the other side's exchange and would run the
-    UDF once per side."""
-    a, b = a.alias("a"), b.alias("b").hint("merge")
-    lo, hi = F.col("a.id"), F.col("b.id")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(b, (F.col("a.bk") == F.col("b.bk")) & ((lo < hi) if self_join else (lo != hi)))
-        .where(ham <= max_hamming)
-        .select(F.least(lo, hi).alias("left_id"), F.greatest(lo, hi).alias("right_id"),
-                ham.alias("hamming"))
-    )
-
-
-def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Hamming-radius pairs: split the 64-bit code into ``max_hamming + 1``
-    blocks; a pair within the radius has fewer differing bits than blocks, so
-    by pigeonhole it agrees exactly on >= 1 block — block-equality buckets
-    are therefore a complete candidate set for ANY radius (a fixed 4-block
-    split is only complete for radius <= 3).
-
-    One :func:`_block_join` self-join over the exploded (id, simhash, bk)
-    rows with no cache: both sides are the same plan, so AQE reuses the
-    one bk exchange and the simhash UDF runs once per document."""
-    keyed = simhash_codes(df).select("id", "simhash", _simhash_block_key(max_hamming))
-    return _block_join(keyed, keyed, max_hamming, self_join=True).distinct()
-
-
 def delta_simhash_pairs(
     old_codes: DataFrame, new_docs: DataFrame, max_hamming: int = 3
 ) -> DataFrame:
-    """Hamming-radius pairs with >= 1 NEW endpoint.
+    """Hamming-radius pairs ``(left_id, right_id, hamming)``,
+    ``left_id < right_id``, with >= 1 NEW endpoint.
 
     ``old_codes`` is a committed ``simhash_codes`` output (id, simhash):
-    the corpus hashes once; each new batch runs the simhash UDF over its
-    own docs only, and the full pass's block join runs new x new and
-    new x old — never old x old. The three reads of the new batch's keyed
-    rows are one plan under sort-merge joins, so they share one exchange
-    without a cache and the batch's simhash UDF runs once per document.
-    The price is that the committed codes shuffle by block key on every
-    batch, as they do in a full pass. Completes the incremental-dedup
-    family alongside ``delta_minhash_pairs``.
+    the corpus hashes once, and each new batch runs the simhash UDF over
+    its own docs only. Over an empty ``old_codes`` this is the full pass.
+
+    Split the 64-bit code into ``max_hamming + 1`` blocks; a pair within the
+    radius has fewer differing bits than blocks, so by pigeonhole it agrees
+    exactly on >= 1 block — block-equality buckets are therefore a complete
+    candidate set for ANY radius (a fixed 4-block split is only complete
+    for radius <= 3). The ``_new``-tagged old + new block rows pair by
+    :func:`_key_pairs` (new x new and new x old, never old x old) and are
+    then filtered by Hamming distance. Ids are assumed unique across old
+    and new; an id present in both never pairs with itself.
     """
     bk = _simhash_block_key(max_hamming)
-    new = simhash_codes(new_docs).select("id", "simhash", bk)
-    old = old_codes.select("id", "simhash", bk)
+    rows = old_codes.select("id", "simhash", bk, F.lit(False).alias("_new")).unionByName(
+        simhash_codes(new_docs).select("id", "simhash", bk, F.lit(True).alias("_new"))
+    )
+    a, b = F.col("a"), F.col("b")
+    ham = F.bit_count(a.simhash.bitwiseXOR(b.simhash))
     return (
-        _block_join(new, new, max_hamming, self_join=True)
-        .unionByName(_block_join(new, old, max_hamming, self_join=False))
+        _key_pairs(rows, "bk", F.struct("id", "simhash"), F.col("_new"))
+        .where((a.id != b.id) & (ham <= max_hamming))
+        .select(F.least(a.id, b.id).alias("left_id"), F.greatest(a.id, b.id).alias("right_id"),
+                ham.alias("hamming"))
         .distinct()
     )
 

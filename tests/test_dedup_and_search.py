@@ -74,13 +74,11 @@ def _settled_persistent_rdds(spark, polls: int = 50) -> set[str]:
     raise AssertionError(f"persisted RDDs did not settle: {sorted(last)}")
 
 
-def test_exact_dup_groups(spark):
-    got = dedup.exact_dup_groups(_texts(spark)).collect()
-    assert len(got) == 1
-    g = got[0]
-    assert g["keeper"] == "d1"
-    assert g["n_copies"] == 3  # d1, d2 (ws/case-normalized), d5
-    assert sorted(g["members"]) == ["d1", "d2", "d5"]
+def _simhash_pairs(docs, max_hamming, old_docs=None):
+    """``delta_simhash_pairs`` over ``old_docs``' committed codes, or over
+    an empty committed table (the full pass)."""
+    old_codes = dedup.simhash_codes(docs.limit(0) if old_docs is None else old_docs)
+    return dedup.delta_simhash_pairs(old_codes, docs, max_hamming=max_hamming)
 
 
 def test_minhash_lsh_finds_near_dups(spark):
@@ -105,7 +103,7 @@ def test_ngram_jaccard_verify(spark):
 def test_simhash_near_pairs(spark):
     got = {
         (r["left_id"], r["right_id"]): r["hamming"]
-        for r in dedup.simhash_near_pairs(_texts(spark), max_hamming=10).collect()
+        for r in _simhash_pairs(_texts(spark), max_hamming=10).collect()
     }
     assert got[("d1", "d5")] == 0
     assert ("d1", "d3") in got
@@ -180,16 +178,46 @@ def test_minhash_lsh_band_cap_bounds_degenerate_corpus(spark):
     assert {(r.left_id, r.right_id) for r in pairs} == {(100, 101)}
 
 
+def test_minhash_band_cap_boundary_full_and_delta(spark, monkeypatch):
+    """A band at exactly the cap pairs in full; one row more drops it. The
+    full pass caps at ``max_band_size``; the delta caps the old + new union
+    at ``MAX_BAND_SIZE`` and emits only pairs with a new endpoint."""
+    same = spark.createDataFrame(
+        [(i, "one identical text for every doc") for i in range(11)], "doc_id long, text string"
+    )
+    assert dedup.minhash_lsh_pairs(same, max_band_size=11).count() == 55
+    assert dedup.minhash_lsh_pairs(same, max_band_size=10).count() == 0
+    old_keys = dedup.minhash_band_keys(same.where("doc_id < 6"))
+    new = same.where("doc_id >= 6")
+    monkeypatch.setattr(dedup, "MAX_BAND_SIZE", 11)
+    pairs = dedup.delta_minhash_pairs(old_keys, new).collect()
+    assert len(pairs) == 40  # 5 x 6 new x old + 10 new x new
+    assert all(r.right_id >= 6 for r in pairs)
+    monkeypatch.setattr(dedup, "MAX_BAND_SIZE", 10)
+    assert dedup.delta_minhash_pairs(old_keys, new).count() == 0
+    # doc 6 both committed and new: 12 rows at a cap of 12, and doc 6 pairs
+    # with the others, not with itself
+    monkeypatch.setattr(dedup, "MAX_BAND_SIZE", 12)
+    both = dedup.minhash_band_keys(same.where("doc_id < 7"))
+    pairs = dedup.delta_minhash_pairs(both, new).collect()
+    assert len(pairs) == 40 and all(r.left_id < r.right_id for r in pairs)
+
+
 def test_simhash_near_pairs_radius_zero_and_dim_guard(spark):
     """radius 0 = identical codes only (single 64-bit block previously
-    overflowed a long literal); and embedding dim mismatch fails fast."""
+    overflowed a long literal), in a full pass and a delta; and embedding
+    dim mismatch fails fast."""
     import pytest as _pytest
 
     texts = spark.createDataFrame(
         [(1, "same words here"), (2, "same words here"), (3, "unrelated thing")],
         "doc_id long, text string",
     )
-    p0 = dedup.simhash_near_pairs(texts, max_hamming=0).collect()
+    p0 = _simhash_pairs(texts, max_hamming=0).collect()
+    assert {(r.left_id, r.right_id, r.hamming) for r in p0} == {(1, 2, 0)}
+    # doc 2 as the new batch over a committed table that already holds it:
+    # an id in both never pairs with itself
+    p0 = _simhash_pairs(texts.where("doc_id = 2"), 0, texts).collect()
     assert {(r.left_id, r.right_id, r.hamming) for r in p0} == {(1, 2, 0)}
 
     emb = spark.createDataFrame(
@@ -374,7 +402,7 @@ def test_delta_simhash_pairs_equals_full_pass(spark, corpus_dfs):
 
     full = {
         (r["left_id"], r["right_id"], r["hamming"])
-        for r in dedup.simhash_near_pairs(docs, max_hamming=6).collect()
+        for r in _simhash_pairs(docs, max_hamming=6).collect()
     }
     want_delta = {
         p for p in full if p[0] in new_ids or p[1] in new_ids
@@ -388,15 +416,19 @@ def test_delta_simhash_pairs_equals_full_pass(spark, corpus_dfs):
     assert want_delta  # radius 6 on near-dup corpus: non-trivial delta
 
 
-def test_simhash_near_pairs_is_one_join_with_no_cache_left(spark, corpus_dfs):
-    """simhash_near_pairs equals a brute-force Hamming scan over
-    simhash_codes at every radius, plans a single self-join over the
-    exploded block keys, and leaves no persisted RDD behind."""
+def test_simhash_near_pairs_match_brute_force_with_no_join_or_cache(spark, corpus_dfs):
+    """delta_simhash_pairs, over an empty committed table and over a hash
+    split of the corpus, equals a brute-force Hamming scan over
+    simhash_codes (restricted to pairs with a new endpoint) at every
+    radius, plans no join, and leaves no persisted RDD behind."""
     import re
 
     docs = corpus_dfs["documents"].select(
         "doc_id", F.concat_ws(" ", F.transform("spans", lambda s: s["text"])).alias("text")
     )
+    h = F.pmod(F.xxhash64("doc_id"), F.lit(4))
+    old_docs, new_docs = docs.where(h != 0), docs.where(h == 0)
+    new_ids = {r["doc_id"] for r in new_docs.select("doc_id").collect()}
     codes = [(r["id"], r["simhash"] & (2**64 - 1)) for r in dedup.simhash_codes(docs).collect()]
     cached = _settled_persistent_rdds(spark)
     sizes = {}
@@ -407,11 +439,15 @@ def test_simhash_near_pairs_is_one_join_with_no_cache_left(spark, corpus_dfs):
                 ham = bin(ca ^ cb).count("1")
                 if ham <= radius:
                     want.add((min(a, b), max(a, b), ham))
-        pairs = dedup.simhash_near_pairs(docs, max_hamming=radius)
-        plan = pairs._jdf.queryExecution().optimizedPlan().toString()
-        assert len(re.findall(r"(?m)^[\s:+\-|]*Join\b", plan)) == 1, plan
-        got = {(r["left_id"], r["right_id"], r["hamming"]) for r in pairs.collect()}
-        assert got == want, radius
+        want_delta = {p for p in want if p[0] in new_ids or p[1] in new_ids}
+        for pairs, expected in (
+            (_simhash_pairs(docs, radius), want),
+            (_simhash_pairs(new_docs, radius, old_docs), want_delta),
+        ):
+            plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+            assert not re.findall(r"(?m)^[\s:+\-|]*Join\b", plan), plan
+            got = {(r["left_id"], r["right_id"], r["hamming"]) for r in pairs.collect()}
+            assert got == expected, radius
         sizes[radius] = len(want)
     assert 0 < sizes[3] < sizes[10]  # the radii select different pair sets
     assert _persistent_rdds(spark) == cached
@@ -755,18 +791,25 @@ def test_ngram_contamination_flags_and_clean_anti_join(spark):
     assert got2[1] == (1, 899)
 
 
-def _udf_evals(node, out: Counter) -> Counter:
-    """Per Python UDF name, the eval nodes of a physical plan that run it.
-    A reused exchange is a leaf: what runs below it is counted once."""
-    if node.getClass().getSimpleName() in ("ArrowEvalPythonExec", "BatchEvalPythonExec"):
-        udfs = node.udfs()
-        for i in range(udfs.size()):
-            out[udfs.apply(i).name()] += 1
+def _plan_nodes(node):
+    """The nodes of a physical plan, query stages included. A reused
+    exchange is a leaf: what runs below it is yielded once."""
+    yield node
     if node.getClass().getSimpleName().endswith("QueryStageExec"):
-        _udf_evals(node.plan(), out)
+        yield from _plan_nodes(node.plan())
     children = node.children()
     for i in range(children.size()):
-        _udf_evals(children.apply(i), out)
+        yield from _plan_nodes(children.apply(i))
+
+
+def _udf_evals(plan) -> Counter:
+    """Per Python UDF name, the eval nodes of a physical plan that run it."""
+    out = Counter()
+    for node in _plan_nodes(plan):
+        if node.getClass().getSimpleName() in ("ArrowEvalPythonExec", "BatchEvalPythonExec"):
+            udfs = node.udfs()
+            for i in range(udfs.size()):
+                out[udfs.apply(i).name()] += 1
     return out
 
 
@@ -782,10 +825,14 @@ _ONE_EVAL_PER_BRANCH = {
     "x13_delta_ngram_jaccard": {"_udf": 2, "_ngram_jaccard_udf": 1},
     "x14_minhash_jaccard_estimate": {"_udf": 2},
     "t8_ngram_jaccard_dedup": {"_udf": 1, "_ngram_jaccard_udf": 1},
-    "simhash_near_pairs": {"simhash_udf": 1},
     "x9_ann_ivf_topk": {"pick": 2, "seq_norm_udf": 2, "seq_dot_udf": 1},
     "x15_ivf_insert_topk": {"pick": 3, "seq_norm_udf": 3, "seq_dot_udf": 1},
 }
+
+# Queries that pair by dedup._key_pairs alone: their final plans hold no
+# join and no reused exchange, so one UDF evaluation per branch does not
+# rest on AQE reusing an exchange.
+_NO_JOIN = {"x2_minhash_lsh_pairs", "x11_delta_minhash_pairs", "x12_delta_simhash_pairs"}
 
 
 @pytest.mark.parametrize("name", sorted(_ONE_EVAL_PER_BRANCH))
@@ -794,14 +841,10 @@ def test_dedup_query_leaves_no_cache_and_runs_each_udf_once(spark, name):
     final plan holds no isnotnull filter over a UDF output (an inferred
     join-key filter pushed below spread()'s repartition runs the UDF a
     second time), and every UDF runs once per input branch: the joins
-    share one exchange per input. Checked under the session's broadcast
-    threshold and with broadcast joins off, so neither join strategy can
-    run a UDF once per join side."""
-
-    def query():
-        if name == "simhash_near_pairs":
-            return dedup.simhash_near_pairs(entry_mod._t(spark, entry_mod.SF_DEFAULT, "documents"))
-        return entry_mod.queries()[name](spark, entry_mod.SF_DEFAULT)
+    share one exchange per input, and the MinHash and SimHash pair queries
+    hold no join at all. Checked under the session's broadcast threshold
+    and with broadcast joins off, so neither join strategy can run a UDF
+    once per join side."""
 
     def final_plan(df):
         plan = df._jdf.queryExecution().executedPlan()
@@ -812,11 +855,14 @@ def test_dedup_query_leaves_no_cache_and_runs_each_udf_once(spark, name):
     for threshold in (session_threshold, "-1"):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
         try:
-            df = query()
+            df = entry_mod.queries()[name](spark, entry_mod.SF_DEFAULT)
             df.collect()
             plan = final_plan(df)
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", session_threshold)
         assert _persistent_rdds(spark) == cached
         assert "isnotnull(pythonUDF" not in plan.toString(), threshold
-        assert _udf_evals(plan, Counter()) == _ONE_EVAL_PER_BRANCH[name], threshold
+        assert _udf_evals(plan) == _ONE_EVAL_PER_BRANCH[name], threshold
+        if name in _NO_JOIN:
+            nodes = [n.getClass().getSimpleName() for n in _plan_nodes(plan)]
+            assert not [n for n in nodes if "Join" in n or n == "ReusedExchangeExec"], nodes

@@ -40,8 +40,6 @@ ALLOWED = {
     "schemas.LANDING_PAIRS": _FIXTURE_SCHEMA,
     "functions.hashing.minhash_bands": _SCALAR_ORACLE,
     "functions.kernels.sim_triple_py": _SCALAR_ORACLE,
-    "operators.dedup.exact_dup_groups": _INLINE_TWIN,
-    "operators.dedup.simhash_near_pairs": _INLINE_TWIN,
     "operators.similarity_search.brute_force_topk": _INLINE_TWIN,
     "operators.similarity_search.cosine": _INLINE_TWIN,
     "operators.stats.rollup_stats": _INLINE_TWIN,

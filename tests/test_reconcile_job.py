@@ -167,8 +167,9 @@ def test_job_tables_equal_reconcile(spark, tmp_path):
 
 def test_x2_plan_matches_golden(spark):
     """x2 is ``dedup.minhash_lsh_pairs``, the path the ``near_dup`` benchmark
-    times: its plan stays the window-capped band self-join (both sides one
-    band exchange, which AQE reuses at runtime), pinned to the golden file."""
+    times: its plan stays one band exchange, the cap window once, and one
+    grouping that expands each band's pairs (no join), pinned to the golden
+    file."""
     assert _query_plan(spark, "x2_minhash_lsh_pairs") == _read_golden("x2_plan.txt")
 
 

@@ -25,11 +25,12 @@ SHOW = [
     "j3_top1_per_group",       # expect: single shuffle + Window
     "a10_grouping_sets_rollup",  # expect: Expand + partial/final HashAggregate
     "x1_reconcile_flagship",   # expect: ArrowEvalPython only where UDFs live
-    "x2_minhash_lsh_pairs",    # expect (r6): one Exchange(band) + count
-                               # Window as the cap + SortMergeJoin; no
-                               # persists, no broadcast of the key table —
-                               # at runtime AQE reuses the band exchange so
-                               # the banding ArrowEvalPython runs once
+    "x2_minhash_lsh_pairs",    # expect: one Exchange(band), the count
+                               # Window as the cap, an ObjectHashAggregate
+                               # collecting each band's ids on the same
+                               # partitioning and two Generates expanding
+                               # the pairs; no join, one banding
+                               # ArrowEvalPython, no persists
     "x7_embedding_near_dup",   # expect: bucket-bit ArrowEvalPython, one
                                # Exchange(bucket) and one per-bucket kernel
                                # (FlatMapGroupsInPandas); no join
@@ -41,19 +42,18 @@ SHOW = [
                                # one hash join on cell id, window top-k
     "x10_delta_candidate_pairs",  # expect: two key joins (new x all, old x
                                # new) + one dedup shuffle; no old x old join
-    "x11_delta_minhash_pairs", # expect: x2's band join over the _new-tagged
-                               # old + new union, left side filtered to new
-                               # rows above the cap Window; no InMemory
-                               # scan — at runtime AQE reuses the one band
-                               # exchange (the query bands the old side
-                               # inline; production reads a committed table)
-    "x12_delta_simhash_pairs",  # expect: two hinted SortMergeJoins on bk,
-                               # new x new + new x old, no old x old, no
-                               # InMemory scan and no isnotnull filter over
-                               # the simhash UDF; this initial plan shows
-                               # the new side's UDF under each of its three
-                               # exchanges, and at runtime AQE reuses one
-                               # for all three
+    "x11_delta_minhash_pairs", # expect: x2's shape over the _new-tagged
+                               # old + new union (one banding
+                               # ArrowEvalPython per side — the query bands
+                               # the old side inline; production reads a
+                               # committed table); no join, no InMemory scan
+    "x12_delta_simhash_pairs",  # expect: one Exchange(bk) over the
+                               # _new-tagged old + new block rows, an
+                               # ObjectHashAggregate collecting new and old
+                               # members, two Generates expanding new x new
+                               # + new x old, then the Hamming Filter; no
+                               # join, no InMemory scan, one simhash
+                               # ArrowEvalPython per side
     "x13_delta_ngram_jaccard",  # expect: the x11 delta-candidate shape +
                                # two text joins + ONE verify ArrowEvalPython
                                # over candidate rows only
